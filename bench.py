@@ -17,7 +17,7 @@ numbers trustworthy under this machine's 2-3× external-load variance):
   Marginal rate net of ~1.5 s fixed local-Spark overhead ≈ 131 k rows/s,
   within the reference's ~151 k rows/s single-node baseline.
 - dedup/sketch family @ sf0.1: the per-(session, sf-dir) staging memo
-  (dedup._memo) means the first consumer pays the shingle/digest
+  (stage_memo) means the first consumer pays the shingle/digest
   materialization and the rest reuse it; per-query bench lines for this
   family are therefore order-dependent by design.
 """
@@ -240,7 +240,6 @@ def _memo_warmers():
     from etl_mini_dw_spark.functions import cluster, dedup, pq, text
     from etl_mini_dw_spark.operators import fact
     from etl_mini_dw_spark.plans.graph import cooccur_edges_memo
-    from etl_mini_dw_spark.registry import _fact_initial_memo
 
     return [
         ("dedup_shingles", lambda s, d: [dedup._shingle_arrays(s, d)]),
@@ -254,7 +253,7 @@ def _memo_warmers():
             "pq_codebooks",
             lambda s, d: [pq._codebook(s, d, m) for m in range(pq.PQ_M)],
         ),
-        ("fact_initial_resolved", lambda s, d: [_fact_initial_memo(s, d)]),
+        ("fact_initial_resolved", lambda s, d: [fact.fact_initial_memo(s, d)]),
         # r10: shared two-phase post-state (VERDICT r9 item 4) — the
         # Merkle diff digest consumes it; fact_sales_two_phase's own
         # line keeps building the merge fresh (its state0 sub-build is

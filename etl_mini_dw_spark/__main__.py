@@ -4,7 +4,7 @@ The reference ships as a runnable T-SQL script (`code/SQL_1…sql` top-to-
 bottom); this is the equivalent product surface for the Spark engine:
 
     python -m etl_mini_dw_spark --sf-dir /root/testdata/sf0.001 \
-        --store /tmp/dw [--as-of "1996-06-01 00:00:00"] [--backend parquet]
+        --store /tmp/dw [--as-of "1996-06-01 00:00:00"]
 
 Runs Stage 1–5 (bootstrap, dims, fact, validations) against the given
 source directory into the given store directory, prints one JSON line
@@ -25,14 +25,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--store", required=True, help="warehouse store directory")
     ap.add_argument("--as-of", default=None, help="load watermark cutoff (incremental split)")
     ap.add_argument("--now-ts", default=None, help="fixed 'now' for SCD2 validity stamps")
-    ap.add_argument("--backend", default="parquet", choices=["parquet", "delta"])
-    ap.add_argument(
-        "--sk-strategy",
-        default="ordered",
-        choices=["ordered", "bucketed"],
-        help="dimension SK assignment: ordered row_number (default) or the"
-        " value-identical bucketed cluster path (operators/scd2.py)",
-    )
     ap.add_argument("--skip-validate", action="store_true")
     args = ap.parse_args(argv)
 
@@ -40,13 +32,7 @@ def main(argv: list[str] | None = None) -> int:
     from etl_mini_dw_spark.session import get_spark
 
     spark = get_spark("etl_mini_dw_spark-cli")
-    wh = Warehouse(
-        spark,
-        args.store,
-        args.sf_dir,
-        backend=args.backend,
-        sk_strategy=args.sk_strategy,
-    )
+    wh = Warehouse(spark, args.store, args.sf_dir)
     results = wh.run_all(as_of=args.as_of, now_ts=args.now_ts)
     ok = True
     for name, res in results.items():

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from etl_mini_dw_spark import fixtures_spec as spec
 from etl_mini_dw_spark.etl import runlog, tracker
-from etl_mini_dw_spark.etl.store import make_store
+from etl_mini_dw_spark.etl.store import ParquetStore
 from etl_mini_dw_spark.functions.dimdate import build_dim_date
 from etl_mini_dw_spark.operators import fact, scd2
 from etl_mini_dw_spark.sources import staging
@@ -58,23 +58,10 @@ EXPECTED_TABLES = [
 
 
 class Warehouse:
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_dir: str,
-        sf_dir: str,
-        backend: str = "parquet",
-        sk_strategy: str = "ordered",
-    ) -> None:
+    def __init__(self, spark: SparkSession, base_dir: str, sf_dir: str) -> None:
         self.spark = spark
-        self.store = make_store(base_dir, backend)
+        self.store = ParquetStore(base_dir)
         self.sf_dir = sf_dir
-        # dimension SK assignment: 'ordered' (one row_number window over
-        # the dim delta — the oracle-checkable default) or 'bucketed'
-        # (value-identical monotone-bucket prefix ranks, no single-
-        # partition row window — the cluster deployment choice; see
-        # operators/scd2.py::assign_surrogate_keys)
-        self.sk_strategy = sk_strategy
 
     def missing_tables(self) -> list[str]:
         """Stage 5.1 structure check against the actual store. Expect []."""
@@ -88,23 +75,63 @@ class Warehouse:
                 build_dim_date(self.spark, spec.DATE_START, spec.DATE_END), "dim_date"
             )
 
+    # --- one load run (X6–X8), shared by the dims and the fact -------------
+    def _run_load(self, table: str, updated_tag: str, wm_col: str, plan) -> dict:
+        """Load ``table``: ``plan(wm)`` gets the tracker watermark and returns
+        ``(post, write, delta)`` — the ``change_tag``-tagged post-state
+        (``None`` when there is nothing to load), the call that swaps it
+        in, and the extracted delta.
+
+        The post-state is materialized once for the run-log metrics (X7)
+        and the write; an empty one writes nothing at all. The watermark
+        moves to the delta's max ``wm_col`` only if rows were inserted or
+        ``updated_tag``-ged (X8), and the tracker advances after the swap.
+        """
+        start = _utcnow()
+        run_name = f"etl_load_{table}"
+        try:
+            wm = tracker.read_watermark(self.spark, self.store, table)
+            post, write, delta = plan(wm)
+            metrics = {}
+            if post is not None:
+                post = post.localCheckpoint()  # materialize once: metrics + write + wm
+                metrics = _tag_counts(post)
+            new_wm = (
+                delta.agg(F.max(wm_col)).first()[0]
+                if metrics.get("inserted") or metrics.get(updated_tag)
+                else None
+            )
+            if metrics:
+                write(post.drop("change_tag"))
+            tracker.advance(self.spark, self.store, table, new_wm, _utcnow())
+            runlog.append(
+                self.spark,
+                self.store,
+                run_name,
+                start,
+                _utcnow(),
+                rows_inserted=metrics.get("inserted", 0),
+                rows_updated=metrics.get(updated_tag, 0),
+                rows_deleted=metrics.get("deleted", 0),  # only dims tag deletes
+            )
+            return metrics
+        except Exception as e:  # X6 FAIL row + rethrow
+            runlog.append(
+                self.spark, self.store, run_name, start, _utcnow(), status="FAIL", error=str(e)[:500]
+            )
+            raise
+
     # --- dimension loads (Stages 2–3, X2–X4) ------------------------------
     def load_dim(self, dim_key: str, as_of: str | None = None, now_ts: str | None = None) -> dict:
         dim = spec.DIMS[dim_key]
-        start = _utcnow()
-        run_name = f"etl_load_{dim.name}"
-        try:
-            wm = tracker.read_watermark(self.spark, self.store, dim.name)
+
+        def plan(wm: str):
             staged = staging.delta_extract(self.spark, self.sf_dir, dim, wm, as_of=as_of)
             if not self.store.exists(dim.name):
                 # initial load, A5 empty-table guard (`code/SQL_1…sql:603`)
-                post = scd2.dim_initial(
-                    self.spark,
-                    self.sf_dir,
-                    dim,
-                    as_of=as_of,
-                    sk_strategy=self.sk_strategy,
-                ).withColumn("change_tag", F.lit("inserted"))
+                post = scd2.dim_initial(self.spark, self.sf_dir, dim, as_of=as_of).withColumn(
+                    "change_tag", F.lit("inserted")
+                )
             else:
                 current = self.store.read(self.spark, dim.name)
                 snapshot = staging.current_snapshot(self.spark, self.sf_dir, dim, as_of=as_of)
@@ -114,44 +141,18 @@ class Warehouse:
                     snapshot,
                     dim,
                     now_ts or _utcnow().strftime("%Y-%m-%d %H:%M:%S"),
-                    sk_strategy=self.sk_strategy,
                 )
-            post = post.localCheckpoint()  # materialize once: metrics + write + wm
-            metrics = {r["change_tag"]: r["cnt"] for r in post.groupBy("change_tag").agg(F.count("*").alias("cnt")).collect()}
-            new_wm = (
-                staged.agg(F.max("valid_from")).first()[0]
-                if metrics.get("inserted") or metrics.get("closed")
-                else None
-            )
-            self.store.write(post.drop("change_tag"), dim.name)
-            tracker.advance(self.spark, self.store, dim.name, new_wm, _utcnow())
-            runlog.append(
-                self.spark,
-                self.store,
-                run_name,
-                start,
-                _utcnow(),
-                rows_inserted=metrics.get("inserted", 0),
-                rows_updated=metrics.get("closed", 0),
-                rows_deleted=metrics.get("deleted", 0),
-            )
-            return metrics
-        except Exception as e:  # X6 FAIL row + rethrow
-            runlog.append(
-                self.spark, self.store, run_name, start, _utcnow(), status="FAIL", error=str(e)[:500]
-            )
-            raise
+            return post, lambda df: self.store.write(df, dim.name), staged
+
+        return self._run_load(dim.name, "closed", "valid_from", plan)
 
     # --- fact load (X5) ----------------------------------------------------
     def load_fact(self, as_of: str | None = None) -> dict:
-        start = _utcnow()
-        run_name = "etl_load_fact_sales"
-        try:
+        def plan(wm: str):
             dims = {
                 fk: self.store.read(self.spark, ds.name) for fk, ds, _ in fact.DIM_LINKS
             }
             dd = self.store.read(self.spark, "dim_date")
-            wm = tracker.read_watermark(self.spark, self.store, "fact_sales")
             delta = fact.src_sales(self.spark, self.sf_dir, wm, as_of=as_of)
             resolved = fact._with_datekey(fact.resolve_dimensions(delta, dims), dd).select(
                 *fact.FACT_COLS
@@ -159,59 +160,41 @@ class Warehouse:
             year = (F.col("sales_order_datekey") / 10000).cast("int")
             if not self.store.exists("fact_sales"):
                 # sales_id is key-derived in src_sales — no sequence needed
-                post = resolved.withColumn("change_tag", F.lit("inserted")).localCheckpoint()
-                metrics = _tag_counts(post)
-                self.store.write(
-                    post.drop("change_tag").withColumn("sales_year", year),
-                    "fact_sales",
-                    partition_by=["sales_year"],
-                )
-            else:
-                # MERGE-shaped incremental: the delta determines the touched
-                # year-partitions (update never moves a row's datekey, so a
-                # matched NK lives in its delta row's year); prior state is
-                # read with a PARTITION-PRUNED scan and only those partition
-                # dirs are swapped — cost ∝ touched partitions, never table
-                # size. An empty delta writes nothing at all.
-                touched = sorted(
-                    r[0] for r in resolved.select(year.alias("y")).distinct().collect()
-                )
-                if not touched:
-                    metrics = {}
-                else:
-                    state0 = self.store.read(self.spark, "fact_sales")
-                    state0_touched = state0.filter(
-                        F.col("sales_year").isin(touched)
-                    ).drop("sales_year")
-                    post = fact.fact_increment(state0_touched, resolved, dims).localCheckpoint()
-                    metrics = _tag_counts(post)
-                    self.store.swap_partitions(
-                        post.drop("change_tag").withColumn("sales_year", year),
+                post = resolved.withColumn("change_tag", F.lit("inserted"))
+                return (
+                    post,
+                    lambda df: self.store.write(
+                        df.withColumn("sales_year", year),
                         "fact_sales",
-                        "sales_year",
-                        touched,
-                    )
-            new_wm = (
-                delta.agg(F.max("sales_lasteditedwhen")).first()[0]
-                if metrics.get("inserted") or metrics.get("updated")
-                else None
+                        partition_by=["sales_year"],
+                    ),
+                    delta,
+                )
+            # MERGE-shaped incremental: the delta determines the touched
+            # year-partitions (update never moves a row's datekey, so a
+            # matched NK lives in its delta row's year); prior state is
+            # read with a PARTITION-PRUNED scan and only those partition
+            # dirs are swapped — cost ∝ touched partitions, never table
+            # size.
+            touched = sorted(
+                r[0] for r in resolved.select(year.alias("y")).distinct().collect()
             )
-            tracker.advance(self.spark, self.store, "fact_sales", new_wm, _utcnow())
-            runlog.append(
-                self.spark,
-                self.store,
-                run_name,
-                start,
-                _utcnow(),
-                rows_inserted=metrics.get("inserted", 0),
-                rows_updated=metrics.get("updated", 0),
+            if not touched:
+                return None, None, delta
+            state0 = self.store.read(self.spark, "fact_sales")
+            state0_touched = state0.filter(F.col("sales_year").isin(touched)).drop(
+                "sales_year"
             )
-            return metrics
-        except Exception as e:
-            runlog.append(
-                self.spark, self.store, run_name, start, _utcnow(), status="FAIL", error=str(e)[:500]
+            post = fact.fact_increment(state0_touched, resolved, dims)
+            return (
+                post,
+                lambda df: self.store.swap_partitions(
+                    df.withColumn("sales_year", year), "fact_sales", "sales_year", touched
+                ),
+                delta,
             )
-            raise
+
+        return self._run_load("fact_sales", "updated", "sales_lasteditedwhen", plan)
 
     # --- full run (X9 DAG: dims first, fact always last) -------------------
     def run_all(self, as_of: str | None = None, now_ts: str | None = None) -> dict[str, dict]:
@@ -238,10 +221,9 @@ def publish_guarded(
 
     The pattern every serious warehouse converges on (WAP / blue-green
     tables): validations run against the not-yet-visible candidate, so
-    readers never observe a state that failed its contract. Locally the
-    candidate is a checkpointed frame + the store's swap protocol; with
-    the Delta backend the same call maps to write-to-branch + atomic
-    commit. Violations are counted in one pass per check (the frames
+    readers never observe a state that failed its contract. The
+    candidate is a checkpointed frame + the store's swap protocol.
+    Violations are counted in one pass per check (the frames
     are usually conditional aggregates, cheap by construction).
     """
     staged = df.localCheckpoint()

@@ -1,8 +1,8 @@
 """Parquet table store with atomic swap (SURVEY §7 hard-parts 1 & 7).
 
 The reference mutates warehouse tables in place under BEGIN TRAN/COMMIT
-(`code/SQL_1…sql:924–990`). Spark tables are immutable and Delta Lake is
-not on this classpath, so the engine's write protocol is:
+(`code/SQL_1…sql:924–990`). Spark tables are immutable, so the engine's
+one write protocol is:
 
     compute full post-state lazily → write to a temp dir →
     rename current generation aside (``._old_*``) → rename temp into
@@ -85,8 +85,7 @@ class ParquetStore:
 
         ``keep_generations=N`` retains the last N superseded generations as
         dot-prefixed snapshot dirs (invisible to Spark's file listing) —
-        the parquet backend's time travel, matching Delta's ``versionAsOf``
-        capability behind the same seam (`read_generation`). Snapshot dirs
+        the store's time travel (`read_generation`). Snapshot dirs
         are named by a monotonic counter, never a clock, so retention is
         deterministic and replay-safe.
         """
@@ -243,10 +242,8 @@ class ParquetStore:
         read-current → anti-join out the touched keys → union the new
         image → atomic swap. Correct and all-or-nothing, but cost is
         ∝ table size, not ∝ delta size — the structural reason a 100 TB
-        warehouse wants a transactional format: ``DeltaStore`` below
-        expresses the SAME call as a log-commit MERGE whose rewrite cost
-        is ∝ touched files. Callers write to the seam; the backend choice
-        is deployment config (`make_store`).
+        warehouse wants a transactional format, whose log-commit MERGE
+        rewrites only the touched files.
         """
         if not self.exists(name):
             self.write(df, name)
@@ -263,141 +260,15 @@ class ParquetStore:
         """Keyed DELETE (the right-to-be-forgotten seam): remove every row
         whose key appears in ``keys_df``; everything else survives.
 
-        Parquet path: read-current → anti-join → atomic swap (cost ∝
-        table, same structural limit as ``merge_upsert`` and the same
-        reason production wants the Delta backend, where this call is a
-        commit-log ``DELETE WHERE`` rewriting only matched files). The
-        anti-join broadcasts when the key set is small — the common
-        erasure-request shape.
+        Read-current → anti-join → atomic swap (cost ∝ table, the same
+        structural limit as ``merge_upsert``). The anti-join broadcasts
+        when the key set is small — the common erasure-request shape.
         """
         if not self.exists(name):
             return
         current = self.read(spark, name)
         post = current.join(keys_df.select(*keys).distinct(), keys, "left_anti")
         self.write(post.localCheckpoint(), name)
-
-
-def delta_available() -> bool:
-    """True iff the delta-spark bindings are importable on this classpath."""
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-class DeltaStore(ParquetStore):
-    """Same store contract on a Delta Lake table layout (SURVEY §7 #9).
-
-    Inherits the directory layout/paths; replaces the rename-swap
-    protocol with Delta's transaction log: ``write`` is a single
-    ACID overwrite commit, ``merge_upsert`` is a native ``MERGE INTO``
-    (rewrites only the files holding matched keys — cost ∝ delta, the
-    100 TB answer), ``swap_partitions`` is ``replaceWhere`` (partition
-    overwrite as one commit, no rename windows to recover). Concurrent
-    writers serialize through optimistic commit-log conflict checks —
-    the property the parquet swap cannot give.
-
-    Requires delta-spark on the classpath (not available in this
-    container — import-gated; tests skip, the seam and call shapes are
-    exercised against ParquetStore which shares the contract).
-    """
-
-    def __init__(self, base_dir: str) -> None:
-        if not delta_available():
-            raise ImportError("delta-spark is not on this classpath; use ParquetStore")
-        super().__init__(base_dir)
-
-    def _recover(self, name: str) -> None:  # Delta's log makes torn swaps impossible
-        return None
-
-    def exists(self, name: str) -> bool:
-        return os.path.isdir(os.path.join(self.path(name), "_delta_log"))
-
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.format("delta").load(self.path(name))
-
-    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
-        writer = df.write.format("delta").mode("overwrite").option(
-            "overwriteSchema", "true"
-        )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(self.path(name))
-
-    def swap_partitions(
-        self, df: DataFrame, name: str, partition_col: str, values: list
-    ) -> None:
-        assert values, "swap_partitions requires a non-empty touched set"
-        in_list = ", ".join(repr(v) for v in values)
-        (
-            df.write.format("delta")
-            .mode("overwrite")
-            .option("replaceWhere", f"{partition_col} IN ({in_list})")
-            .save(self.path(name))
-        )
-
-    def compact(
-        self, spark: SparkSession, name: str, target_file_bytes: int = 128 * 2**20
-    ) -> tuple[int, int]:
-        """Delta bin-packing compaction: one OPTIMIZE commit, readers
-        never see a partial rewrite and concurrent appends conflict-check
-        against the commit log instead of racing a directory rename."""
-        from delta.tables import DeltaTable
-        from pyspark.sql import functions as F
-
-        def snapshot_files() -> int:  # on-disk files include pre-VACUUM history
-            return self.read(spark, name).select(F.input_file_name()).distinct().count()
-
-        before = snapshot_files()
-        spark.conf.set("spark.databricks.delta.optimize.maxFileSize", str(target_file_bytes))
-        DeltaTable.forPath(spark, self.path(name)).optimize().executeCompaction()
-        return (before, snapshot_files())
-
-    def merge_upsert(
-        self, spark: SparkSession, df: DataFrame, name: str, keys: list[str]
-    ) -> None:
-        if not self.exists(name):
-            self.write(df, name)
-            return
-        from delta.tables import DeltaTable
-
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-        (
-            DeltaTable.forPath(spark, self.path(name))
-            .alias("t")
-            .merge(df.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def delete_keys(
-        self, spark: SparkSession, name: str, keys_df: DataFrame, keys: list[str]
-    ) -> None:
-        """Commit-log DELETE: rewrites only the files holding matched
-        keys — erasure cost ∝ matches, the 100 TB answer."""
-        if not self.exists(name):
-            return
-        from delta.tables import DeltaTable
-
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-        (
-            DeltaTable.forPath(spark, self.path(name))
-            .alias("t")
-            .merge(keys_df.select(*keys).distinct().alias("s"), cond)
-            .whenMatchedDelete()
-            .execute()
-        )
-
-
-def make_store(base_dir: str, backend: str = "auto") -> ParquetStore:
-    """Store factory: ``parquet`` | ``delta`` | ``auto`` (delta if importable)."""
-    if backend == "delta" or (backend == "auto" and delta_available()):
-        return DeltaStore(base_dir)
-    if backend not in ("auto", "parquet"):
-        raise ValueError(f"unknown store backend: {backend!r}")
-    return ParquetStore(base_dir)
 
 
 class IdempotentForeachBatch:

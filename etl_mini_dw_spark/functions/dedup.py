@@ -44,14 +44,12 @@ def _norm_text() -> F.Column:
 _NORM_SQL = r"lower(regexp_replace(text, '\s+', ' ', 'g'))"
 
 
-# Staged-intermediate memo: every dedup/sketch query consumes the same
+# Staged-intermediate memo (``stage_memo``): every dedup/sketch query consumes the same
 # shingle/minhash frames, and a lazy localCheckpoint is only shared if
 # consumers hold the SAME DataFrame object. Keyed by (session id, sf_dir)
 # so repeated queries in one session (bench, driver, a real pipeline run)
 # materialize the staging work once — the in-session analog of writing a
 # staged table, which is exactly what this would be at 100 TB.
-# per-(session, sf-dir) staged-frame memo — shared engine-wide helper
-_memo = stage_memo
 
 
 def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,7 +85,7 @@ def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return arrs.localCheckpoint(eager=False)
 
-    return _memo(spark, sf_dir, "sh_arr", build)
+    return stage_memo(spark, sf_dir, "sh_arr", build)
 
 
 def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,7 +162,7 @@ def _shingle_hash_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return hs.localCheckpoint(eager=False)
 
-    return _memo(spark, sf_dir, "hash28", build)
+    return stage_memo(spark, sf_dir, "hash28", build)
 
 
 def _minhash_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,7 +183,7 @@ def _minhash_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         mh = hs.select("doc_id", F.expr(f"array({folds})").alias("mh_arr"))
         return mh.localCheckpoint(eager=False)
 
-    return _memo(spark, sf_dir, "minhash", build)
+    return stage_memo(spark, sf_dir, "minhash", build)
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,7 +448,7 @@ def _digest16_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no subexpression elimination) — 16 md5s per shingle instead of 1.
     Named so bench.py can warm it as its own `memo:` line.
     """
-    return _memo(
+    return stage_memo(
         spark,
         sf_dir,
         "digests16",
@@ -952,7 +950,7 @@ def incremental_newbatch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band, band_sig) — cost ∝ batch size × band collision rate; verify =
     exact shingle Jaccard on candidates only (same verify as the batch
     family). In production the corpus side IS the persisted index table,
-    here stood in by the per-session staged frames (`_memo`) — identical
+    here stood in by the per-session staged frames (`stage_memo`) — identical
     plan shape either way.
     """
     bands = _band_sigs(_minhash_arrays(spark, sf_dir))

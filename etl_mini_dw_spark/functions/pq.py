@@ -84,7 +84,7 @@ def _codebook(spark: SparkSession, sf_dir: str, m: int) -> DataFrame:
     Both consumers (vector encoding and the per-query ADC tables) and
     both registered queries share the same staged centroids — training
     is the expensive stage and must not re-run per consumer (the same
-    staged-frame rule as `dedup._memo`; first cut of this module trained
+    staged-frame rule as `stage_memo`; first cut of this module trained
     every codebook twice and benched 2x slower). Since r09 the training
     itself is fused across subspaces (`_codebooks_all`); this returns
     the m-slice of the shared staged frame.

@@ -18,12 +18,7 @@ Spark-first notes (100 TB):
   deterministic single-partition window, which is the correctness-simple
   choice for dimension tables (even at 100 TB fact scale, dims are
   ~millions of rows and SK assignment is per-batch-delta, not per-fact).
-  ``assign_surrogate_keys(strategy='bucketed')`` is the cluster-scale
-  alternative behind the same seam: value-identical dense keys via a
-  monotone nk-bucket prefix sum + bounded per-bucket row windows
-  (tests/test_sk_strategies.py pins exact equality and the C1–C3
-  invariants on both paths). The fact table's SK strategy is different —
-  see operators/fact.py.
+  The fact table's SK strategy is different — see operators/fact.py.
 - Change detection (F5) uses null-safe equality (``<=>``) instead of the
   reference's ``ISNULL(x,'')`` pattern — it normalizes the reference's
   int-vs-'' implicit-cast quirk away (`code/SQL_1…sql:940`, SURVEY §2.3 F5).
@@ -67,64 +62,22 @@ def unknown_member_row(spark: SparkSession, dim: DimSpec) -> DataFrame:
     return spark.range(1).select(*cols)
 
 
-SK_NK_BUCKET = 4096  # natural keys per SK-assignment bucket (bucketed path)
-
-
 def assign_surrogate_keys(
-    df: DataFrame,
-    dim: DimSpec,
-    offset: Column | None = None,
-    strategy: str = "ordered",
+    df: DataFrame, dim: DimSpec, offset: Column | None = None
 ) -> DataFrame:
     """C1 IDENTITY replacement: dense deterministic SKs in global
-    (nk, active_from) order (+ batch offset).
-
-    ``strategy='ordered'`` (default): one row_number window — the
-    correctness-simple spelling; it only ever sees the dim DELTA, never
-    fact-sized input. ``strategy='bucketed'`` (the 100 TB alternative,
-    r6 VERDICT task #5): VALUE-IDENTICAL keys with no single-partition
-    row window. The bucket key ``floor(nk / SK_NK_BUCKET)`` is monotone
-    in nk, so rows-before-bucket (a prefix sum over the tiny bucket
-    histogram) + row_number within the bucket equals the global
-    row_number exactly; row-level windows are bounded by one bucket's
-    rows and the only global window scans the histogram. Both paths
-    therefore satisfy IDENTITY semantics the same way (uniqueness, and
-    batch stability via the max-SK offset seam)."""
-    if strategy == "ordered":
-        w = Window.orderBy(dim.nk, "active_from")
-        sk = F.row_number().over(w).cast("int")
-        if offset is not None:
-            sk = (sk + offset).cast("int")
-        return df.select(sk.alias(dim.sk), "*")
-    if strategy != "bucketed":
-        raise ValueError(f"unknown SK strategy: {strategy!r}")
-    # exact floor division (nk may be -1 for the unknown member; pmod
-    # keeps the bucket key monotone across the sign boundary)
-    b = (
-        (F.col(dim.nk) - F.pmod(F.col(dim.nk), F.lit(SK_NK_BUCKET)))
-        / F.lit(SK_NK_BUCKET)
-    ).cast("bigint")
-    tagged = df.withColumn("_skb", b)
-    hist = tagged.groupBy("_skb").agg(F.count(F.lit(1)).alias("_c"))
-    w_pre = Window.orderBy("_skb").rowsBetween(Window.unboundedPreceding, -1)
-    pre = hist.select(
-        "_skb", F.coalesce(F.sum("_c").over(w_pre), F.lit(0)).alias("_pre")
-    )
-    w_in = Window.partitionBy("_skb").orderBy(dim.nk, "active_from")
-    sk = (F.row_number().over(w_in) + F.col("_pre")).cast("int")
+    (nk, active_from) order (+ batch offset), from one row_number window.
+    It only ever sees the dim DELTA, never fact-sized input; uniqueness
+    and batch stability come from the max-SK offset seam."""
+    w = Window.orderBy(dim.nk, "active_from")
+    sk = F.row_number().over(w).cast("int")
     if offset is not None:
         sk = (sk + offset).cast("int")
-    return tagged.join(F.broadcast(pre), "_skb").select(
-        sk.alias(dim.sk), *df.columns
-    )
+    return df.select(sk.alias(dim.sk), "*")
 
 
 def dim_initial(
-    spark: SparkSession,
-    sf_dir: str,
-    dim: DimSpec,
-    as_of: str | None = None,
-    sk_strategy: str = "ordered",
+    spark: SparkSession, sf_dir: str, dim: DimSpec, as_of: str | None = None
 ) -> DataFrame:
     """Initial (full-history) load (`code/SQL_1…sql:602–659`).
 
@@ -136,7 +89,7 @@ def dim_initial(
         "valid_to", "active_to"
     )
     unioned = shaped.unionByName(unknown_member_row(spark, dim))
-    return assign_surrogate_keys(unioned, dim, strategy=sk_strategy)
+    return assign_surrogate_keys(unioned, dim)
 
 
 def change_predicate(dim: DimSpec, left_prefix: str = "", right_prefix: str = "src_") -> Column:
@@ -153,7 +106,6 @@ def scd2_increment(
     snapshot: DataFrame,
     dim: DimSpec,
     now_ts: str,
-    sk_strategy: str = "ordered",
 ) -> DataFrame:
     """One incremental SCD2 merge pass; returns the tagged post-state.
 
@@ -264,7 +216,6 @@ def scd2_increment(
             guarded.crossJoin(F.broadcast(max_sk)),
             dim,
             offset=F.col("_max_sk"),
-            strategy=sk_strategy,
         )
         .drop("_max_sk")
         .withColumn("change_tag", F.lit("inserted"))
@@ -278,7 +229,6 @@ def dim_two_phase(
     dim: DimSpec,
     split: str,
     now_ts: str,
-    sk_strategy: str = "ordered",
 ) -> DataFrame:
     """Initial load as-of ``split`` + one incremental pass to the present.
 
@@ -294,9 +244,7 @@ def dim_two_phase(
     # (min of 3, fresh process each). Materializing via the checkpoint's
     # own count-job and running the watermark agg over cached blocks
     # beats interleaving block persistence into the agg job.
-    dim0 = dim_initial(
-        spark, sf_dir, dim, as_of=split, sk_strategy=sk_strategy
-    ).localCheckpoint()
+    dim0 = dim_initial(spark, sf_dir, dim, as_of=split).localCheckpoint()
     # data-driven watermark advance (X8, `code/SQL_1…sql:643–651`):
     # MAX(valid_from) of the ingested batch, read back like the
     # reference's scalar tracker lookup (P11 → collect + re-inject)
@@ -310,7 +258,7 @@ def dim_two_phase(
     wm = wm_row["wm"].strftime("%Y-%m-%d %H:%M:%S") if wm_row["wm"] is not None else LOW
     staged = staging.delta_extract(spark, sf_dir, dim, wm)
     snapshot = staging.current_snapshot(spark, sf_dir, dim)
-    return scd2_increment(dim0, staged, snapshot, dim, now_ts, sk_strategy=sk_strategy)
+    return scd2_increment(dim0, staged, snapshot, dim, now_ts)
 
 
 def dim_asof_snapshot(spark: SparkSession, sf_dir: str, dim: DimSpec, ts: str) -> DataFrame:

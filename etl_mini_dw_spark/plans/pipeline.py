@@ -11,7 +11,7 @@ chars survive the full gauntlet").
 Because every stage is a pure DataFrame→DataFrame function, the
 composition is a single Catalyst plan: the scorer/lang-id projections
 fuse into the scan, the dedup chain reuses the per-session staged
-shingle frames (`dedup._memo`), and the summary is one partial-
+shingle frames (`stage_memo`), and the summary is one partial-
 aggregable groupBy. No stage materializes driver-side; the oracle
 replays the ENTIRE chain as nested CTEs (including the recursive
 connected-components CTE inside keep-canonical) — value-identical or

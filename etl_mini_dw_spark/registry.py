@@ -130,17 +130,6 @@ def _measures_as_double(df: DataFrame) -> DataFrame:
     return df
 
 
-def _fact_initial_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One lazily-checkpointed resolved fact frame per (session, sf-dir).
-
-    Six consumers (nk-dup check, 4 orphan checks, mart, reconcile) each
-    need the fully-resolved initial fact; without the memo every one
-    re-runs the resolve+datekey joins. ``fact_sales_initial`` itself
-    stays un-memoized so its bench line keeps measuring the real build.
-    """
-    return fact.fact_initial_memo(spark, sf_dir)
-
-
 _register(
     "fact_sales_initial",
     lambda spark, sf_dir: _measures_as_double(fact.fact_initial(spark, sf_dir)),
@@ -163,7 +152,7 @@ def _two_phase(spark, sf_dir, dim_key):
     r09 optimization: route through the memoized ``api.dim_state`` (one
     build per (session, sf-dir, dim), billed to bench's `memo:dim_states`
     line) instead of re-running the eager dim_two_phase build — the same
-    value-identical reuse ``_fact_initial_memo`` already gives the fact
+    value-identical reuse ``fact.fact_initial_memo`` already gives the fact
     consumers. The ``scd2_{dim}_two_phase`` registry entries deliberately
     keep calling ``scd2.dim_two_phase`` directly so their bench lines
     still measure the real build (same principle as fact_sales_initial).
@@ -231,7 +220,7 @@ for _dim_key, _dim in spec.DIMS.items():
     )
 _register(
     "validate_fact_nk_dups",
-    lambda spark, sf_dir: validation.duplicate_fact_nk(_fact_initial_memo(spark, sf_dir)),
+    lambda spark, sf_dir: validation.duplicate_fact_nk(fact.fact_initial_memo(spark, sf_dir)),
     validation_sql.fact_nk_dups_sql(warehouse_sql.fact_initial_sql()),
 )
 # Soft-FK orphan checks for ALL dims + DimDate (`code/SQL_1…sql:1745–1783`)
@@ -245,7 +234,7 @@ for _dim_key, _dim in spec.DIMS.items():
         f"validate_fact_orphans_{_dim_key}",
         (
             lambda d, fk: lambda spark, sf_dir: validation.fact_orphans(
-                _fact_initial_memo(spark, sf_dir),
+                fact.fact_initial_memo(spark, sf_dir),
                 scd2.dim_initial(spark, sf_dir, d),
                 fk,
                 d.sk,
@@ -263,7 +252,7 @@ for _dim_key, _dim in spec.DIMS.items():
 _register(
     "validate_fact_orphans_date",
     lambda spark, sf_dir: validation.fact_orphans(
-        _fact_initial_memo(spark, sf_dir),
+        fact.fact_initial_memo(spark, sf_dir),
         dimdate.build_dim_date(spark, spec.DATE_START, spec.DATE_END),
         "sales_order_datekey",
         "date_key",
@@ -303,7 +292,7 @@ _register(
 _register(
     "mart_fact",
     lambda spark, sf_dir: _ts_as_str(
-        _measures_as_double(marts.mart_fact(_fact_initial_memo(spark, sf_dir))),
+        _measures_as_double(marts.mart_fact(fact.fact_initial_memo(spark, sf_dir))),
         "sales_lasteditedwhen",
     ),
     _ts_as_str_sql(
@@ -407,7 +396,7 @@ def _reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("sales_value").cast("decimal(38,4)").cast("double").alias("src_total_value"),
         F.count(F.lit(1)).alias("src_rows"),
     )
-    fct = _fact_initial_memo(spark, sf_dir).agg(
+    fct = fact.fact_initial_memo(spark, sf_dir).agg(
         F.sum("sales_value").cast("decimal(38,4)").cast("double").alias("fact_total_value"),
         F.count(F.lit(1)).alias("fact_rows"),
     )
@@ -918,7 +907,7 @@ def _health_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         _count(f"{key}.dup_current", validation.duplicate_current_per_nk(dim_df, d.nk))
         _count(f"{key}.dup_versions", validation.duplicate_version_windows(dim_df, d.nk))
         _count(f"{key}.overlaps", validation.overlapping_windows(dim_df, d.nk, d.sk))
-    fact_df = _fact_initial_memo(spark, sf_dir)
+    fact_df = fact.fact_initial_memo(spark, sf_dir)
     _count("fact.nk_dups", validation.duplicate_fact_nk(fact_df))
     for key, d in spec.DIMS.items():
         fk = {

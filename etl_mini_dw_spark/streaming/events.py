@@ -475,8 +475,7 @@ def streaming_merge_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     The canonical streaming-upsert topology: each micro-batch of an
     update-mode aggregation carries only the users whose totals CHANGED,
     and ``foreachBatch`` applies them as a keyed MERGE
-    (``etl/store.py::merge_upsert`` — on a Delta backend the identical
-    call is a commit-log ``MERGE INTO``). The maintained table always
+    (``etl/store.py::merge_upsert``). The maintained table always
     holds the latest total per user; no result row passes through the
     driver. Per-user aggregation state is watermark-free (unbounded) in
     this bounded-replay demo — production keys state by (user, window)

@@ -88,41 +88,50 @@ def _shm_usable(path: str = "/dev/shm") -> bool:
     return st.f_bavail * st.f_frsize >= _SHM_MIN_FREE_BYTES
 
 
+# The one subdirectory of a scratch base this module owns: every run's
+# mkdtemp lands here, and only here is swept — a user-supplied
+# ``SPARK_GRAFT_STREAM_TMP`` may hold files this module did not create.
+_OWNED_SUBDIR = "etl_mini_dw_scratch"
+
+
 def scratch_dir(prefix: str) -> str:
     """Per-run scratch dir (checkpoints, bounded sinks, landing dirs).
 
     Prefers RAM-backed ``/dev/shm`` only when it has ≥1 GiB free
     (ADVICE r9: a small or full tmpfs must fall back to the system
     tempdir rather than ENOSPC mid-query); ``SPARK_GRAFT_STREAM_TMP``
-    overrides unconditionally. Callers remove their scratch on success;
-    a crashed run's leftovers are bounded by the per-run mkdtemp and
-    swept by the OS tmpfs lifecycle."""
+    overrides unconditionally. Either base gets the run's dir inside
+    ``_OWNED_SUBDIR``. Callers remove their scratch on success; a
+    crashed run's leftovers are bounded by the per-run mkdtemp and
+    swept by ``_purge_stale`` or the OS tmpfs lifecycle."""
     base = os.environ.get("SPARK_GRAFT_STREAM_TMP")
     if base is None and _shm_usable():
-        base = "/dev/shm/etl_mini_dw_scratch"
+        base = "/dev/shm"
     if base:
-        os.makedirs(base, exist_ok=True)
-        _purge_stale(base)
-        return tempfile.mkdtemp(prefix=prefix, dir=base)
+        owned = os.path.join(base, _OWNED_SUBDIR)
+        os.makedirs(owned, exist_ok=True)
+        _purge_stale(owned)
+        return tempfile.mkdtemp(prefix=prefix, dir=owned)
     return tempfile.mkdtemp(prefix=prefix)
 
 
 _PURGE_AGE_SECONDS = 24 * 3600
 
 
-def _purge_stale(base: str) -> None:
+def _purge_stale(owned: str) -> None:
     """Best-effort sweep of scratch left by crashed/old runs (ADVICE r9:
     RAM-backed scratch otherwise accumulates across runs). Only entries
-    older than a day are touched, so a concurrent live session's scratch
-    (hours at most) is never at risk; all errors are swallowed — purging
-    is hygiene, never correctness."""
+    of the module-owned dir ``owned`` that are older than a day are
+    touched, so neither a concurrent live session's scratch (hours at
+    most) nor anything else under the base is ever at risk; all errors
+    are swallowed — purging is hygiene, never correctness."""
     import shutil
     import time
 
     try:
         cutoff = time.time() - _PURGE_AGE_SECONDS
-        for name in os.listdir(base):
-            path = os.path.join(base, name)
+        for name in os.listdir(owned):
+            path = os.path.join(owned, name)
             try:
                 if os.path.getmtime(path) < cutoff:
                     shutil.rmtree(path, ignore_errors=True)

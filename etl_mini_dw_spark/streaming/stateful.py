@@ -113,9 +113,9 @@ FROM events GROUP BY user_id
 
 # --- transformWithState (Spark 4 typed-state API) ---------------------------
 #
-# Dependency-gated like etl/store.py's Delta backend: the state-server
-# protocol needs the protobuf bindings, which are not in this container
-# (ImportError at stream start, verified). tests skip when unavailable;
+# Dependency-gated: the state-server protocol needs the protobuf
+# bindings (ImportError at stream start when they are absent); tests
+# skip when unavailable;
 # the topology itself is complete and runs wherever `google.protobuf`
 # is importable.
 

@@ -91,10 +91,13 @@ def main() -> None:
     print(f"{'query':45s} {'prev(A)':>9s} {'now(B)':>9s} {'speedup':>8s}")
     for n in args.names:
         a, b = best["a"].get(n), best["b"].get(n)
-        if not a or not b:
+        if a is None or b is None:
             continue
-        ratios.append(a / b)
-        print(f"{n:45s} {a:9.3f} {b:9.3f} {a / b:8.2f}")
+        # a 0.0 s minimum is a real timing: it gets its line, but no
+        # ratio against it enters the geomean (log needs a positive one)
+        print(f"{n:45s} {a:9.3f} {b:9.3f} {a / b if b else math.nan:8.2f}")
+        if a and b:
+            ratios.append(a / b)
     if ratios:
         gm = math.exp(sum(math.log(r) for r in ratios) / len(ratios))
         print(f"geomean speedup (A/B, >1 = B faster): {gm:.3f}  loads={loads}")

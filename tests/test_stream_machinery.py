@@ -78,13 +78,19 @@ def test_scratch_dir_skips_full_shm(monkeypatch, tmp_path):
 
 
 def test_scratch_purges_only_stale_entries(monkeypatch, tmp_path):
+    # only old scratch this module created is swept; an old entry of the
+    # user's own under the SPARK_GRAFT_STREAM_TMP base survives
     monkeypatch.setenv("SPARK_GRAFT_STREAM_TMP", str(tmp_path))
-    stale = tmp_path / "old_run"
-    stale.mkdir()
+    owned = tmp_path / "etl_mini_dw_scratch"
+    stale = owned / "old_run"
+    foreign = tmp_path / "old_run"
+    fresh = owned / "live_run"
     old = 2 * machinery._PURGE_AGE_SECONDS
-    os.utime(stale, (os.path.getmtime(stale) - old, os.path.getmtime(stale) - old))
-    fresh = tmp_path / "live_run"
-    fresh.mkdir()
+    for d in (stale, foreign, fresh):
+        d.mkdir(parents=True)
+    for d in (stale, foreign):
+        os.utime(d, (os.path.getmtime(d) - old, os.path.getmtime(d) - old))
     machinery.scratch_dir("unit_purge_")
+    assert foreign.exists()
     assert not stale.exists()
     assert fresh.exists()

@@ -126,18 +126,28 @@ def test_transform_with_state_topology(spark, sf_dir):
     assert got == want
 
 
-def test_bucketed_sk_warehouse_equals_ordered(wh, spark, sf_dir, tmp_path_factory):
-    """The bucketed SK deployment option (CLI --sk-strategy bucketed)
-    must produce byte-identical dimension tables through the full
-    two-phase warehouse lifecycle — the r7 cluster-path seam proven at
-    the ORCHESTRATOR level, not just the operator level."""
-    base = str(tmp_path_factory.mktemp("warehouse_bucketed"))
-    w2 = Warehouse(spark, base, sf_dir, sk_strategy="bucketed")
-    w2.init()
-    w2.run_all(as_of=spec.MID, now_ts=spec.NOW_FIXED)
-    w2.run_all(now_ts=spec.NOW_FIXED)
-    for dim in spec.DIMS.values():
-        a = wh.table(dim.name)
-        b = w2.table(dim.name)
-        assert a.columns == b.columns
-        assert a.exceptAll(b).count() + b.exceptAll(a).count() == 0, dim.name
+def test_empty_initial_fact_load_then_later_cut(spark, sf_dir, tmp_path_factory):
+    """A first load at a cut before the first order has an empty fact
+    delta, which writes nothing at all (the incremental branch's rule).
+    The next cut's load is then the initial one: it must read no
+    schema-less table and equal a one-shot load of that cut against the
+    same dimension tables."""
+    import os
+    import shutil
+
+    early, later = "1994-06-01 00:00:00", spec.MID
+    w = Warehouse(spark, str(tmp_path_factory.mktemp("wh_empty_first")), sf_dir)
+    w.run_all(as_of=early, now_ts=spec.NOW_FIXED)
+    missing_after_empty = w.missing_tables()
+    w.run_all(as_of=later, now_ts=spec.NOW_FIXED)
+
+    ref_dir = str(tmp_path_factory.mktemp("wh_one_shot"))
+    for name in ("dim_date", *(d.name for d in spec.DIMS.values())):
+        shutil.copytree(w.store.path(name), os.path.join(ref_dir, name))
+    ref = Warehouse(spark, ref_dir, sf_dir)
+    ref.init()
+    ref.load_fact(as_of=later)
+    a, b = w.table("fact_sales"), ref.table("fact_sales")
+    assert a.count() > 0
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    assert missing_after_empty == ["fact_sales"]
