@@ -10,13 +10,14 @@ makes every sum exact and partition-order-invariant: the same input
 produces the SAME codebook on any cluster layout, which is what lets an
 index build be reproducible (and lets DuckDB replay it as the oracle).
 
-Execution shape per iteration (all JVM-side, no UDFs; r10 rewrite):
+Execution shape per iteration (all JVM-side, no UDFs): `train_codebooks`
+is the one trainer, shared with PQ (`functions/pq.py`, one group per
+subspace), and `argmin_literal` the one assignment builder:
 - assignment: the K×DIM integer codebook is inlined as LITERALS into a
   map-only squared-L2 argmin expression over the corpus — no join, no
-  shuffle (the previous crossJoin-broadcast spelling already collected
-  the K centroids to the driver to broadcast them; inlining moves the
-  same K rows the same way and deletes the argmin shuffle);
-- update: ``groupBy(cluster)`` with 64 per-dimension LONG sums — partial
+  shuffle (a crossJoin-broadcast would collect the same K centroids to
+  the driver to broadcast them, and add an argmin shuffle);
+- update: posexplode + ONE LONG sum per (cluster, dimension) — partial
   aggregation shrinks the shuffle to K×64 longs per executor core; the
   K-row result is read back (scalar-tracker P11 pattern) to seed the
   next round's literals.
@@ -65,86 +66,106 @@ def _assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def _assign_lit(vecs: DataFrame, cents: list[tuple[int, list[int]]]) -> DataFrame:
-    """Map-only (vec_id, qv, cluster, dist) against LITERAL centroids —
-    no join, no shuffle: the K×DIM integer codebook is inlined into the
-    argmin expression. ``array_min`` over (dist, cluster) structs uses
-    the same lexicographic comparison as ``min(struct(dist, cluster))``
-    in `_assign`, so ties break to the lowest cluster id identically."""
+def argmin_literal(col: str, cents: list[tuple[int, list[int]]]) -> F.Column:
+    """Nearest LITERAL centroid of the integer vector column ``col``: a
+    ``(dist, key)`` struct, ties → lowest key. Map-only — no join, no
+    shuffle: the K×dim integer codebook is inlined into the expression.
+    ``array_min`` over (dist, key) structs uses the same lexicographic
+    comparison as ``min(struct(dist, cluster))`` in `_assign`, so ties
+    break identically. A caller that reads BOTH fields must alias the
+    struct in its own projection first: the argmin is NOT cheap, and
+    CollapseProject (SPARK-36718) keeps a twice-consumed alias
+    un-inlined, so the distance battery runs once per row, not once per
+    consumed field (the CLAUDE.md HOF-CSE trap)."""
     terms = []
     for k, cv in cents:
         arr = "array(" + ", ".join(f"{int(v)}L" for v in cv) + ")"
         terms.append(
-            f"named_struct('dist', {_DIST.format(a='qv', b=arr)},"
-            f" 'cluster', CAST({int(k)} AS BIGINT))"
+            f"named_struct('dist', {_DIST.format(a=col, b=arr)},"
+            f" 'key', CAST({int(k)} AS BIGINT))"
         )
-    best = F.expr(f"array_min(array({', '.join(terms)}))")
-    # two-step projection: the argmin array is NOT cheap and is consumed
-    # by two fields — CollapseProject (SPARK-36718) keeps the alias
-    # un-inlined, so the 8-fold distance battery runs once per row, not
-    # once per consumed field (the CLAUDE.md HOF-CSE trap)
-    return vecs.select("vec_id", "qv", best.alias("_w")).select(
-        "vec_id",
-        "qv",
-        F.col("_w")["cluster"].alias("cluster"),
-        F.col("_w")["dist"].alias("dist"),
-    )
+    return F.expr(f"array_min(array({', '.join(terms)}))")
 
 
-def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Final (vec_id, cluster, dist) after ITERS rounds of integer k-means
-    seeded with the first K vectors (deterministic init).
+def train_codebooks(
+    vecs: DataFrame, k: int, dim: int, iters: int
+) -> dict[int, list[tuple[int, list[int]]]]:
+    """Deterministic integer k-means over every group of ``vecs`` at
+    once: ``(g, vec_id, v)`` rows, ``v`` a ``dim``-long BIGINT array.
+    Returns ``{g: [(key, centroid), …]}``, seeded per group with the
+    vectors ``vec_id < k`` (key = vec_id) and refined for ``iters``
+    rounds. `kmeans_assign` trains one group; PQ trains one per
+    subspace — grouping by g cannot mix groups, so the per-(g, key)
+    arithmetic is the same as a separate loop per group.
 
-    r10 (guide §1.2/§2.4): each round's centroids are read back to the
-    driver (K rows — the previous spelling already collected them to the
-    driver to BROADCAST them into a crossJoin; reading them back is the
-    reference's scalar-tracker P11 pattern at the same data volume) and
-    inlined as literals, so the assignment is a map-only expression.
-    Per round this removes the crossJoin broadcast build, the
-    groupBy(vec_id) argmin shuffle of |corpus|×K rows and the join back
-    for qv — leaving ONE tiny groupBy(cluster) shuffle per round.
-    All arithmetic stays in the same Spark integer expressions
-    (quantize, squared-L2 fold, floor(s/n + 0.5) update), so the
-    centroids and assignments are bit-identical to the joined spelling
-    (pinned by test_cluster.py and the kmeans/SemDeDup parity tests)."""
-    vecs = _quantized(spark, sf_dir).localCheckpoint(eager=False)
-    seed_rows = (
-        vecs.filter(F.col("vec_id") < K)
-        .select(F.col("vec_id").alias("cluster"), F.col("qv").alias("cv"))
-        .collect()
-    )
-    cents = sorted((int(r["cluster"]), list(r["cv"])) for r in seed_rows)
-    for _ in range(ITERS):
-        members = _assign_lit(vecs, cents)
-        # per-dimension LONG sums → exact, partition-order-invariant.
-        # posexplode + ONE sum instead of 64 column aggregates: the wide
-        # spelling spent 2–3 s/round in Catalyst planning + codegen of a
-        # 65-buffer aggregate (measured; the data itself is tiny) — the
-        # tall (cluster, i) shape compiles in ms and shuffles K×DIM longs
-        # after partial aggregation either way. n = count(1) per
-        # (cluster, i) equals the cluster's member count (qv is fixed
-        # DIM-length), and the floor(s/n + 0.5) update stays IN SPARK so
-        # the double-division semantics remain engine-pinned.
+    Each round inlines the codebooks as literals (`argmin_literal`, one
+    branch per group), assigns map-only, and updates via posexplode +
+    ONE sum per (g, key, i): the wide spelling (one column aggregate
+    per dimension) spent 2–3 s/round in Catalyst planning + codegen of
+    a 65-buffer aggregate over KB-scale data — the tall shape compiles
+    in ms and shuffles K×dim longs per group after partial aggregation.
+    LONG sums are exact and partition-order-invariant; n = count(1) per
+    (g, key, i) equals the member count (v is fixed-length), and the
+    floor(s/n + 0.5) update stays IN SPARK so the double-division
+    semantics remain engine-pinned. The K-row result is read back
+    (scalar-tracker P11 pattern) to seed the next round's literals:
+    one job with one tiny shuffle per round."""
+    cents: dict[int, list[tuple[int, list[int]]]] = {}
+    for r in vecs.filter(F.col("vec_id") < k).collect():
+        cents.setdefault(int(r["g"]), []).append((int(r["vec_id"]), list(r["v"])))
+    for _ in range(iters):
+        assign = None
+        for g in sorted(cents):
+            cand = argmin_literal("v", sorted(cents[g]))["key"]
+            # every row's g matches exactly one branch (every group was
+            # seeded), so the when-chain needs no otherwise
+            assign = (
+                F.when(F.col("g") == g, cand)
+                if assign is None
+                else assign.when(F.col("g") == g, cand)
+            )
         upd = (
-            members.select("cluster", F.posexplode("qv").alias("i", "v"))
-            .groupBy("cluster", "i")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
+            vecs.select("g", assign.alias("key"), F.posexplode("v").alias("i", "x"))
+            .groupBy("g", "key", "i")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"))
             .select(
-                "cluster",
+                "g",
+                "key",
                 "i",
                 F.floor(F.col("s").cast("double") / F.col("n") + F.lit(0.5))
                 .cast("long")
                 .alias("c"),
             )
         )
-        by_cluster: dict[int, dict[int, int]] = {}
+        by_key: dict[tuple[int, int], dict[int, int]] = {}
         for r in upd.collect():
-            by_cluster.setdefault(int(r["cluster"]), {})[int(r["i"])] = int(r["c"])
-        cents = sorted(
-            (k, [d[i] for i in range(DIM)]) for k, d in by_cluster.items()
-        )
-    return _assign_lit(vecs, cents).select(
-        "vec_id", F.col("cluster").cast("bigint").alias("cluster"), F.col("dist").cast("bigint").alias("dist")
+            by_key.setdefault((int(r["g"]), int(r["key"])), {})[int(r["i"])] = int(
+                r["c"]
+            )
+        cents = {}
+        for (g, key), d in by_key.items():
+            cents.setdefault(g, []).append((key, [d[i] for i in range(dim)]))
+    return {g: sorted(cs) for g, cs in cents.items()}
+
+
+def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Final (vec_id, cluster, dist) after ITERS rounds of integer k-means
+    seeded with the first K vectors (deterministic init): one group of
+    `train_codebooks`, then one map-only `argmin_literal` projection.
+    Centroids and assignments are bit-identical to the crossJoin-argmin
+    spelling (pinned by test_cluster.py and the kmeans/SemDeDup parity
+    tests)."""
+    vecs = _quantized(spark, sf_dir).localCheckpoint(eager=False)
+    cents = train_codebooks(
+        vecs.select(F.lit(0).alias("g"), "vec_id", F.col("qv").alias("v")),
+        K,
+        DIM,
+        ITERS,
+    )[0]
+    return vecs.select("vec_id", argmin_literal("qv", cents).alias("_w")).select(
+        "vec_id",
+        F.col("_w")["key"].alias("cluster"),
+        F.col("_w")["dist"].alias("dist"),
     )
 
 

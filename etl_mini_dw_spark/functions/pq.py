@@ -16,8 +16,10 @@ coordinates, LONG sums, floor(s/n + 0.5) centroid updates), so training,
 codes, and ADC scores are bit-identical on any cluster layout and fully
 replayable by the DuckDB oracle (per-subspace unrolled CTE iterations).
 
-Scale shape: training = M independent small-loop jobs (K×16 longs per
-round); encoding = M broadcast-argmin map stages; ADC = codes (long form,
+Scale shape: training = ONE `cluster.train_codebooks` loop with the M
+subspaces as its groups (one job per round, M×K×16 longs shuffled);
+encoding = one map-only projection with the codebooks inlined as
+literals (`cluster.argmin_literal`); ADC = codes (long form,
 M rows/vector) ⋈ broadcast query tables (N_QUERIES×M×K rows) → per-pair
 sum → per-query top-k window. The corpus-sized frames carry only codes.
 """
@@ -27,21 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_mini_dw_spark.functions import cluster
 from etl_mini_dw_spark.functions.simsearch import N_QUERIES, TOP_K
-from etl_mini_dw_spark.sources.tables import load_table, stage_memo
+from etl_mini_dw_spark.sources.tables import stage_memo
 
 PQ_M = 4  # subspaces
 PQ_SUB = 16  # dims per subspace (4 × 16 = 64)
 PQ_K = 8  # centroids per subspace codebook
 PQ_ITERS = 2
-SCALE = 1000
-
-_QUANT = (
-    f"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {SCALE} + 0.5D) AS BIGINT))"
-)
-_DIST = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)"
-)
 
 
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,32 +45,34 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "pq_quantized",
-        lambda: (
-            load_table(spark, sf_dir, "embeddings")
-            .select("vec_id", F.expr(_QUANT).alias("qv"))
-            .localCheckpoint(eager=False)
-        ),
+        lambda: cluster._quantized(spark, sf_dir).localCheckpoint(eager=False),
     )
 
 
 def _codebooks_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALL subspace codebooks trained in one fused loop: (m, code, cv).
 
-    r09 optimization (guide §1.2 — fix the distributed algorithm first):
-    the four per-subspace k-means loops are independent and structurally
-    identical, so one loop over the exploded (vec_id, m, sv) frame runs
-    the SAME integer arithmetic per (m, code) key with 4× fewer jobs,
-    checkpoints and shuffles (2 iterations total instead of 8). The
-    per-(m, code) sums are value-identical to the per-subspace runs —
-    grouping by m cannot mix subspaces — so the trained centroids are
-    bit-identical (pq oracle-parity tests re-run green).
+    The subspaces are the groups of `cluster.train_codebooks`, so one
+    loop over the exploded (m, vec_id, sv) frame runs the same integer
+    arithmetic per (m, code) key as M separate per-subspace loops, with
+    M× fewer jobs and shuffles (PQ_ITERS rounds in total) — grouping by
+    m cannot mix subspaces, so the trained centroids are bit-identical.
     """
-    return stage_memo(
-        spark,
-        sf_dir,
-        "pq_codebooks_all",
-        lambda: _train_all(_subs_all(_quantized(spark, sf_dir))),
-    )
+
+    def train() -> DataFrame:
+        subs = _quantized(spark, sf_dir).select(
+            "vec_id",
+            F.posexplode(
+                F.array(*[F.slice("qv", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
+            ).alias("g", "v"),
+        )
+        cents = cluster.train_codebooks(subs, PQ_K, PQ_SUB, PQ_ITERS)
+        return spark.createDataFrame(
+            [(m, code, cv) for m in sorted(cents) for code, cv in cents[m]],
+            "m int, code bigint, cv array<bigint>",
+        )
+
+    return stage_memo(spark, sf_dir, "pq_codebooks_all", train)
 
 
 def _codebook(spark: SparkSession, sf_dir: str, m: int) -> DataFrame:
@@ -104,140 +101,33 @@ def _sub(df: DataFrame, m: int) -> DataFrame:
     return df.select("vec_id", F.slice("qv", m * PQ_SUB + 1, PQ_SUB).alias("sv"))
 
 
-def _assign_sub(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, code, dist): nearest sub-centroid, ties → lowest code."""
-    scored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "code", F.expr(_DIST.format(a="sv", b="cv")).alias("dist")
-    )
-    best = scored.groupBy("vec_id").agg(F.min(F.struct("dist", "code")).alias("w"))
-    return best.select(
-        "vec_id", F.col("w.code").alias("code"), F.col("w.dist").alias("dist")
-    )
-
-
-def _subs_all(df: DataFrame) -> DataFrame:
-    """All subspace slices in one frame: (vec_id, m, sv)."""
-    return df.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.slice("qv", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
-        ).alias("m", "sv"),
-    )
-
-
-def _assign_all_lit(
-    vecs: DataFrame, cents: list[tuple[int, int, list[int]]]
-) -> DataFrame:
-    """(m, vec_id, code, sv): nearest sub-centroid against LITERAL
-    codebooks — map-only, no join (the r10 k-means literal-argmin shape;
-    `array_min` over (dist, code) structs ties to the lowest code like
-    `min(struct(dist, code))` in `_assign_sub`)."""
-    per_m: dict[int, list[str]] = {}
-    for m, code, cv in cents:
-        arr = "array(" + ", ".join(f"{int(v)}L" for v in cv) + ")"
-        per_m.setdefault(int(m), []).append(
-            f"named_struct('dist', {_DIST.format(a='sv', b=arr)},"
-            f" 'code', CAST({int(code)} AS BIGINT))"
-        )
-    best = None
-    for m in sorted(per_m):
-        cand = F.expr(f"array_min(array({', '.join(per_m[m])}))")["code"]
-        # every row's m matches exactly one branch (every vector carries
-        # every subspace), so the when-chain needs no otherwise
-        best = (
-            F.when(F.col("m") == m, cand)
-            if best is None
-            else best.when(F.col("m") == m, cand)
-        )
-    return vecs.select("m", "vec_id", best.alias("code"), "sv")
-
-
-def _train_all(vecs: DataFrame) -> DataFrame:
-    """Deterministic integer k-means for ALL subspaces at once:
-    (m, code, cv) — per-(m, code) arithmetic identical to the previous
-    per-subspace `_train_sub` loops (see `_codebooks_all`).
-
-    r10 shape (same planning-cost fix as `cluster.kmeans_assign`): each
-    round inlines the 32-row codebook as literals (it was already
-    driver-collected for the broadcast), assigns map-only, and updates
-    via posexplode + ONE sum per (m, code, i) instead of a 17-column
-    aggregate — the wide spelling spent its time compiling plans, not on
-    the 8 k-row data. The floor(s/n + 0.5) update stays in Spark so the
-    double-division semantics remain engine-pinned; centroids are
-    bit-identical (pq parity tests + exceptAll pins)."""
-    spark = vecs.sparkSession
-    seed = (
-        vecs.filter(F.col("vec_id") < PQ_K)
-        .select("m", F.col("vec_id").alias("code"), "sv")
-        .collect()
-    )
-    cents = sorted((int(r["m"]), int(r["code"]), list(r["sv"])) for r in seed)
-    for _ in range(PQ_ITERS):
-        upd = (
-            _assign_all_lit(vecs, cents)
-            .select("m", "code", F.posexplode("sv").alias("i", "v"))
-            .groupBy("m", "code", "i")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
-            .select(
-                "m",
-                "code",
-                "i",
-                F.floor(F.col("s").cast("double") / F.col("n") + F.lit(0.5))
-                .cast("long")
-                .alias("c"),
-            )
-        )
-        by_mc: dict[tuple[int, int], dict[int, int]] = {}
-        for r in upd.collect():
-            by_mc.setdefault((int(r["m"]), int(r["code"])), {})[int(r["i"])] = int(
-                r["c"]
-            )
-        cents = sorted(
-            (m, code, [d[i] for i in range(PQ_SUB)]) for (m, code), d in by_mc.items()
-        )
-    return spark.createDataFrame(
-        [(m, code, cv) for m, code, cv in cents],
-        "m int, code bigint, cv array<bigint>",
-    )
-
-
 def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector PQ code word: (vec_id, code_0 … code_{M-1}).
 
-    r10: ONE map-only projection with the trained codebooks inlined as
-    literals (32 rows, read back from the staged frame) — the previous
-    spelling ran 4 crossJoin+groupBy argmin chains and 4 self-joins to
-    reassemble the columns. `array_min` over (dist, code) structs ties
-    identically to `_assign_sub`'s min(struct); codes exceptAll 0/0."""
-    cb = _codebooks_all(spark, sf_dir).collect()
+    ONE map-only projection: per subspace, the trained codebook (read
+    back from the staged frame) inlined into `cluster.argmin_literal` —
+    no argmin join, no self-joins to reassemble the columns."""
     by_m: dict[int, list[tuple[int, list[int]]]] = {}
-    for r in cb:
+    for r in _codebooks_all(spark, sf_dir).collect():
         by_m.setdefault(int(r["m"]), []).append((int(r["code"]), list(r["cv"])))
-    emb = _quantized(spark, sf_dir)
     # slices hoisted to columns so each of the 8 folds per subspace
     # reads an attribute, not a re-evaluated slice
-    staged = emb.select(
+    staged = _quantized(spark, sf_dir).select(
         "vec_id",
         *[
             F.slice("qv", m * PQ_SUB + 1, PQ_SUB).alias(f"sv{m}")
             for m in range(PQ_M)
         ],
     )
-    cols = [F.col("vec_id")]
-    for m in range(PQ_M):
-        terms = []
-        for code, cv in sorted(by_m[m]):
-            arr = "array(" + ", ".join(f"{int(v)}L" for v in cv) + ")"
-            terms.append(
-                f"named_struct('dist', {_DIST.format(a=f'sv{m}', b=arr)},"
-                f" 'code', CAST({int(code)} AS BIGINT))"
-            )
-        cols.append(
-            F.expr(f"array_min(array({', '.join(terms)}))")["code"]
+    return staged.select(
+        "vec_id",
+        *[
+            cluster.argmin_literal(f"sv{m}", sorted(by_m[m]))["key"]
             .cast("int")
             .alias(f"code_{m}")
-        )
-    return staged.select(*cols)
+            for m in range(PQ_M)
+        ],
+    )
 
 
 def _adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,7 +154,7 @@ def _adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.lit(m).alias("m"),
             "code",
-            F.expr(_DIST.format(a="qsv", b="cv")).alias("d"),
+            F.expr(cluster._DIST.format(a="qsv", b="cv")).alias("d"),
         )
         qtab = t if qtab is None else qtab.unionByName(t)
     return (
@@ -312,10 +202,6 @@ def _ann_pq_topk_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SHORTLIST = 50
-_DIM = PQ_M * PQ_SUB
-_DIST_FULL = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)"
-)
 
 
 def ann_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -358,7 +244,7 @@ def ann_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = cand.join(F.broadcast(qvecs), "query_id").select(
         "query_id",
         "cand_id",
-        F.expr(_DIST_FULL.format(a="qv", b="q_qv")).cast("bigint").alias("exact_dist"),
+        F.expr(cluster._DIST.format(a="qv", b="q_qv")).cast("bigint").alias("exact_dist"),
     )
     w2 = Window.partitionBy("query_id").orderBy("exact_dist", "cand_id")
     return (
@@ -369,10 +255,6 @@ def ann_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- DuckDB mirrors ---------------------------------------------------------
-
-_SQL_QUANT = (
-    f"list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {SCALE} + 0.5) AS BIGINT))"
-)
 
 
 def _sql_dist(a: str, b: str) -> str:
@@ -426,7 +308,7 @@ def pq_codes_sql() -> str:
     joins = " ".join(f"JOIN code{m} USING (vec_id)" for m in range(1, PQ_M))
     cols = ", ".join(f"code{m}.code AS code_{m}" for m in range(PQ_M))
     return f"""
-WITH e AS (SELECT vec_id, {_SQL_QUANT} AS qv FROM embeddings),
+WITH e AS (SELECT vec_id, {cluster._SQL_QUANT} AS qv FROM embeddings),
 {subs}
 SELECT code0.vec_id, {cols}
 FROM code0 {joins}
@@ -445,7 +327,7 @@ FROM e{m} v, c{m}_{PQ_ITERS} c WHERE v.vec_id < {N_QUERIES}"""
         for m in range(PQ_M)
     )
     return f"""
-WITH e AS (SELECT vec_id, {_SQL_QUANT} AS qv FROM embeddings),
+WITH e AS (SELECT vec_id, {cluster._SQL_QUANT} AS qv FROM embeddings),
 {subs},
 codes_long AS ({codes_long}),
 qtab AS ({qtabs}),
@@ -475,11 +357,11 @@ FROM e{m} v, c{m}_{PQ_ITERS} c WHERE v.vec_id < {N_QUERIES}"""
         for m in range(PQ_M)
     )
     dist_full = (
-        f"CAST(list_sum(list_transform(range(1, {_DIM + 1}),"
+        f"CAST(list_sum(list_transform(range(1, {PQ_M * PQ_SUB + 1}),"
         f" i -> (ev.qv[i] - eq.qv[i]) * (ev.qv[i] - eq.qv[i]))) AS BIGINT)"
     )
     return f"""
-WITH e AS (SELECT vec_id, {_SQL_QUANT} AS qv FROM embeddings),
+WITH e AS (SELECT vec_id, {cluster._SQL_QUANT} AS qv FROM embeddings),
 {subs},
 codes_long AS ({codes_long}),
 qtab AS ({qtabs}),

@@ -1060,22 +1060,11 @@ MMR_K = 5  # picks per query
 _MMR_L = 7  # lambda in tenths: score = 7*rel - 3*max_sim
 
 
-def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy MMR selection of ``MMR_K`` diverse-but-relevant items per
-    query from a relevance-ranked pool of ``MMR_POOL``.
-
-    The training-data curation primitive: pure relevance top-k returns
-    near-duplicates of the query's neighborhood; MMR trades relevance
-    against redundancy so the selected set covers the neighborhood.
-
-    Scale design: the only corpus-sized stage is the relevance scan,
-    and it goes through ``shard_topk_prune`` (no per-query window ever
-    holds more than corpus/64 rows). Everything after operates on the
-    |queries| x MMR_POOL pool — broadcast joins, |queries|-row argmax
-    aggregates per round, MMR_K bounded rounds. Lazy localCheckpoints
-    cut the iterative lineage (CLAUDE.md: Generate/iteration plan
-    growth). Scores are exact int64; argmax ties break on cand_id.
-    """
+def _mmr_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(query_id, cand_id, rel, cc): the relevance top-``MMR_POOL`` per
+    query. The relevance scan is the only corpus-sized stage, so it goes
+    through ``shard_topk_prune`` — no per-query window ever holds more
+    than corpus/64 rows."""
     emb = load_table(spark, sf_dir, "embeddings")
     coded = emb.select(
         "vec_id", F.expr(_CODE.format(a="embedding")).alias("codes")
@@ -1097,7 +1086,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     wpool = Window.partitionBy("query_id").orderBy(
         F.col("rel").desc(), F.col("cand_id")
     )
-    pool = (
+    return (
         shard_topk_prune(
             scored,
             ["query_id"],
@@ -1108,59 +1097,48 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("prank", F.row_number().over(wpool))
         .filter(F.col("prank") <= MMR_POOL)
         .drop("prank")
-        .localCheckpoint(eager=False)
     )
-    pool_codes = pool.select("query_id", "cand_id", "cc")
-    selected = None
-    remaining = pool.select("query_id", "cand_id", "rel")
-    for r in range(1, MMR_K + 1):
-        if selected is None:
-            cand = remaining.withColumn("max_sim", F.lit(0).cast("bigint"))
-        else:
-            sel = selected.select(
-                F.col("query_id").alias("sq"), F.col("cc").alias("sc")
-            )
-            cand = (
-                remaining.join(
-                    F.broadcast(pool_codes), ["query_id", "cand_id"]
-                )
-                .join(F.broadcast(sel), F.col("query_id") == F.col("sq"))
-                .withColumn(
-                    "sim", F.expr(_QDOT.format(a="cc", b="sc")).cast("bigint")
-                )
-                .groupBy("query_id", "cand_id")
-                .agg(F.max("rel").alias("rel"), F.max("sim").alias("max_sim"))
-            )
-        scored_r = cand.withColumn(
-            "score",
-            (F.lit(_MMR_L) * F.col("rel") - F.lit(10 - _MMR_L) * F.col("max_sim")).cast(
-                "bigint"
-            ),
+
+
+def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Greedy MMR selection of ``MMR_K`` diverse-but-relevant items per
+    query from a relevance-ranked pool of ``MMR_POOL``.
+
+    The training-data curation primitive: pure relevance top-k returns
+    near-duplicates of the query's neighborhood; MMR trades relevance
+    against redundancy so the selected set covers the neighborhood.
+
+    Scale design: the only corpus-sized stage is the relevance scan
+    (`_mmr_pool`, shard-pruned). The |queries| x MMR_POOL pool is
+    collected ONCE and the MMR_K greedy rounds run on the driver in
+    Python ints — the same centered int8 dot products, so scores are
+    exact int64 and argmax ties break on cand_id.
+    """
+    pools: dict[int, dict[int, tuple[int, list[int]]]] = {}
+    for r in _mmr_pool(spark, sf_dir).collect():
+        pools.setdefault(int(r["query_id"]), {})[int(r["cand_id"])] = (
+            int(r["rel"]),
+            [x - 128 for x in r["cc"]],
         )
-        wr = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("cand_id")
-        )
-        pick = (
-            scored_r.withColumn("rn", F.row_number().over(wr))
-            .filter(F.col("rn") == 1)
-            .join(F.broadcast(pool_codes), ["query_id", "cand_id"])
-            .select(
-                "query_id",
-                F.lit(r).cast("int").alias("pick_round"),
-                "cand_id",
-                "score",
-                "rel",
-                "cc",
-            )
-            .localCheckpoint(eager=False)
-        )
-        selected = pick if selected is None else selected.unionByName(pick)
-        remaining = remaining.join(
-            F.broadcast(pick.select("query_id", "cand_id")),
-            ["query_id", "cand_id"],
-            "left_anti",
-        )
-    return selected.select("query_id", "pick_round", "cand_id", "score", "rel")
+    picks = []
+    for qid, pool in pools.items():
+        chosen: list[list[int]] = []
+        for rnd in range(1, min(MMR_K, len(pool)) + 1):
+            # max_sim over the picks so far (0 before the first pick)
+            scores = {
+                cand: _MMR_L * rel
+                - (10 - _MMR_L)
+                * max((sum(x * y for x, y in zip(cc, sc)) for sc in chosen), default=0)
+                for cand, (rel, cc) in pool.items()
+            }
+            cand = min(scores, key=lambda c: (-scores[c], c))
+            rel, cc = pool.pop(cand)
+            chosen.append(cc)
+            picks.append((qid, rnd, cand, scores[cand], rel))
+    return spark.createDataFrame(
+        picks,
+        "query_id bigint, pick_round int, cand_id bigint, score bigint, rel bigint",
+    )
 
 
 def mmr_diverse_topk_sql() -> str:

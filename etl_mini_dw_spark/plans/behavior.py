@@ -937,9 +937,10 @@ ORDER BY trend_rank
 # iterative CTE chain is AS MATERIALIZED — the exponential-inlining
 # trap, CLAUDE.md).
 #
-# Scale: the corpus is touched ONCE by the transition rollup; every
-# round is a |types|²-row join. Gap vs the empirical to-share is the
-# slow-mixing diagnostic.
+# Scale: the corpus is touched ONCE by the transition rollup; its
+# ≤|types|² counts are collected once and the rounds run on the driver
+# in Python ints (the same floor divisions), so no round costs a Spark
+# job. Gap vs the empirical to-share is the slow-mixing diagnostic.
 
 MARKOV_ROUNDS = 8
 MARKOV_SCALE = 1 << 20  # keeps w_raw*SCALE and w*c inside int64 at any sf
@@ -948,56 +949,30 @@ MARKOV_SCALE = 1 << 20  # keeps w_raw*SCALE and w*c inside int64 at any sf
 def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, pi, empirical_share, gap): stationary distribution
     of the event-type transition chain vs the empirical visit share."""
-    trans = event_transitions(spark, sf_dir).select(
-        F.col("from_type").alias("i"),
-        F.col("to_type").alias("j"),
-        F.col("n_transitions").cast("bigint").alias("c"),
-    )
-    trans = trans.localCheckpoint(eager=False)  # reused every round
-    r = trans.groupBy("i").agg(F.sum("c").cast("bigint").alias("r"))
-    base = trans.join(F.broadcast(r), "i")
-    states = trans.select(F.col("i").alias("t")).union(
-        trans.select(F.col("j").alias("t"))
-    ).distinct()
-    k = states.agg(F.count(F.lit(1)).cast("bigint").alias("k"))
-    # pmod divisors below are structurally nonzero under ANSI (r6 ADVICE):
-    # k = COUNT over `states`, evaluated only on states rows — any row
-    # existing implies k ≥ 1; r = SUM of positive transition counts,
-    # joined back so it only appears on rows of its own group; tot ≥ 1
-    # because mass is floor-conserved: Σ_j ⌊w·c_ij/r_i⌋ ≥ w_i − k + 1 and
-    # w_i ≥ SCALE div k, positive whenever k(k−1) < SCALE = 2^20 — i.e.
-    # any chain with < ~1000 states, the regime a |types|² dense rollup
-    # targets in the first place.
-    w = states.crossJoin(F.broadcast(k)).select(
-        F.col("t").alias("i"),
-        F.expr(f"({MARKOV_SCALE} - pmod({MARKOV_SCALE}, k)) div k")
-        .cast("bigint")
-        .alias("w"),
-    )
+    trans = [
+        (row["from_type"], row["to_type"], int(row["n_transitions"]))
+        for row in event_transitions(spark, sf_dir).collect()
+    ]
+    r: dict[str, int] = {}
+    for i, _, c in trans:
+        r[i] = r.get(i, 0) + c
+    states = {t for i, j, _ in trans for t in (i, j)}
+    # Python `//` IS floor division — the pmod identity of the SQL
+    # spelling for every sign. Divisors are nonzero (r6 ADVICE): k ≥ 1
+    # whenever a state exists; r_i sums positive counts of i's own rows;
+    # tot ≥ 1 because mass is floor-conserved: Σ_j ⌊w·c_ij/r_i⌋ ≥
+    # w_i − k + 1 and w_i ≥ SCALE div k, positive whenever k(k−1) <
+    # SCALE = 2^20 — any chain with < ~1000 states, the regime a
+    # |types|² dense rollup targets in the first place.
+    w = {t: MARKOV_SCALE // len(states) for t in states}
     for _ in range(MARKOV_ROUNDS):
-        stepped = (
-            base.join(F.broadcast(w), "i")
-            .select(
-                F.col("j"),
-                F.expr("((w * c) - pmod(w * c, r)) div r").alias("m"),
-            )
-            .groupBy("j")
-            .agg(F.sum("m").cast("bigint").alias("w_raw"))
-        )
-        tot = stepped.agg(F.sum("w_raw").cast("bigint").alias("tot"))
-        w = (
-            stepped.crossJoin(F.broadcast(tot))
-            .select(
-                F.col("j").alias("i"),
-                F.expr(
-                    f"((w_raw * {MARKOV_SCALE})"
-                    f" - pmod(w_raw * {MARKOV_SCALE}, tot)) div tot"
-                )
-                .cast("bigint")
-                .alias("w"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        w_raw: dict[str, int] = {}
+        for i, j, c in trans:
+            if i in w:
+                w_raw[j] = w_raw.get(j, 0) + (w[i] * c) // r[i]
+        tot = sum(w_raw.values())
+        w = {j: (v * MARKOV_SCALE) // tot for j, v in w_raw.items()}
+    w_frame = spark.createDataFrame(list(w.items()), "i string, w bigint")
     emp = (
         typed_table(spark, sf_dir, "events")
         .groupBy(F.col("event_type").alias("i"))
@@ -1005,7 +980,7 @@ def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emp_tot = emp.agg(F.sum("n").cast("bigint").alias("n_tot"))
     out = (
-        w.join(emp, "i")
+        w_frame.join(emp, "i")
         .crossJoin(F.broadcast(emp_tot))
         .select(
             F.col("i").alias("event_type"),

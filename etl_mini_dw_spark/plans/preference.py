@@ -18,19 +18,20 @@ itself is ≤ |brands|² rows.
 Portability: the ENTIRE iteration is integer arithmetic — strengths are
 10⁶-scaled BIGINTs, each reciprocal term is an exact BIGINT floor
 division (n_ij·10⁹) div (p_i+p_j), so the per-group sums are order-free
-and both engines produce bit-identical strengths after any number of
-rounds (the integer-k-means discipline; a float MM sum over j would be
+and the driver rounds and the DuckDB oracle produce bit-identical
+strengths after any number of rounds (the integer-k-means discipline; a float MM sum over j would be
 summation-order-sensitive). Magnitudes: n·10⁹ ≤ ~3e16 at sf1 « 2⁶³.
 
 Scale: one corpus shuffle to (orderkey, brand, qty), one orderkey-keyed
-self-join with bounded fan-out, then 5 unrolled rounds over the
-|brands|²-row duel frame (broadcast-sized; checkpointed per round to
-keep the plan shallow).
+self-join with bounded fan-out, then ONE collect of the ≤|brands|²-row
+duel matrix: the 5 rounds run on the driver in Python ints (exact, the
+same floor divisions), and only the final 10⁻⁶ double projection runs
+in Spark.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_mini_dw_spark.sources.tables import typed_table
@@ -64,57 +65,36 @@ def bradley_terry_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("w"),
         )
-        .localCheckpoint(eager=False)
     )
-    wins = duels.groupBy("i").agg(
-        F.sum("n").cast("bigint").alias("G"), F.sum("w").cast("bigint").alias("W")
-    )
-    p = wins.select("i", F.lit(BT_SCALE).cast("bigint").alias("p"))
-    target = p.agg(F.sum("p").cast("bigint").alias("target"))
+    # the rounds run on the driver over the collected ≤|brands|² duel
+    # matrix: Python `//` is the floor `div` of the SQL spelling (every
+    # operand is positive), and ints never overflow
+    rows = [(r["i"], r["j"], int(r["n"]), int(r["w"])) for r in duels.collect()]
+    games: dict[str, int] = {}
+    wins: dict[str, int] = {}
+    for i, _, n, w in rows:
+        games[i] = games.get(i, 0) + n
+        wins[i] = wins.get(i, 0) + w
+    p = dict.fromkeys(games, BT_SCALE)
+    target = sum(p.values())
     for _ in range(BT_ROUNDS):
-        pa = p.select(F.col("i"), F.col("p").alias("pi"))
-        pb = p.select(F.col("i").alias("j"), F.col("p").alias("pj"))
-        denom = (
-            duels.join(F.broadcast(pa), "i")
-            .join(F.broadcast(pb), "j")
-            .groupBy("i")
-            .agg(
-                F.sum(
-                    F.expr(f"(n * {BT_TERM}) div (greatest(pi, 1) + greatest(pj, 1))")
-                )
-                .cast("bigint")
-                .alias("d")
-            )
-        )
-        # denom/p are tiny DERIVED frames (no stats) — without the explicit
-        # hint they compile to SortMergeJoin (CLAUDE.md trap, seen in the
-        # plan test)
-        praw = (
-            wins.join(F.broadcast(denom), "i")
-            .select("i", F.expr(f"(W * {BT_TERM}) div d").alias("praw"))
-        )
-        tot = praw.agg(F.sum("praw").cast("bigint").alias("tot"))
-        p = (
-            praw.crossJoin(F.broadcast(tot))
-            .crossJoin(F.broadcast(target))
-            .select("i", F.expr("(praw * target) div tot").cast("bigint").alias("p"))
-            .localCheckpoint(eager=False)
-        )
-    ranked = (
-        wins.join(F.broadcast(p), "i")
-        .select(
-            F.col("i").alias("brand"),
-            F.col("G").alias("n_games"),
-            F.col("W").alias("n_wins"),
-            F.round(F.col("p").cast("double") / BT_SCALE, 6).alias("strength"),
-            F.col("p").alias("_p"),
-        )
+        d = dict.fromkeys(games, 0)
+        for i, j, n, _ in rows:
+            d[i] += (n * BT_TERM) // (max(p[i], 1) + max(p[j], 1))
+        praw = {i: (wins[i] * BT_TERM) // d[i] for i in games}
+        tot = sum(praw.values())
+        p = {i: (v * target) // tot for i, v in praw.items()}
+    order = sorted(games, key=lambda i: (-p[i], i))
+    ranked = spark.createDataFrame(
+        [(i, games[i], wins[i], p[i], rank) for rank, i in enumerate(order, 1)],
+        "brand string, n_games bigint, n_wins bigint, p bigint, bt_rank int",
     )
-    w = Window.orderBy(F.col("_p").desc(), F.col("brand"))
-    return (
-        ranked.withColumn("bt_rank", F.row_number().over(w))
-        .drop("_p")
-        .orderBy("bt_rank")
+    return ranked.select(
+        "brand",
+        "n_games",
+        "n_wins",
+        F.round(F.col("p").cast("double") / BT_SCALE, 6).alias("strength"),
+        "bt_rank",
     )
 
 

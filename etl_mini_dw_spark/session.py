@@ -21,6 +21,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "etl_mini_dw_spark", cpus: int | None = None) -> SparkSession:
@@ -44,6 +45,9 @@ def get_spark(app_name: str = "etl_mini_dw_spark", cpus: int | None = None) -> S
         # events.parquet carries TIMESTAMP(NANOS) which the Spark reader
         # rejects; read as long and convert at the typed-ingest layer
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python workers (mapInPandas, applyInPandasWithState) unpickle
+        # functions of this package: let them import it from any cwd
+        .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

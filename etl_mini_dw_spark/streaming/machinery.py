@@ -10,12 +10,10 @@ ext_streaming_left_outer_attribution, min of 3):
   of state size. At the session default of 32 partitions the stream-
   stream left-outer join line reads 24.0 s; at 8 it reads 6.2 s — the
   state here is KB-scale and the extra partitions are pure commit
-  overhead (guide §2.2: fewer, larger partitions). ``SPARK_GRAFT_STREAM_SHUFFLE``
-  parameterizes it (default ``min(8, defaultParallelism)``, scale-
-  adaptive): a production stream with GB-scale state raises it to match
-  state volume — the knob is sized to STATE, not to cluster cores,
-  which is why the local default caps at 8 rather than following
-  $SPARK_GRAFT_CPUS upward.
+  overhead (guide §2.2: fewer, larger partitions). The drive runs at
+  ``min(8, defaultParallelism)`` partitions (scale-adaptive): the count
+  is sized to STATE, not to cluster cores, which is why it caps at 8
+  rather than following $SPARK_GRAFT_CPUS upward.
 - **Scratch placement.** Checkpoint metadata, state deltas and the
   bounded sink are per-run scratch (re-created from the parquet inputs
   every invocation); putting them on a RAM-backed tmpdir removes fsync
@@ -43,18 +41,10 @@ _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
 
 def stream_shuffle_partitions(spark: SparkSession) -> int:
-    """Default: min(8, defaultParallelism) — scale-adaptive, never more
+    """min(8, defaultParallelism) — scale-adaptive, never more
     state stores than cores for the KB-scale fixture state (measured at
     4 cores: 8 partitions 7.6 s vs 4 partitions 5.4 s on the left-outer
-    line, min of 2). Production streams override via the env knob."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env is not None:
-        try:
-            return max(1, int(env))
-        except ValueError as e:
-            raise ValueError(
-                f"SPARK_GRAFT_STREAM_SHUFFLE must be an integer, got {env!r}"
-            ) from e
+    line, min of 2)."""
     return max(1, min(8, spark.sparkContext.defaultParallelism))
 
 

@@ -9,13 +9,14 @@ whose name is in neither place would mean a staged build escaping to an
 untimed region (or silently re-billed when registration order changes —
 the r3 `ext_simhash_sketches` attribution flap).
 
-This test statically extracts every stage name from the package source,
-so adding a stage_memo without declaring its payer fails CI.
+This test statically extracts every stage name from the package source
+(the third argument of each `stage_memo` call, read with `ast`), so
+adding a stage_memo without declaring its payer fails CI.
 """
 
 from __future__ import annotations
 
-import re
+import ast
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parents[1] / "etl_mini_dw_spark"
@@ -60,23 +61,48 @@ PAYERS = {
 }
 
 
-def _declared_stage_names() -> set[str]:
-    """Every literal/f-string stage name passed to stage_memo (incl. the
-    dedup module's `_memo` alias)."""
-    pat = re.compile(
-        r"(?:stage_memo|_memo)\(\s*\n?\s*spark,\s*\n?\s*sf_dir,\s*\n?\s*f?\"([^\"]+)\"",
-        re.MULTILINE,
-    )
-    names: set[str] = set()
+def _stage_name(arg: ast.expr) -> str | None:
+    """A literal stage name, or an f-string's template (``pq_codebook_{m}``);
+    None for any other spelling."""
+    if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+        return arg.value
+    if isinstance(arg, ast.JoinedStr):
+        return "".join(
+            part.value
+            if isinstance(part, ast.Constant)
+            else "{" + ast.unparse(part.value) + "}"
+            for part in arg.values
+        )
+    return None
+
+
+def _stage_memo_calls() -> list[tuple[str, str | None]]:
+    """(site, stage name) for every `stage_memo(...)` call in the package:
+    the name is the call's third argument."""
+    calls = []
     for path in PKG.rglob("*.py"):
-        names.update(pat.findall(path.read_text()))
-    return names
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            callee = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if callee == "stage_memo":
+                arg = node.args[2] if len(node.args) > 2 else None
+                site = f"{path.relative_to(PKG.parent)}:{node.lineno}"
+                calls.append((site, _stage_name(arg) if arg is not None else None))
+    return calls
 
 
 def test_every_stage_memo_has_a_declared_payer():
-    names = _declared_stage_names()
-    assert names, "stage-name extraction regex matched nothing — fix the test"
-    undeclared = names - set(PAYERS)
+    calls = _stage_memo_calls()
+    assert calls, "found no stage_memo call — fix the test"
+    unreadable = [site for site, name in calls if name is None]
+    assert not unreadable, (
+        f"stage_memo call(s) at {unreadable} pass a stage name that is not a "
+        "string literal or f-string third argument — the payer table "
+        "cannot be checked against them"
+    )
+    undeclared = {name for _, name in calls} - set(PAYERS)
     assert not undeclared, (
         f"stage_memo name(s) {sorted(undeclared)} have no declared bench "
         "payer — add them to PAYERS here and to BENCH_NOTES.md's "

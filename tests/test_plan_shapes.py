@@ -461,17 +461,6 @@ def test_penny_allocation_windows_are_order_keyed(spark, sf_dir):
     assert re.search(r"windowspecdefinition\(l_orderkey#\d+", plan), plan[:3000]
 
 
-def test_bradley_terry_strength_maps_broadcast(spark, sf_dir):
-    """Every MM round joins the ≤|brands|-row strength frames back as
-    broadcasts; the dim join is broadcast; no cartesian outside the
-    1-row scalar hoists."""
-    from etl_mini_dw_spark.plans import preference
-
-    plan = _plan(preference.bradley_terry_brands(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") >= 2, plan[:2000]
-    assert "CartesianProduct" not in plan
-
-
 def test_conformal_model_join_is_broadcast(spark, sf_dir):
     """The |quantity|-row predictor joins the corpus as a broadcast;
     residual histograms aggregate in two phases (map-side partials)."""
@@ -625,6 +614,8 @@ def test_ann_brute_force_windows_are_shard_pruned(spark, sf_dir):
         (simsearch._ann_hamming_topk_build, "query_id"),
         (pq._ann_pq_topk_build, "query_id"),
         (pq.ann_pq_refined_topk, "query_id"),
+        # the MMR pool, before the driver collects it for the rounds
+        (simsearch._mmr_pool, "query_id"),
         # the two RRF arms, pinned pre-checkpoint (both are stage-
         # memoized since r09; the fusion consumes their LogicalRDDs)
         (retrieval._bm25_topk_build, "q_doc"),

@@ -11,8 +11,7 @@ import os
 from etl_mini_dw_spark.streaming import machinery
 
 
-def test_stream_shuffle_sets_and_restores(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
+def test_stream_shuffle_sets_and_restores(spark):
     before = spark.conf.get("spark.sql.shuffle.partitions")
     expect = max(1, min(8, spark.sparkContext.defaultParallelism))
     with machinery.stream_shuffle(spark):
@@ -30,11 +29,6 @@ def test_stream_shuffle_restores_on_error(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_stream_shuffle_env_override(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
-    assert machinery.stream_shuffle_partitions(spark) == 3
-
-
 def test_scratch_dir_env_override(monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_STREAM_TMP", str(tmp_path))
     d = machinery.scratch_dir("unit_test_")
@@ -45,23 +39,6 @@ def test_scratch_dir_env_override(monkeypatch, tmp_path):
 def test_scratch_dir_unique_per_call(monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_STREAM_TMP", str(tmp_path))
     assert machinery.scratch_dir("a_") != machinery.scratch_dir("a_")
-
-
-def test_stream_shuffle_env_clamped_to_one(spark, monkeypatch):
-    # ADVICE r9: '0' or a negative value must not set an invalid
-    # spark.sql.shuffle.partitions
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "0")
-    assert machinery.stream_shuffle_partitions(spark) == 1
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "-4")
-    assert machinery.stream_shuffle_partitions(spark) == 1
-
-
-def test_stream_shuffle_env_non_integer_raises_clear(spark, monkeypatch):
-    import pytest
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "lots")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_SHUFFLE"):
-        machinery.stream_shuffle_partitions(spark)
 
 
 def test_scratch_dir_skips_full_shm(monkeypatch, tmp_path):
