@@ -154,9 +154,7 @@ class Warehouse:
             }
             dd = self.store.read(self.spark, "dim_date")
             delta = fact.src_sales(self.spark, self.sf_dir, wm, as_of=as_of)
-            resolved = fact._with_datekey(fact.resolve_dimensions(delta, dims), dd).select(
-                *fact.FACT_COLS
-            )
+            resolved = fact.resolve_facts(delta, dims, dd)
             year = (F.col("sales_order_datekey") / 10000).cast("int")
             if not self.store.exists("fact_sales"):
                 # sales_id is key-derived in src_sales — no sequence needed

@@ -223,17 +223,6 @@ def resolve_dimensions(facts: DataFrame, dims: dict[str, DataFrame]) -> DataFram
     return out
 
 
-def _with_datekey(facts: DataFrame, dim_date: DataFrame) -> DataFrame:
-    """Intentional inner DimDate join (drops out-of-horizon facts,
-    `code/SQL_1…sql:1446–1447`); DimDate is broadcast."""
-    dd = dim_date.select(
-        F.col("date_value").alias("_dd_date"), F.col("date_key").alias("sales_order_datekey")
-    )
-    return facts.join(
-        F.broadcast(dd), F.col("order_date").cast("date") == F.col("_dd_date"), "inner"
-    ).drop("_dd_date")
-
-
 FACT_COLS = [
     "sales_id",
     "sales_nk",
@@ -246,6 +235,23 @@ FACT_COLS = [
 ]
 
 
+def resolve_facts(
+    facts: DataFrame, dims: dict[str, DataFrame], dim_date: DataFrame
+) -> DataFrame:
+    """Source sales rows → fact rows: dimension SKs resolved as of each
+    row's edit time, then the date key by an intentional inner DimDate
+    join (drops out-of-horizon facts, `code/SQL_1…sql:1446–1447`;
+    DimDate is broadcast), projected to ``FACT_COLS``."""
+    dd = dim_date.select(
+        F.col("date_value").alias("_dd_date"), F.col("date_key").alias("sales_order_datekey")
+    )
+    return (
+        resolve_dimensions(facts, dims)
+        .join(F.broadcast(dd), F.col("order_date").cast("date") == F.col("_dd_date"), "inner")
+        .select(*FACT_COLS)
+    )
+
+
 def fact_initial(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Initial fact load (`code/SQL_1…sql:804–902`), half-open as-of joins."""
     dims = {
@@ -253,7 +259,7 @@ def fact_initial(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     dd = build_dim_date(spark, spec.DATE_START, spec.DATE_END)
     facts = src_sales(spark, sf_dir, spec.LOW)
-    return _with_datekey(resolve_dimensions(facts, dims), dd).select(*FACT_COLS)
+    return resolve_facts(facts, dims, dd)
 
 
 def fact_initial_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,12 +378,8 @@ def fact_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memo is the in-session analog of reading that table back)
     def build_state0() -> DataFrame:
         f0 = src_sales(spark, sf_dir, spec.LOW, as_of=spec.FACT_SPLIT)
-        return (
-            _with_datekey(resolve_dimensions(f0, dims), dd)
-            .select(*FACT_COLS)
-            # r10: eager again (same revert + evidence as scd2.dim_two_phase)
-            .localCheckpoint()
-        )
+        # r10: eager again (same revert + evidence as scd2.dim_two_phase)
+        return resolve_facts(f0, dims, dd).localCheckpoint()
 
     state0 = stage_memo(spark, sf_dir, "fact_state0", build_state0)
 
@@ -389,5 +391,4 @@ def fact_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # phase 2 delta, resolved at the *new* edit time (late-dim repair path)
     delta = src_sales(spark, sf_dir, wm)
-    resolved = _with_datekey(resolve_dimensions(delta, dims), dd).select(*FACT_COLS)
-    return fact_increment(state0, resolved, dims)
+    return fact_increment(state0, resolve_facts(delta, dims, dd), dims)

@@ -12,8 +12,8 @@ shuffle into a one-time layout cost — the same contract as a
 co-partitioned table pair in a warehouse.
 
 Local demo: N_BUCKETS=8 catalog tables (re)built once per (session,
-sf_dir) via a memo, then a revenue-per-priority aggregate over the
-bucket-local join. The aggregate itself still shuffles (group key ≠
+sf_dir) through ``stage_memo``, then a revenue-per-priority aggregate
+over the bucket-local join. The aggregate itself still shuffles (group key ≠
 bucket key) — the point is the join stage, locked in by the plan-shape
 test (tests/test_plan_shapes.py::test_bucketed_join_no_exchange).
 """
@@ -25,17 +25,15 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_mini_dw_spark.sources.tables import typed_table
+from etl_mini_dw_spark.sources.tables import stage_memo, typed_table
 
 N_BUCKETS = 8
-
-_BUCKET_MEMO: dict[tuple, tuple[str, str]] = {}
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Catalog names of bucketed lineitem/orders copies for sf_dir."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUCKET_MEMO:
+
+    def build() -> tuple[str, str]:
         tag = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_")
         li_name, ord_name = f"li_bkt_{tag}", f"ord_bkt_{tag}"
         # idempotent rebuild: a previous session may have left the managed
@@ -57,8 +55,9 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         ).write.bucketBy(N_BUCKETS, "o_orderkey").sortBy("o_orderkey").mode(
             "overwrite"
         ).format("parquet").saveAsTable(ord_name)
-        _BUCKET_MEMO[key] = (li_name, ord_name)
-    return _BUCKET_MEMO[key]
+        return li_name, ord_name
+
+    return stage_memo(spark, sf_dir, "bucketed_tables", build)
 
 
 def bucketed_join_df(spark: SparkSession, sf_dir: str) -> DataFrame:

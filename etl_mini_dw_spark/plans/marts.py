@@ -36,14 +36,6 @@ def mart_fact(fact_df: DataFrame) -> DataFrame:
     )
 
 
-def register_mart_views(spark, dims: dict[str, DataFrame], fact_df: DataFrame) -> None:
-    from etl_mini_dw_spark import fixtures_spec as spec
-
-    for key, df in dims.items():
-        mart_dim_current(df, spec.DIMS[key]).createOrReplaceTempView(f"mart_{key}")
-    mart_fact(fact_df).createOrReplaceTempView("mart_fact_sales")
-
-
 def fact_order_lifecycle(spark, sf_dir: str) -> DataFrame:
     """Accumulating-snapshot fact: one row per order carrying its
     lifecycle milestones (placed → first ship → last ship) and the

@@ -24,6 +24,9 @@ downstream operator automatically benefits (check ``PushedFilters`` /
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import Any, TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,16 +79,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_STAGE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+T = TypeVar("T")
+
+_STAGE_MEMO: dict[tuple[str, str, str], Any] = {}
 
 
-def stage_memo(spark: SparkSession, sf_dir: str, stage: str, build) -> DataFrame:
-    """One shared (lazily checkpointed) staged frame per (session, sf-dir).
+def stage_memo(spark: SparkSession, sf_dir: str, stage: str, build: Callable[[], T]) -> T:
+    """One shared staged value per (session, sf-dir): the package's only memo.
 
     The in-session analog of a staged intermediate table: expensive
     upstream stages (shingle digests, the fact edit-history union) are
-    built once and every consumer plan references the materialized
-    blocks. Stage names are global — keep them unique across modules.
+    built once — usually a lazily checkpointed frame, or the catalog
+    names of tables the build wrote — and every consumer plan references
+    the materialized result. Stage names are global — keep them unique
+    across modules.
     """
     key = (spark.sparkContext.applicationId, sf_dir, stage)
     if key not in _STAGE_MEMO:

@@ -5,12 +5,14 @@ high-water mark, not event time. This module adds the real thing:
 
 - Batch-shaped window analytics (tumbling / sliding / session / top-k)
   over ``events``, each with a DuckDB oracle mirror.
-- A genuine Structured Streaming pipeline (``readStream`` over the same
-  parquet, event-time watermark, tumbling window, ``foreachBatch``
-  parquet sink) whose *result* is returned as a lazy batch DataFrame
-  over the sink files — so even the streaming path is oracle-checked
-  against the batch SQL semantics (complete mode ⇒ batch-equivalent)
-  and no result row is ever materialized on the driver.
+- Fourteen streaming topologies (watermarked windows, dedup, stream-
+  static and stream-stream joins, sessions, sketch maintenance), each a
+  real Structured Streaming query over the same parquet. The replay
+  source, the drive and the two sinks live in ``machinery``; each
+  topology here is only its plan and its read-back of the sink, a lazy
+  batch DataFrame — so even the streaming path is oracle-checked
+  against the batch SQL semantics and no result row is ever
+  materialized on the driver.
 
 Scale notes: tumbling/sliding aggregation is one shuffle keyed by
 (window, type); sessionization shuffles by user — the natural key at any
@@ -23,12 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_mini_dw_spark.sources.tables import (
-    _ensure_session_confs,
-    events_ts_to_timestamp,
-    typed_table,
+from etl_mini_dw_spark.sources.tables import events_ts_to_timestamp, typed_table
+from etl_mini_dw_spark.streaming.machinery import (
+    merge_sink,
+    parquet_sink,
+    replay_events,
+    scratch_dir,
 )
-from etl_mini_dw_spark.streaming.machinery import scratch_dir, stream_shuffle
 
 SESSION_GAP_MIN = 30
 TOP_K_USERS = 10
@@ -165,27 +168,16 @@ WHERE rank <= {TOP_K_USERS}
 def streaming_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME tumbling aggregation as a real Structured Streaming job.
 
-    readStream over the events parquet (one file per trigger), 10-minute
-    event-time watermark, complete-mode ``foreachBatch`` parquet sink;
-    drives to completion synchronously and returns a LAZY read of the
-    sink directory — value-identical to the batch oracle. No result row
-    ever passes through the driver: each micro-batch overwrites the sink
-    with the full updated aggregate (complete mode ⇒ overwrite is the
-    correct idempotent write), executed as a distributed batch job. Swap
+    The events replay (one file per trigger), 10-minute event-time
+    watermark, complete-mode parquet sink, returned as a LAZY read of the
+    sink directory — value-identical to the batch oracle. Each
+    micro-batch overwrites the sink with the full updated aggregate
+    (complete mode ⇒ overwrite is the correct idempotent write). Swap
     source to Kafka + sink path to the warehouse and this is the
     production topology.
     """
-    path = f"{sf_dir}/events.parquet"
-    # stream source carries the RAW parquet schema (ts dtype varies by
-    # testdata generation); typed-ingest conversions applied on the stream.
-    # The file source wants a directory → stream the sf dir with a glob.
-    _ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        replay_events(spark, sf_dir)
         .transform(events_ts_to_timestamp)
         .withColumn("value", F.col("value").cast("decimal(14,2)"))
     )
@@ -203,26 +195,7 @@ def streaming_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-
-    out_dir = scratch_dir(prefix="stream_tumbling_out_")
-    ckpt_dir = scratch_dir(prefix="stream_tumbling_ckpt_")
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        # complete mode: every batch carries the full aggregate → overwrite
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    with stream_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(_write_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.read.schema(agg.schema).parquet(out_dir)
+    return parquet_sink(agg, "complete")
 
 
 def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,37 +254,13 @@ def streaming_dedup_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
     global-DISTINCT oracle on bounded replay — so the gate pins the
     exact variant.
     """
-    _ensure_session_confs(spark)
-    path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        replay_events(spark, sf_dir)
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-
-    out_dir = scratch_dir(prefix="stream_dedup_out_")
-    ckpt_dir = scratch_dir(prefix="stream_dedup_ckpt_")
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        # append mode: each batch carries only newly-first-seen keys
-        batch_df.write.mode("append").parquet(out_dir)
-
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(_write_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    deduped = spark.read.schema(stream.schema).parquet(out_dir)
+    # append mode: each batch carries only newly-first-seen keys
+    deduped = parquet_sink(stream, "append")
     return deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_users"))
 
 
@@ -335,15 +284,8 @@ def streaming_enriched_segment_counts(spark: SparkSession, sf_dir: str) -> DataF
     Complete-mode foreachBatch parquet sink; nothing passes through the
     driver.
     """
-    _ensure_session_confs(spark)
-    path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("user_id", F.col("value").cast("decimal(14,2)").alias("value"))
+    stream = replay_events(spark, sf_dir).select(
+        "user_id", F.col("value").cast("decimal(14,2)").alias("value")
     )
     segments = (
         spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -356,25 +298,7 @@ def streaming_enriched_segment_counts(spark: SparkSession, sf_dir: str) -> DataF
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value").cast("decimal(38,2)").cast("double").alias("total_value"),
     )
-
-    out_dir = scratch_dir(prefix="stream_enrich_out_")
-    ckpt_dir = scratch_dir(prefix="stream_enrich_ckpt_")
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    with stream_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(_write_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.read.schema(agg.schema).parquet(out_dir)
+    return parquet_sink(agg, "complete")
 
 
 STREAMING_ENRICHED_SQL = """
@@ -405,18 +329,13 @@ def streaming_click_purchase_attribution(spark: SparkSession, sf_dir: str) -> Da
     On bounded single-batch replay nothing is late, so the result equals
     the batch interval join the oracle runs.
     """
-    _ensure_session_confs(spark)
-    path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
+    # one source feeds both sides; each side keeps its own watermark and
+    # join state
+    events = replay_events(spark, sf_dir).transform(events_ts_to_timestamp)
 
     def _side(event_type: str, alias: str):
         return (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .transform(events_ts_to_timestamp)
-            .filter(F.col("event_type") == event_type)
+            events.filter(F.col("event_type") == event_type)
             .selectExpr(
                 f"user_id AS {alias}_user", f"ts AS {alias}_ts", f"event_id AS {alias}_id"
             )
@@ -431,25 +350,7 @@ def streaming_click_purchase_attribution(spark: SparkSession, sf_dir: str) -> Da
             f"p_ts <= c_ts + INTERVAL {ATTRIBUTION_WINDOW_MIN} MINUTES"
         ),
     )
-
-    out_dir = scratch_dir(prefix="stream_attr_out_")
-    ckpt_dir = scratch_dir(prefix="stream_attr_ckpt_")
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    with stream_shuffle(spark):
-        q = (
-            pairs.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(_write_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    joined = spark.read.schema(pairs.schema).parquet(out_dir)
+    joined = parquet_sink(pairs, "append")
     return joined.groupBy(
         F.date_format("c_ts", "yyyy-MM-dd").alias("click_day")
     ).agg(F.count(F.lit(1)).alias("n_attributed"))
@@ -481,49 +382,15 @@ def streaming_merge_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     this bounded-replay demo — production keys state by (user, window)
     with a watermark, or sets a state TTL.
     """
-    _ensure_session_confs(spark)
-
-    from etl_mini_dw_spark.etl.store import ParquetStore
-
-    path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .withColumn("value", F.col("value").cast("decimal(14,2)"))
+    stream = replay_events(spark, sf_dir).withColumn(
+        "value", F.col("value").cast("decimal(14,2)")
     )
     totals = stream.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value").cast("decimal(38,2)").cast("double").alias("total_value"),
     )
-    store = ParquetStore(scratch_dir(prefix="stream_merge_store_"))
-    ckpt_dir = scratch_dir(prefix="stream_merge_ckpt_")
-
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        # update mode ⇒ the batch holds only changed users; MERGE them over
-        store.merge_upsert(spark, batch_df, "user_totals", keys=["user_id"])
-
-    # batch-id replay guard + keyed MERGE = exactly-once effect (see
-    # IdempotentForeachBatch: streaming replays the last batch on restart)
-    from etl_mini_dw_spark.etl.store import IdempotentForeachBatch
-
-    sink = IdempotentForeachBatch(
-        scratch_dir(prefix="stream_merge_commits_"), _merge_batch
-    )
-    with stream_shuffle(spark):
-        q = (
-            totals.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return store.read(spark, "user_totals")
+    # update mode ⇒ each batch holds only changed users; MERGE them over
+    return merge_sink(totals, ["user_id"])
 
 
 STREAMING_MERGE_TOTALS_SQL = """
@@ -549,15 +416,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale: state is bounded by (active users × open sessions within
     the watermark horizon); swap the file source for Kafka unchanged.
     """
-    _ensure_session_confs(spark)
-
-    path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        replay_events(spark, sf_dir)
         .transform(events_ts_to_timestamp)
         .withColumn("value", F.col("value").cast("decimal(14,2)"))
     )
@@ -576,25 +436,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    out_dir = scratch_dir(prefix="stream_session_out_")
-    ckpt_dir = scratch_dir(prefix="stream_session_ckpt_")
-
-    def _append_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        # append mode ⇒ each batch carries only newly-closed sessions
-        batch_df.write.mode("append").parquet(out_dir)
-
-    with stream_shuffle(spark):
-        q = (
-            sess.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(_append_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.read.schema(sess.schema).parquet(out_dir)
+    # append mode ⇒ each batch carries only newly-closed sessions
+    return parquet_sink(sess, "append")
 
 
 STREAMING_SESSION_SQL = f"""
@@ -648,44 +491,13 @@ def streaming_hll_user_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch estimate, which holds because HLL register-max is
     order/batching-invariant — is pinned by tests/test_approx_sketches.py.
     """
-    _ensure_session_confs(spark)
-
-    from etl_mini_dw_spark.etl.store import IdempotentForeachBatch, ParquetStore
     from etl_mini_dw_spark.plans.sketches import HLL_LGK
 
-    path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    sketches = stream.groupBy("event_type").agg(
+    sketches = replay_events(spark, sf_dir).groupBy("event_type").agg(
         F.hll_sketch_agg("user_id", F.lit(HLL_LGK)).alias("user_sketch"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    store = ParquetStore(scratch_dir(prefix="stream_hll_store_"))
-    ckpt_dir = scratch_dir(prefix="stream_hll_ckpt_")
-
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        store.merge_upsert(spark, batch_df, "type_sketches", keys=["event_type"])
-
-    sink = IdempotentForeachBatch(
-        scratch_dir(prefix="stream_hll_commits_"), _merge_batch
-    )
-    with stream_shuffle(spark):
-        q = (
-            sketches.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return store.read(spark, "type_sketches").select(
+    return merge_sink(sketches, ["event_type"]).select(
         "event_type",
         F.hll_sketch_estimate("user_sketch").alias("approx_users"),
         "n_events",
@@ -771,18 +583,12 @@ def streaming_left_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     check. Sink is append-mode ``foreachBatch`` → parquet; the per-day
     rollup is a lazy batch aggregate over the sink.
     """
-    _ensure_session_confs(spark)
     landing = _sentinel_landing_dir(spark, sf_dir)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    events = replay_events(spark, sf_dir, landing).transform(events_ts_to_timestamp)
 
     def _side(event_type: str, alias: str):
         return (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(landing)
-            .transform(events_ts_to_timestamp)
-            .withWatermark("ts", "0 seconds")
+            events.withWatermark("ts", "0 seconds")
             .filter(F.col("event_type") == event_type)
             .selectExpr(
                 f"user_id AS {alias}_user", f"ts AS {alias}_ts", f"event_id AS {alias}_id"
@@ -798,25 +604,7 @@ def streaming_left_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFr
         ),
         "leftOuter",
     )
-
-    out_dir = scratch_dir(prefix="stream_louter_out_")
-    ckpt_dir = scratch_dir(prefix="stream_louter_ckpt_")
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    with stream_shuffle(spark):
-        q = (
-            pairs.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(_write_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    joined = spark.read.schema(pairs.schema).parquet(out_dir)
+    joined = parquet_sink(pairs, "append", landing)
     return (
         joined.filter(F.col("c_user") >= 0)  # drop sentinel rows
         .groupBy(F.date_format("c_ts", "yyyy-MM-dd").alias("click_day"))
@@ -862,38 +650,15 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     semantic this variant trades away, is pinned by the UNBOUNDED
     variant's gate instead.
     """
-    _ensure_session_confs(spark)
     landing = _sentinel_landing_dir(spark, sf_dir)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing)
+        replay_events(spark, sf_dir, landing)
         .transform(events_ts_to_timestamp)
         .withWatermark("ts", "1 hour")
         .select("user_id", "event_type", "ts")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
-
-    out_dir = scratch_dir(prefix="stream_dedup_wm_out_")
-    ckpt_dir = scratch_dir(prefix="stream_dedup_wm_ckpt_")
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(_write_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    deduped = spark.read.schema(stream.schema).parquet(out_dir)
+    deduped = parquet_sink(stream, "append", landing)
     return (
         deduped.filter(F.col("user_id") >= 0)  # drop sentinel rows
         .groupBy("event_type")
@@ -923,8 +688,6 @@ def streaming_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_mini_dw_spark import fixtures_spec as spec
     from etl_mini_dw_spark.operators import scd2
 
-    _ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     dim = scd2.dim_initial(spark, sf_dir, spec.DIMS["customer"]).select(
         F.col("customer_nk").alias("nk"),
         F.col("customer_category_name").alias("category"),
@@ -932,10 +695,7 @@ def streaming_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "active_to",
     )
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        replay_events(spark, sf_dir)
         .transform(events_ts_to_timestamp)
         .withColumn("eff_ts", F.expr(f"ts - INTERVAL {ASOF_SHIFT_DAYS} DAYS"))
         .join(
@@ -946,25 +706,7 @@ def streaming_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("event_id", "user_id", "category")
     )
-
-    out_dir = scratch_dir(prefix="stream_asof_out_")
-    ckpt_dir = scratch_dir(prefix="stream_asof_ckpt_")
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(_write_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    enriched = spark.read.schema(stream.schema).parquet(out_dir)
+    enriched = parquet_sink(stream, "append")
     return enriched.groupBy("category").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("user_id").cast("bigint").alias("n_users"),
@@ -1017,18 +759,10 @@ def streaming_cms_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact activity against the STREAMED grid: (user_id, exact_count,
     cms_estimate, overestimate), estimate = min over d probed cells.
     """
-    _ensure_session_confs(spark)
-
-    from etl_mini_dw_spark.etl.store import IdempotentForeachBatch, ParquetStore
     from etl_mini_dw_spark.plans.sketches import CMS_D, _cms_bucket_spark
 
     landing = _split_landing_dir(sf_dir, CMS_STREAM_BATCHES)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    stream = replay_events(spark, sf_dir, landing)
     cells_expr = (
         "array("
         + ", ".join(
@@ -1046,29 +780,8 @@ def streaming_cms_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    store = ParquetStore(scratch_dir(prefix="stream_cms_store_"))
-    ckpt_dir = scratch_dir(prefix="stream_cms_ckpt_")
-
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        # update mode ⇒ cumulative value per touched cell; MERGE overwrites
-        store.merge_upsert(spark, batch_df, "cms_grid", keys=["r", "bucket"])
-
-    sink = IdempotentForeachBatch(
-        scratch_dir(prefix="stream_cms_commits_"), _merge_batch
-    )
-    with stream_shuffle(spark):
-        q = (
-            grid.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    sketch = store.read(spark, "cms_grid")
+    # update mode ⇒ cumulative value per touched cell; MERGE overwrites
+    sketch = merge_sink(grid, ["r", "bucket"], landing)
     exact = (
         typed_table(spark, sf_dir, "events")
         .select(F.col("user_id"), F.md5(F.col("user_id").cast("string")).alias("h"))
@@ -1156,23 +869,12 @@ def streaming_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics of the batch table: (quantile, rank, exact_c, est_c,
     rel_err), with the DDSketch guarantee rel_err ∈ (−2^−5, 0].
     """
-    _ensure_session_confs(spark)
-
-    from etl_mini_dw_spark.etl.store import IdempotentForeachBatch, ParquetStore
-    from etl_mini_dw_spark.plans.sketches import (
-        HDR_QSPECS,
-        _hdr_lb_expr,
-    )
+    from etl_mini_dw_spark.plans.sketches import HDR_QSPECS, _hdr_lb_expr
 
     landing = _split_landing_dir(sf_dir, HDR_STREAM_BATCHES)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
     hist = (
-        stream.select(
+        replay_events(spark, sf_dir, landing)
+        .select(
             (F.col("value").cast("decimal(14,2)") * 100)
             .cast("bigint")
             .alias("v")
@@ -1181,28 +883,7 @@ def streaming_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.expr(_hdr_lb_expr("v")).alias("lb"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    store = ParquetStore(scratch_dir(prefix="stream_hdr_store_"))
-    ckpt_dir = scratch_dir(prefix="stream_hdr_ckpt_")
-
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        store.merge_upsert(spark, batch_df, "hdr_hist", keys=["lb"])
-
-    sink = IdempotentForeachBatch(
-        scratch_dir(prefix="stream_hdr_commits_"), _merge_batch
-    )
-    with stream_shuffle(spark):
-        q = (
-            hist.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    sketch = store.read(spark, "hdr_hist")
+    sketch = merge_sink(hist, ["lb"], landing)
     wcum = Window.orderBy("lb").rowsBetween(Window.unboundedPreceding, 0)
     cum_hist = sketch.select("lb", F.sum("cnt").over(wcum).alias("cum"))
     vals = (
@@ -1317,9 +998,6 @@ def streaming_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``BLOOM_ABSENT_PROBES`` user ids beyond the id range (the measured
     false-positive rate): (probe_kind, n_probes, n_positive, rate).
     """
-    _ensure_session_confs(spark)
-
-    from etl_mini_dw_spark.etl.store import IdempotentForeachBatch, ParquetStore
     from etl_mini_dw_spark.functions.sampling import BLOOM_BITS, BLOOM_WORD
 
     h1 = "CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 7), 16, 10) AS BIGINT)"
@@ -1350,36 +1028,9 @@ def streaming_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     landing = _split_landing_dir(sf_dir, BLOOM_STREAM_BATCHES)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    filt = word_bits(stream.select("user_id"))
-    store = ParquetStore(scratch_dir(prefix="stream_bloom_store_"))
-    ckpt_dir = scratch_dir(prefix="stream_bloom_ckpt_")
-
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        # update mode emits the cumulative bit_or of every touched word
-        store.merge_upsert(spark, batch_df, "bloom_words", keys=["word"])
-
-    sink = IdempotentForeachBatch(
-        scratch_dir(prefix="stream_bloom_commits_"), _merge_batch
-    )
-    with stream_shuffle(spark):
-        q = (
-            filt.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    sketch = store.read(spark, "bloom_words")
+    filt = word_bits(replay_events(spark, sf_dir, landing).select("user_id"))
+    # update mode emits the cumulative bit_or of every touched word
+    sketch = merge_sink(filt, ["word"], landing)
     ev = typed_table(spark, sf_dir, "events")
     present = (
         ev.groupBy("user_id")

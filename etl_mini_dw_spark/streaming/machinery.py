@@ -1,41 +1,51 @@
-"""Shared micro-batch machinery knobs (optimization round r09).
+"""The bounded-replay streaming protocol, written once.
 
-Two costs dominate the bounded-replay streaming fixtures at bench scale,
-both machinery, neither the computation itself (measured in isolation,
+Every streaming topology replays the events parquet (or a landing dir
+built from it) through a real Structured Streaming query, drives it to
+completion synchronously and returns a lazy batch read of what its sink
+wrote. This module owns every step of that protocol; a topology keeps
+only its own plan and its own read-back:
+
+- ``replay_events``: the events file source, one file per trigger;
+- ``drive``: checkpoint dir, state-sized shuffle partitions,
+  start → process all available → stop, and removal of the query's own
+  scratch (checkpoint, replay-guard markers, landing dir) once it
+  stops, also after an error;
+- ``parquet_sink`` (complete mode overwrites, append mode appends) and
+  ``merge_sink`` (exactly-once keyed MERGE), the two sinks built on it.
+
+Two costs dominate the drive at bench scale, both machinery, neither the
+computation itself (measured in isolation on
 ext_streaming_left_outer_attribution, min of 3):
 
 - **State-store partition count.** Every stateful operator commits one
-  state store per shuffle partition per micro-batch (delta file + commit
-  + maintenance), so the per-batch floor is O(partitions), independent
-  of state size. At the session default of 32 partitions the stream-
-  stream left-outer join line reads 24.0 s; at 8 it reads 6.2 s — the
-  state here is KB-scale and the extra partitions are pure commit
-  overhead (guide §2.2: fewer, larger partitions). The drive runs at
-  ``min(8, defaultParallelism)`` partitions (scale-adaptive): the count
-  is sized to STATE, not to cluster cores, which is why it caps at 8
-  rather than following $SPARK_GRAFT_CPUS upward.
-- **Scratch placement.** Checkpoint metadata, state deltas and the
-  bounded sink are per-run scratch (re-created from the parquet inputs
-  every invocation); putting them on a RAM-backed tmpdir removes fsync
-  stalls (6.2 s → 4.7 s on the same line). ``SPARK_GRAFT_STREAM_TMP``
-  overrides; default prefers ``/dev/shm`` when writable, else the
-  system tempdir. A production deployment points this at the durable
-  checkpoint volume — durability of a bench-scoped ephemeral checkpoint
-  is not a property the fixture needs.
+  state store per shuffle partition per micro-batch, so the per-batch
+  floor is O(partitions), independent of state size: 24.0 s at 32
+  partitions, 6.2 s at 8. The drive runs at ``min(8,
+  defaultParallelism)`` partitions — sized to the KB-scale state, not
+  to cluster cores.
+- **Scratch placement.** Checkpoints, state deltas and sinks are per-run
+  scratch re-created from the parquet inputs every invocation; a
+  RAM-backed tmpdir removes fsync stalls (6.2 s → 4.7 s on the same
+  line). ``SPARK_GRAFT_STREAM_TMP`` overrides the base; a production
+  deployment points it at the durable checkpoint volume.
 
-Values are unchanged by construction: partition count and scratch
-location never appear in any emitted row, and every run still computes
-from the parquet inputs (tests/test_oracle_parity.py re-checked).
+Neither partition count nor scratch location appears in any emitted row.
 """
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
+import shutil
 import tempfile
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from etl_mini_dw_spark.etl.store import IdempotentForeachBatch, ParquetStore
+from etl_mini_dw_spark.sources.tables import _ensure_session_confs
 
 _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
@@ -61,6 +71,91 @@ def stream_shuffle(spark: SparkSession) -> Iterator[None]:
         spark.conf.set(_SHUFFLE_KEY, before)
 
 
+def replay_events(spark: SparkSession, sf_dir: str, landing: str | None = None) -> DataFrame:
+    """The events file source at one file per trigger: the sf dir's
+    ``events.parquet``, or every ``*.parquet`` of a ``landing`` dir.
+
+    The source carries the RAW parquet schema (the ts dtype varies by
+    testdata generation); topologies chain the typed-ingest conversions
+    they need. The file source wants a directory, hence the glob."""
+    _ensure_session_confs(spark)
+    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return (
+        spark.readStream.schema(raw_schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "*.parquet" if landing else "events.parquet")
+        .parquet(landing or sf_dir)
+    )
+
+
+def drive(
+    df: DataFrame,
+    mode: str,
+    batch_fn: Callable[[DataFrame, int], None],
+    *owned: str | None,
+) -> None:
+    """Run ``df`` in output ``mode`` through ``foreachBatch(batch_fn)``
+    until every available file is processed, then stop it.
+
+    The checkpoint dir and the ``owned`` dirs (replay-guard markers, a
+    landing dir) belong to this one query and are removed once it stops,
+    whether it finished or raised."""
+    spark = df.sparkSession
+    ckpt = scratch_dir(prefix="stream_ckpt_")
+    try:
+        with stream_shuffle(spark):
+            q = (
+                df.writeStream.outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .foreachBatch(batch_fn)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+    finally:
+        for d in (ckpt, *owned):
+            if d:
+                shutil.rmtree(d, ignore_errors=True)
+
+
+def parquet_sink(df: DataFrame, mode: str, landing: str | None = None) -> DataFrame:
+    """Drive ``df`` into a parquet dir and return a lazy read of it.
+
+    Complete mode: every batch carries the full result → overwrite.
+    Append mode: every batch carries only new rows → append. Each batch
+    is a distributed write; no result row passes through the driver."""
+    out = scratch_dir(prefix="stream_sink_")
+    write_mode = "overwrite" if mode == "complete" else "append"
+
+    def _write(batch_df: DataFrame, _batch_id: int) -> None:
+        batch_df.write.mode(write_mode).parquet(out)
+
+    drive(df, mode, _write, landing)
+    return df.sparkSession.read.schema(df.schema).parquet(out)
+
+
+def merge_sink(df: DataFrame, keys: list[str], landing: str | None = None) -> DataFrame:
+    """Drive update-mode ``df`` into a stored table by keyed MERGE and
+    return the table.
+
+    Each batch carries the new cumulative row of every key it touched;
+    ``merge_upsert`` replaces those keys, so the table always holds the
+    latest row per key. The batch-id replay guard
+    (``IdempotentForeachBatch``) plus the keyed MERGE give an
+    exactly-once effect across restarts."""
+    spark = df.sparkSession
+    store = ParquetStore(scratch_dir(prefix="stream_store_"))
+    commits = scratch_dir(prefix="stream_commits_")
+
+    def _merge(batch_df: DataFrame, _batch_id: int) -> None:
+        store.merge_upsert(spark, batch_df, "merged", keys=keys)
+
+    drive(df, "update", IdempotentForeachBatch(commits, _merge), commits, landing)
+    return store.read(spark, "merged")
+
+
 # Minimum free bytes before /dev/shm is considered usable scratch: a
 # bounded-replay fixture round-trips the landing copy + checkpoint +
 # sink (tens of MB at bench scale); 1 GiB of headroom keeps a Docker
@@ -83,17 +178,28 @@ def _shm_usable(path: str = "/dev/shm") -> bool:
 # ``SPARK_GRAFT_STREAM_TMP`` may hold files this module did not create.
 _OWNED_SUBDIR = "etl_mini_dw_scratch"
 
+# Every dir scratch_dir made in this process; removed at interpreter exit.
+_CREATED: list[str] = []
+
+
+@atexit.register
+def _remove_created() -> None:
+    for d in _CREATED:
+        shutil.rmtree(d, ignore_errors=True)
+
 
 def scratch_dir(prefix: str) -> str:
-    """Per-run scratch dir (checkpoints, bounded sinks, landing dirs).
+    """Per-run scratch dir (checkpoints, sinks, stores, landing dirs).
 
     Prefers RAM-backed ``/dev/shm`` only when it has ≥1 GiB free
     (ADVICE r9: a small or full tmpfs must fall back to the system
     tempdir rather than ENOSPC mid-query); ``SPARK_GRAFT_STREAM_TMP``
     overrides unconditionally. Either base gets the run's dir inside
-    ``_OWNED_SUBDIR``. Callers remove their scratch on success; a
-    crashed run's leftovers are bounded by the per-run mkdtemp and
-    swept by ``_purge_stale`` or the OS tmpfs lifecycle."""
+    ``_OWNED_SUBDIR``. ``drive`` removes a query's checkpoint, markers
+    and landing dir when the query stops; sink and store dirs stay while
+    the returned lazy frames may read them, and every dir made here is
+    removed at interpreter exit. A killed process's leftovers are swept
+    by ``_purge_stale`` once a day old."""
     base = os.environ.get("SPARK_GRAFT_STREAM_TMP")
     if base is None and _shm_usable():
         base = "/dev/shm"
@@ -101,21 +207,23 @@ def scratch_dir(prefix: str) -> str:
         owned = os.path.join(base, _OWNED_SUBDIR)
         os.makedirs(owned, exist_ok=True)
         _purge_stale(owned)
-        return tempfile.mkdtemp(prefix=prefix, dir=owned)
-    return tempfile.mkdtemp(prefix=prefix)
+        d = tempfile.mkdtemp(prefix=prefix, dir=owned)
+    else:
+        d = tempfile.mkdtemp(prefix=prefix)
+    _CREATED.append(d)
+    return d
 
 
 _PURGE_AGE_SECONDS = 24 * 3600
 
 
 def _purge_stale(owned: str) -> None:
-    """Best-effort sweep of scratch left by crashed/old runs (ADVICE r9:
+    """Best-effort sweep of scratch left by killed runs (ADVICE r9:
     RAM-backed scratch otherwise accumulates across runs). Only entries
     of the module-owned dir ``owned`` that are older than a day are
     touched, so neither a concurrent live session's scratch (hours at
     most) nor anything else under the base is ever at risk; all errors
     are swallowed — purging is hygiene, never correctness."""
-    import shutil
     import time
 
     try:

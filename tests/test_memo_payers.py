@@ -58,6 +58,8 @@ PAYERS = {
     # ext_ann_recall_report sorts before ext_ivf_multiprobe_topk, so the
     # recall report pays the IVF build
     "ivf_multiprobe_topk": ("query", "ext_ann_recall_report"),
+    # the bucketed catalog tables: the line's only consumer builds them
+    "bucketed_tables": ("query", "ext_bucketed_revenue_by_priority"),
 }
 
 

@@ -100,32 +100,6 @@ def test_fail_logging(spark, sf_dir, tmp_path_factory):
     assert log.filter(F.col("run_status") == "FAIL").count() == 1
 
 
-def test_transform_with_state_topology(spark, sf_dir):
-    """Spark-4 typed-state streaming (transformWithStateInPandas), gated on
-    the protobuf state-server deps (absent in this container -> skip)."""
-    import pytest
-
-    from etl_mini_dw_spark.streaming import stateful
-
-    if not stateful.tws_available():
-        pytest.skip("google.protobuf not importable; transformWithState needs it")
-    got = {
-        r["user_id"]: (r["n_events"], r["total_cents"])
-        for r in stateful.streaming_user_cents_tws(spark, sf_dir).collect()
-    }
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'"
-    )
-    want = {
-        r[0]: (r[1], r[2])
-        for r in con.execute(stateful.STREAMING_TWS_SQL).fetchall()
-    }
-    assert got == want
-
-
 def test_empty_initial_fact_load_then_later_cut(spark, sf_dir, tmp_path_factory):
     """A first load at a cut before the first order has an empty fact
     delta, which writes nothing at all (the incremental branch's rule).
