@@ -5,6 +5,10 @@ store, tracker, run log, and the run-order DAG (dims first, fact ALWAYS
 last; DimDate on demand — the reference's scheduling contract). Loaders
 stay pure; this layer is the only one that performs actions.
 
+Each load calls its table kind's one load step (``scd2.load_step``,
+``fact.load_step``) with the stored state (``None`` when the table is
+missing) and the tracker watermark, then writes the post-state.
+
 Failure semantics (X6): each load computes the full post-state, writes it
 to a temp generation and swaps — on any exception nothing is swapped, a
 FAIL row is appended to the run log, and the error re-raised
@@ -20,6 +24,7 @@ always broadcast).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,11 +35,28 @@ from etl_mini_dw_spark.etl import runlog, tracker
 from etl_mini_dw_spark.etl.store import ParquetStore
 from etl_mini_dw_spark.functions.dimdate import build_dim_date
 from etl_mini_dw_spark.operators import fact, scd2
-from etl_mini_dw_spark.sources import staging
 
 
 def _utcnow() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
+
+
+@contextmanager
+def _stages_fixed_by_plan(spark: SparkSession):
+    """Turn off AQE's runtime empty-relation pruning, which drops a stage
+    only if an empty sibling finished before the stage was submitted, so
+    a load's job count followed stage finish order."""
+    key = "spark.sql.adaptive.optimizer.excludedRules"
+    prev = spark.conf.get(key, None)
+    rule = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+    spark.conf.set(key, f"{prev},{rule}" if prev else rule)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def _tag_counts(post: "DataFrame") -> dict:
@@ -94,7 +116,8 @@ class Warehouse:
             post, write, delta = plan(wm)
             metrics = {}
             if post is not None:
-                post = post.localCheckpoint()  # materialize once: metrics + write + wm
+                with _stages_fixed_by_plan(self.spark):
+                    post = post.localCheckpoint()  # materialize once: metrics + write + wm
                 metrics = _tag_counts(post)
             new_wm = (
                 delta.agg(F.max(wm_col)).first()[0]
@@ -126,71 +149,46 @@ class Warehouse:
         dim = spec.DIMS[dim_key]
 
         def plan(wm: str):
-            staged = staging.delta_extract(self.spark, self.sf_dir, dim, wm, as_of=as_of)
-            if not self.store.exists(dim.name):
-                # initial load, A5 empty-table guard (`code/SQL_1…sql:603`)
-                post = scd2.dim_initial(self.spark, self.sf_dir, dim, as_of=as_of).withColumn(
-                    "change_tag", F.lit("inserted")
-                )
-            else:
-                current = self.store.read(self.spark, dim.name)
-                snapshot = staging.current_snapshot(self.spark, self.sf_dir, dim, as_of=as_of)
-                post = scd2.scd2_increment(
-                    current,
-                    staged,
-                    snapshot,
-                    dim,
-                    now_ts or _utcnow().strftime("%Y-%m-%d %H:%M:%S"),
-                )
-            return post, lambda df: self.store.write(df, dim.name), staged
+            state = self.store.read(self.spark, dim.name) if self.store.exists(dim.name) else None
+            now = now_ts or spec.ts_literal(_utcnow())
+            post, delta = scd2.load_step(self.spark, self.sf_dir, dim, state, wm, as_of, now)
+            return post, lambda df: self.store.write(df, dim.name), delta
 
         return self._run_load(dim.name, "closed", "valid_from", plan)
 
     # --- fact load (X5) ----------------------------------------------------
     def load_fact(self, as_of: str | None = None) -> dict:
+        year = (F.col("sales_order_datekey") / 10000).cast("int")
+
         def plan(wm: str):
-            dims = {
-                fk: self.store.read(self.spark, ds.name) for fk, ds, _ in fact.DIM_LINKS
-            }
+            dims = {fk: self.store.read(self.spark, ds.name) for fk, ds, _ in fact.DIM_LINKS}
             dd = self.store.read(self.spark, "dim_date")
-            delta = fact.src_sales(self.spark, self.sf_dir, wm, as_of=as_of)
-            resolved = fact.resolve_facts(delta, dims, dd)
-            year = (F.col("sales_order_datekey") / 10000).cast("int")
-            if not self.store.exists("fact_sales"):
-                # sales_id is key-derived in src_sales — no sequence needed
-                post = resolved.withColumn("change_tag", F.lit("inserted"))
-                return (
-                    post,
-                    lambda df: self.store.write(
-                        df.withColumn("sales_year", year),
-                        "fact_sales",
-                        partition_by=["sales_year"],
-                    ),
-                    delta,
-                )
             # MERGE-shaped incremental: the delta determines the touched
             # year-partitions (update never moves a row's datekey, so a
             # matched NK lives in its delta row's year); prior state is
             # read with a PARTITION-PRUNED scan and only those partition
             # dirs are swapped — cost ∝ touched partitions, never table
             # size.
-            touched = sorted(
-                r[0] for r in resolved.select(year.alias("y")).distinct().collect()
+            touched: list[int] = []
+
+            def prior(resolved: DataFrame) -> DataFrame:
+                touched.extend(sorted(r[0] for r in resolved.select(year).distinct().collect()))
+                state = self.store.read(self.spark, "fact_sales")
+                return state.filter(F.col("sales_year").isin(touched)).drop("sales_year")
+
+            initial = not self.store.exists("fact_sales")
+            post, delta = fact.load_step(
+                self.spark, self.sf_dir, None if initial else prior, wm, as_of, dims, dd
             )
-            if not touched:
-                return None, None, delta
-            state0 = self.store.read(self.spark, "fact_sales")
-            state0_touched = state0.filter(F.col("sales_year").isin(touched)).drop(
-                "sales_year"
-            )
-            post = fact.fact_increment(state0_touched, resolved, dims)
-            return (
-                post,
-                lambda df: self.store.swap_partitions(
-                    df.withColumn("sales_year", year), "fact_sales", "sales_year", touched
-                ),
-                delta,
-            )
+
+            def write(df: DataFrame) -> None:
+                df = df.withColumn("sales_year", year)
+                if initial:
+                    self.store.write(df, "fact_sales", partition_by=["sales_year"])
+                else:
+                    self.store.swap_partitions(df, "fact_sales", "sales_year", touched)
+
+            return (post if initial or touched else None), write, delta
 
         return self._run_load("fact_sales", "updated", "sales_lasteditedwhen", plan)
 

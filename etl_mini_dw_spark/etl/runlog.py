@@ -8,9 +8,9 @@ table — metrics cost no extra pass over the data.
 
 Scale notes: counters are LongType (a 100 TB fact load overflows int32),
 and each run APPENDS one new parquet file to the log directory — O(1)
-per run, never a read+rewrite of the whole history. The ``run_id``
-max+1 read is a scan of a tiny metadata table (1 row/run), the same
-scalar lookup the reference's IDENTITY performs.
+per run, never a read+rewrite of the whole history. ``run_id`` (the
+reference's IDENTITY) is max+1 over one known-schema ``collect()`` of
+the tiny ``run_id`` column (1 row/run).
 """
 
 from __future__ import annotations
@@ -18,10 +18,9 @@ from __future__ import annotations
 from datetime import datetime
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_mini_dw_spark.etl.store import ParquetStore
+from etl_mini_dw_spark.etl.store import ParquetStore, rows_frame
 
 RUNLOG_TABLE = "etl_run_log"
 
@@ -55,24 +54,9 @@ def append(
     """S8 literal-row append; run_id = IDENTITY replacement (max+1)."""
     next_id = 1
     if store.exists(RUNLOG_TABLE):
-        next_id = (
-            store.read(spark, RUNLOG_TABLE).agg(F.max("run_id")).first()[0] or 0
-        ) + 1
-    row = spark.createDataFrame(
-        [
-            (
-                next_id,
-                run_name,
-                start_time,
-                end_time,
-                rows_inserted,
-                rows_updated,
-                rows_deleted,
-                status,
-                error,
-            )
-        ],
-        SCHEMA,
-    )
+        ids = store.read(spark, RUNLOG_TABLE, SCHEMA).select("run_id").collect()
+        next_id = max((r.run_id for r in ids), default=0) + 1
+    row = (next_id, run_name, start_time, end_time)
+    row += (rows_inserted, rows_updated, rows_deleted, status, error)
     # one new file per run — never a rewrite of the existing log
-    row.write.mode("append").parquet(store.path(RUNLOG_TABLE))
+    rows_frame(spark, [row], SCHEMA).write.mode("append").parquet(store.path(RUNLOG_TABLE))

@@ -28,6 +28,19 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def rows_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """Python ``rows`` as one partition of ``schema``, built from
+    literals: ``createDataFrame`` runs a Python worker task per slice, which
+    made a 4-row write take 0.5–1 s against 0.2 s (4-core host)."""
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, schema.fields)])
+        for row in rows
+    ]
+    return spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
 
 
 class ParquetStore:
@@ -70,9 +83,11 @@ class ParquetStore:
         self._recover(name)
         return os.path.isdir(self.path(name))
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
+    def read(self, spark: SparkSession, name: str, schema: StructType | None = None) -> DataFrame:
+        """The current generation; a known ``schema`` skips the inference job."""
         self._recover(name)
-        return spark.read.parquet(self.path(name))
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.path(name))
 
     def write(
         self,

@@ -5,11 +5,12 @@ ingested — *data-driven*, never wall-clock, `code/SQL_1…sql:643–651`) and
 ``last_successful_execution_time``. Seeded at 1900-01-01 so the first run
 ingests full history (`code/SQL_1…sql:250–255`).
 
-The tracker is tiny (one row per table) — it lives as a plain parquet
-table and is read to the driver (the reference's scalar-subquery lookup,
-P11). Updated only *after* the target table's swap commits, uniformly for
-dims and fact (the reference is inconsistent here — SURVEY §3.3 — we fix
-that deliberately).
+The tracker is tiny (one row per table): a plain parquet table read into
+Python in one ``collect()`` with the code's ``SCHEMA`` (the
+reference's scalar-subquery lookup, P11) and rewritten from Python rows
+as one file, one job each way. Updated only *after* the target table's swap commits,
+uniformly for dims and fact (the reference is inconsistent here — SURVEY
+§3.3 — we fix that deliberately).
 """
 
 from __future__ import annotations
@@ -17,11 +18,10 @@ from __future__ import annotations
 from datetime import datetime
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_mini_dw_spark.etl.store import ParquetStore
-from etl_mini_dw_spark.fixtures_spec import LOW
+from etl_mini_dw_spark.etl.store import ParquetStore, rows_frame
+from etl_mini_dw_spark.fixtures_spec import LOW, ts_literal
 
 TRACKER_TABLE = "etl_load_tracker"
 
@@ -42,17 +42,16 @@ def seed(spark: SparkSession, store: ParquetStore) -> None:
         return
     low = datetime.strptime(LOW, "%Y-%m-%d %H:%M:%S")
     rows = [(t, low, None) for t in TRACKED_TABLES]
-    store.write(spark.createDataFrame(rows, SCHEMA), TRACKER_TABLE)
+    store.write(rows_frame(spark, rows, SCHEMA), TRACKER_TABLE)
+
+
+def _rows(spark: SparkSession, store: ParquetStore) -> list:
+    return store.read(spark, TRACKER_TABLE, SCHEMA).collect()
 
 
 def read_watermark(spark: SparkSession, store: ParquetStore, table: str) -> str:
-    row = (
-        store.read(spark, TRACKER_TABLE)
-        .filter(F.col("table_name") == table)
-        .select("last_successful_load")
-        .first()
-    )
-    return row[0].strftime("%Y-%m-%d %H:%M:%S")
+    load = next(r.last_successful_load for r in _rows(spark, store) if r.table_name == table)
+    return ts_literal(load)
 
 
 def advance(
@@ -64,23 +63,17 @@ def advance(
 ) -> None:
     """Execution time always; load watermark only if the batch was non-empty
     (`code/SQL_1…sql:643–651,887–894`)."""
-    df = store.read(spark, TRACKER_TABLE)
-    is_target = F.col("table_name") == table
-    df = df.withColumn(
-        "last_successful_execution_time",
-        F.when(is_target, F.lit(exec_time)).otherwise(F.col("last_successful_execution_time")),
-    )
-    if new_load_ts is not None:
-        # MONOTONIC advance: a delta batch can contain only old rows (e.g.
-        # a re-qualifying closed archive row), whose MAX(valid_from) lies
-        # BEFORE the current watermark — the reference's raw MAX would
-        # regress the tracker and re-open already-ingested history
-        # (`code/SQL_1…sql:643–651` has this latent bug; we fix it).
-        df = df.withColumn(
-            "last_successful_load",
-            F.when(
-                is_target,
-                F.greatest(F.col("last_successful_load"), F.lit(new_load_ts)),
-            ).otherwise(F.col("last_successful_load")),
-        )
-    store.write(df.localCheckpoint(), TRACKER_TABLE)
+    rows = []
+    for name, load, executed in _rows(spark, store):
+        if name == table:
+            executed = exec_time
+            if new_load_ts is not None:
+                # MONOTONIC advance: a delta batch can contain only old rows
+                # (e.g. a re-qualifying closed archive row), whose
+                # MAX(valid_from) lies BEFORE the current watermark — the
+                # reference's raw MAX would regress the tracker and re-open
+                # already-ingested history (`code/SQL_1…sql:643–651` has
+                # this latent bug; we fix it).
+                load = max(load, new_load_ts)
+        rows.append((name, load, executed))
+    store.write(rows_frame(spark, rows, SCHEMA), TRACKER_TABLE)

@@ -24,6 +24,7 @@ to *both* versions of a versioned key.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from datetime import datetime
 
 EPOCH1 = "1994-01-01 00:00:00"
 EPOCH2 = "1998-01-01 00:00:00"
@@ -36,6 +37,13 @@ MID = "1996-06-01 00:00:00"  # epoch-split point for incremental tests
 # deterministic stand-in for SYSUTCDATETIME() when closing deleted rows
 # (`code/SQL_1…sql:978`) so both engines agree
 NOW_FIXED = "2002-01-01 00:00:00"
+
+
+def ts_literal(ts: datetime | None) -> str:
+    """A watermark literal that casts back exactly (a truncated one would
+    re-extract its own sub-second rows); an empty batch's ``None`` is ``LOW``."""
+    return LOW if ts is None else ts.strftime("%Y-%m-%d %H:%M:%S.%f")
+
 
 UNKNOWN_NK = -1  # unknown-member natural key (`code/SQL_1…sql:622–630`)
 

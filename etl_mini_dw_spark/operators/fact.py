@@ -27,9 +27,15 @@ Spark-first design decisions:
 - **Storage partitioning** (orchestrator): FactSales is written
   partitioned by order-date prefix so date filters become partition
   pruning — the reference only had a date index (SURVEY §4).
+- **One load step.** ``load_step`` is the one lifecycle step;
+  ``fact_two_phase`` and the orchestrator's ``load_fact`` both call it.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import or_
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -253,13 +259,11 @@ def resolve_facts(
 
 
 def fact_initial(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Initial fact load (`code/SQL_1…sql:804–902`), half-open as-of joins."""
-    dims = {
-        fk: scd2.dim_initial(spark, sf_dir, ds) for fk, ds, _ in DIM_LINKS
-    }
+    """Initial fact load (`code/SQL_1…sql:804–902`), half-open as-of joins:
+    the load step with no prior state."""
+    dims = {fk: scd2.dim_initial(spark, sf_dir, ds) for fk, ds, _ in DIM_LINKS}
     dd = build_dim_date(spark, spec.DATE_START, spec.DATE_END)
-    facts = src_sales(spark, sf_dir, spec.LOW)
-    return resolve_facts(facts, dims, dd)
+    return load_step(spark, sf_dir, None, spec.LOW, None, dims, dd)[0].drop("change_tag")
 
 
 def fact_initial_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -325,32 +329,21 @@ def fact_increment(
     joined = state0.join(src, state0.sales_nk == F.col("src_sales_nk"), "left")
     for fk, _, _ in DIM_LINKS:
         joined = joined.crossJoin(F.broadcast(unknowns[fk]))
-    measure_changed = None
-    for m in MEASURES:
-        t = ~(F.col(m).eqNullSafe(F.col(f"src_{m}")))
-        measure_changed = t if measure_changed is None else (measure_changed | t)
-    was_unknown = None
-    for fk, _, _ in DIM_LINKS:
-        t = F.col(fk) == F.col(f"_unk_{fk}")
-        was_unknown = t if was_unknown is None else (was_unknown | t)
+    measure_changed = reduce(or_, [~(F.col(m).eqNullSafe(F.col(f"src_{m}"))) for m in MEASURES])
+    was_unknown = reduce(or_, [F.col(fk) == F.col(f"_unk_{fk}") for fk, _, _ in DIM_LINKS])
     should_update = (
         F.col("src_sales_nk").isNotNull()
         & (measure_changed | was_unknown)
         & (F.col("src_sales_lasteditedwhen") > F.col("sales_lasteditedwhen"))
     )
-    updated_cols = []
-    for c in FACT_COLS:
-        if c in ("sales_id",):
-            updated_cols.append(F.col(c))
-        elif c == "sales_order_datekey":
-            # the reference's UPDATE pass does not touch the date key
-            updated_cols.append(F.col(c))
-        elif c == "sales_nk":
-            updated_cols.append(F.col(c))
-        else:
-            updated_cols.append(
-                F.when(should_update, F.col(f"src_{c}")).otherwise(F.col(c)).alias(c)
-            )
+    # the keys stay, and so does the date key: the reference's UPDATE pass
+    # does not touch it
+    kept = ("sales_id", "sales_nk", "sales_order_datekey")
+    updated_cols = [
+        F.col(c) if c in kept
+        else F.when(should_update, F.col(f"src_{c}")).otherwise(F.col(c)).alias(c)
+        for c in FACT_COLS
+    ]
     base = joined.select(
         *updated_cols,
         F.when(should_update, F.lit("updated")).otherwise(F.lit("kept")).alias("change_tag"),
@@ -366,29 +359,47 @@ def fact_increment(
     return base.unionByName(inserted)
 
 
+def load_step(
+    spark: SparkSession,
+    sf_dir: str,
+    state: Callable[[DataFrame], DataFrame] | None,
+    wm: str,
+    as_of: str | None,
+    dims: dict[str, DataFrame],
+    dim_date: DataFrame,
+) -> tuple[DataFrame, DataFrame]:
+    """One fact load (X5) → ``(post tagged with change_tag, delta)``, the
+    only code that tells an initial load from an increment. Source rows
+    resolve against ``dims`` and ``dim_date``. ``state is None`` loads the
+    full history from the seed watermark; otherwise the delta past ``wm``
+    merges into ``state(resolved)``, the prior rows it may touch (so a
+    stored table reads only the partitions the delta names). The caller
+    picks the next watermark."""
+    delta = src_sales(spark, sf_dir, spec.LOW if state is None else wm, as_of=as_of)
+    resolved = resolve_facts(delta, dims, dim_date)
+    if state is None:
+        return resolved.withColumn("change_tag", F.lit("inserted")), delta
+    return fact_increment(state(resolved), resolved, dims), delta
+
+
 def fact_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Initial load as-of FACT_SPLIT + one incremental pass (X5 lifecycle)."""
     dims = {fk: scd2.dim_initial(spark, sf_dir, ds) for fk, ds, _ in DIM_LINKS}
     dd = build_dim_date(spark, spec.DATE_START, spec.DATE_END)
 
     # phase 1: what the warehouse looked like after loading up to the split;
-    # materialized once PER SESSION (it feeds the watermark read, the
-    # update join and the insert anti-join — exactly the stored fact
-    # table the orchestrator would have written after phase 1, so the
-    # memo is the in-session analog of reading that table back)
+    # materialized once PER SESSION, eagerly (as in scd2.dim_two_phase) —
+    # it feeds the watermark read, the update join and the insert
+    # anti-join, the in-session analog of reading the stored table back
     def build_state0() -> DataFrame:
-        f0 = src_sales(spark, sf_dir, spec.LOW, as_of=spec.FACT_SPLIT)
-        # r10: eager again (same revert + evidence as scd2.dim_two_phase)
-        return resolve_facts(f0, dims, dd).localCheckpoint()
+        f0, _ = load_step(spark, sf_dir, None, spec.LOW, spec.FACT_SPLIT, dims, dd)
+        return f0.drop("change_tag").localCheckpoint()
 
     state0 = stage_memo(spark, sf_dir, "fact_state0", build_state0)
 
     # data-driven watermark advance (`code/SQL_1…sql:1493–1500`), read back
     # to the driver like the reference's scalar tracker lookup (P11);
-    # empty phase 1 ⇒ seed watermark (same fallback as dim_two_phase)
-    wm_val = state0.agg(F.max("sales_lasteditedwhen")).first()[0]
-    wm = wm_val.strftime("%Y-%m-%d %H:%M:%S") if wm_val is not None else spec.LOW
-
-    # phase 2 delta, resolved at the *new* edit time (late-dim repair path)
-    delta = src_sales(spark, sf_dir, wm)
-    return fact_increment(state0, resolve_facts(delta, dims, dd), dims)
+    # empty phase 1 ⇒ seed watermark (same fallback as dim_two_phase).
+    # Phase 2's delta resolves at the *new* edit time (late-dim repair path)
+    wm = state0.agg(F.max("sales_lasteditedwhen")).first()[0]
+    return load_step(spark, sf_dir, lambda _: state0, spec.ts_literal(wm), None, dims, dd)[0]

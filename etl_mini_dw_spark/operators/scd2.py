@@ -10,6 +10,9 @@ writes, which gives the reference's transactional all-or-nothing
 semantics via compute-full-post-state → single atomic swap
 (SURVEY §7 hard-part 7).
 
+``load_step`` is the one lifecycle step; ``dim_initial``, ``dim_two_phase``
+and the orchestrator's ``load_dim`` all call it.
+
 Spark-first notes (100 TB):
 - All joins here are NK-equi-joins against *dimension-sized* inputs →
   broadcast-hash in practice; no shuffle of the big fact side is ever
@@ -38,6 +41,7 @@ from etl_mini_dw_spark.fixtures_spec import (
     UNKNOWN_NK,
     DimSpec,
     attr_cols,
+    ts_literal,
 )
 from etl_mini_dw_spark.sources import staging
 
@@ -79,17 +83,9 @@ def assign_surrogate_keys(
 def dim_initial(
     spark: SparkSession, sf_dir: str, dim: DimSpec, as_of: str | None = None
 ) -> DataFrame:
-    """Initial (full-history) load (`code/SQL_1…sql:602–659`).
-
-    Seed watermark 1900 ⇒ the delta view returns all history; union the
-    unknown member; assign SKs.
-    """
-    staged = staging.delta_extract(spark, sf_dir, dim, LOW, as_of=as_of)
-    shaped = staged.withColumnRenamed("valid_from", "active_from").withColumnRenamed(
-        "valid_to", "active_to"
-    )
-    unioned = shaped.unionByName(unknown_member_row(spark, dim))
-    return assign_surrogate_keys(unioned, dim)
+    """Initial (full-history) load (`code/SQL_1…sql:602–659`): the load
+    step with no prior state."""
+    return load_step(spark, sf_dir, dim, None, LOW, as_of, HIGH)[0].drop("change_tag")
 
 
 def change_predicate(dim: DimSpec, left_prefix: str = "", right_prefix: str = "src_") -> Column:
@@ -141,16 +137,8 @@ def scd2_increment(
     )
     ins = (
         src.join(cur_attrs, F.col(f"src_{nk}") == F.col(f"cur_{nk}"), "left")
-        .filter(
-            F.col(f"cur_{nk}").isNull()
-            | reduce(
-                lambda a, b: a | b,
-                [~(F.col(f"src_{a}").eqNullSafe(F.col(f"cur_{a}"))) for a in dim.tracked],
-            )
-        )
-        .select(
-            *[F.col(f"src_{c}").alias(c) for c in src_cols],
-        )
+        .filter(F.col(f"cur_{nk}").isNull() | change_predicate(dim, "src_", "cur_"))
+        .select(*[F.col(f"src_{c}").alias(c) for c in src_cols])
         .withColumnRenamed("valid_from", "active_from")
         .withColumnRenamed("valid_to", "active_to")
     )
@@ -223,6 +211,33 @@ def scd2_increment(
     return base.unionByName(inserted)
 
 
+def load_step(
+    spark: SparkSession,
+    sf_dir: str,
+    dim: DimSpec,
+    state: DataFrame | None,
+    wm: str,
+    as_of: str | None,
+    now_ts: str,
+) -> tuple[DataFrame, DataFrame]:
+    """One SCD2 load → ``(post tagged with change_tag, delta)``, the only
+    code that tells an initial load from an increment. ``state is None``
+    loads the full history from the seed watermark (A5 empty-table guard,
+    `code/SQL_1…sql:603`): union the unknown member, assign SKs. Otherwise
+    the delta past ``wm`` merges into ``state``. The caller picks the next
+    watermark."""
+    staged = staging.delta_extract(spark, sf_dir, dim, LOW if state is None else wm, as_of=as_of)
+    if state is None:
+        shaped = staged.withColumnRenamed("valid_from", "active_from").withColumnRenamed(
+            "valid_to", "active_to"
+        )
+        unioned = shaped.unionByName(unknown_member_row(spark, dim))
+        post = assign_surrogate_keys(unioned, dim).withColumn("change_tag", F.lit("inserted"))
+        return post, staged
+    snapshot = staging.current_snapshot(spark, sf_dir, dim, as_of=as_of)
+    return scd2_increment(state, staged, snapshot, dim, now_ts), staged
+
+
 def dim_two_phase(
     spark: SparkSession,
     sf_dir: str,
@@ -236,29 +251,18 @@ def dim_two_phase(
     incremental-equals-full test target (SURVEY §5 item 4) and the
     oracle-checked centerpiece for X2–X4.
     """
-    # materialized once — it feeds the watermark read and three joins,
-    # standing in for the orchestrator's stored table. r10: EAGER again
-    # (reverts r9's lazy flip, VERDICT r9 item 1): the driver saw
-    # memo:dim_states elevated in both r9 runs, and local A/B probes
-    # agree — eager min 11.9 s vs lazy min 13.2 s for the 3-dim build
-    # (min of 3, fresh process each). Materializing via the checkpoint's
-    # own count-job and running the watermark agg over cached blocks
-    # beats interleaving block persistence into the agg job.
+    # materialized once, eagerly (faster than lazy before a scalar
+    # read-back) — it feeds the watermark read and three joins, standing
+    # in for the orchestrator's stored table
     dim0 = dim_initial(spark, sf_dir, dim, as_of=split).localCheckpoint()
     # data-driven watermark advance (X8, `code/SQL_1…sql:643–651`):
     # MAX(valid_from) of the ingested batch, read back like the
-    # reference's scalar tracker lookup (P11 → collect + re-inject)
-    wm_row = (
-        dim0.filter(F.col(dim.nk) != UNKNOWN_NK).agg(F.max("active_from").alias("wm")).first()
-    )
-    # empty phase 1 (split before the first source version) ⇒ fall back
-    # to the SEED watermark, exactly like the reference's freshly-seeded
-    # tracker (`code/SQL_1…sql:250–255`): the incremental pass then
-    # extracts the full history instead of crashing on a NULL scalar
-    wm = wm_row["wm"].strftime("%Y-%m-%d %H:%M:%S") if wm_row["wm"] is not None else LOW
-    staged = staging.delta_extract(spark, sf_dir, dim, wm)
-    snapshot = staging.current_snapshot(spark, sf_dir, dim)
-    return scd2_increment(dim0, staged, snapshot, dim, now_ts)
+    # reference's scalar tracker lookup (P11 → collect + re-inject).
+    # Empty phase 1 (split before the first source version) ⇒ the SEED
+    # watermark, exactly like the reference's freshly-seeded tracker
+    # (`code/SQL_1…sql:250–255`)
+    wm = dim0.filter(F.col(dim.nk) != UNKNOWN_NK).agg(F.max("active_from")).first()[0]
+    return load_step(spark, sf_dir, dim, dim0, ts_literal(wm), None, now_ts)[0]
 
 
 def dim_asof_snapshot(spark: SparkSession, sf_dir: str, dim: DimSpec, ts: str) -> DataFrame:

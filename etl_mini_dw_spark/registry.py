@@ -143,31 +143,19 @@ _register(
 
 
 # --- M6: validation suite + marts (Stage 4/5; A2/A3, J5/J7, O1/O2, C2–C5) --
+# the validation/mart consumers read the memoized two-phase dim state
+# (billed to bench's `memo:dim_states`); the `scd2_{dim}_two_phase` lines
+# keep calling `scd2.dim_two_phase` so they still measure the real build
+from etl_mini_dw_spark.api import dim_state
 from etl_mini_dw_spark.oracle import validation_sql
 from etl_mini_dw_spark.plans import marts, validation
-
-def _two_phase(spark, sf_dir, dim_key):
-    """Shared two-phase dim state for the 16 validation/mart consumers.
-
-    r09 optimization: route through the memoized ``api.dim_state`` (one
-    build per (session, sf-dir, dim), billed to bench's `memo:dim_states`
-    line) instead of re-running the eager dim_two_phase build — the same
-    value-identical reuse ``fact.fact_initial_memo`` already gives the fact
-    consumers. The ``scd2_{dim}_two_phase`` registry entries deliberately
-    keep calling ``scd2.dim_two_phase`` directly so their bench lines
-    still measure the real build (same principle as fact_sales_initial).
-    """
-    from etl_mini_dw_spark.api import dim_state
-
-    return dim_state(spark, sf_dir, dim_key)
-
 
 for _dim_key, _dim in spec.DIMS.items():
     _register(
         f"validate_dup_current_{_dim_key}",
         (
             lambda k, d: lambda spark, sf_dir: validation.duplicate_current_per_nk(
-                _two_phase(spark, sf_dir, k), d.nk
+                dim_state(spark, sf_dir, k), d.nk
             )
         )(_dim_key, _dim),
         validation_sql.dup_current_sql(
@@ -178,7 +166,7 @@ for _dim_key, _dim in spec.DIMS.items():
         f"mart_{_dim_key}_current",
         (
             lambda k, d: lambda spark, sf_dir: marts.mart_dim_current(
-                _two_phase(spark, sf_dir, k), d
+                dim_state(spark, sf_dir, k), d
             )
         )(_dim_key, _dim),
         validation_sql.mart_dim_sql(
@@ -195,7 +183,7 @@ for _dim_key, _dim in spec.DIMS.items():
         f"validate_dup_versions_{_dim_key}",
         (
             lambda k, d: lambda spark, sf_dir: validation.duplicate_version_windows(
-                _two_phase(spark, sf_dir, k), d.nk
+                dim_state(spark, sf_dir, k), d.nk
             )
         )(_dim_key, _dim),
         validation_sql.dup_versions_sql(_two_phase_sql, _dim.nk),
@@ -204,7 +192,7 @@ for _dim_key, _dim in spec.DIMS.items():
         f"validate_overlaps_{_dim_key}",
         (
             lambda k, d: lambda spark, sf_dir: validation.overlapping_windows(
-                _two_phase(spark, sf_dir, k), d.nk, d.sk
+                dim_state(spark, sf_dir, k), d.nk, d.sk
             )
         )(_dim_key, _dim),
         validation_sql.overlaps_sql(_two_phase_sql, _dim.nk, _dim.sk),
@@ -213,7 +201,7 @@ for _dim_key, _dim in spec.DIMS.items():
         f"validate_null_validity_{_dim_key}",
         (
             lambda k, d: lambda spark, sf_dir: validation.null_validity(
-                _two_phase(spark, sf_dir, k), d.nk
+                dim_state(spark, sf_dir, k), d.nk
             )
         )(_dim_key, _dim),
         validation_sql.null_validity_sql(_two_phase_sql, _dim.nk),
@@ -303,7 +291,7 @@ _register(
 _register(
     "current_member_counts_customer",
     lambda spark, sf_dir: validation.current_member_counts(
-        _two_phase(spark, sf_dir, "customer")
+        dim_state(spark, sf_dir, "customer")
     ),
     validation_sql.current_counts_sql(
         warehouse_sql.dim_two_phase_sql(spec.CUSTOMER, spec.MID, spec.NOW_FIXED)
@@ -889,8 +877,6 @@ def _health_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage memos, so the 15 checks pay the builds once per session.
     """
     from pyspark.sql import functions as F
-
-    from etl_mini_dw_spark.api import dim_state
 
     rows = []
 

@@ -1,5 +1,6 @@
 """Spark-job budgets for the lines whose rounds run over bounded state,
-and for every streaming line.
+for every streaming line and for the SCD2/fact lifecycle lines; and the
+incremental loads' job counts, which must not vary from run to run.
 
 At fixture scale the unit of cost is the Spark job (each shuffle or
 broadcast stage under AQE is one driver job), and job counts do not
@@ -13,8 +14,14 @@ budget is a ceiling; budgets may only be tightened.
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pytest
 
+from etl_mini_dw_spark import fixtures_spec as spec
+from etl_mini_dw_spark.etl import runlog, tracker
+from etl_mini_dw_spark.etl.orchestrate import Warehouse
+from etl_mini_dw_spark.etl.store import ParquetStore
 from etl_mini_dw_spark.registry import QUERIES
 
 BUDGETS = {
@@ -40,18 +47,87 @@ BUDGETS = {
     "ext_streaming_merge_totals": 4,
     "ext_streaming_session_windows": 4,
     "ext_streaming_stateful_user_totals": 5,
+    # the load lifecycle: an initial load as of a split, then one increment
+    "scd2_customer_two_phase": 27,
+    "scd2_salesperson_two_phase": 16,
+    "scd2_product_two_phase": 17,
+    "fact_sales_two_phase": 48,
 }
+
+
+def _next_job(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _jobs(spark, fn) -> int:
+    before = _next_job(spark)
+    fn()
+    return _next_job(spark) - before
 
 
 @pytest.mark.parametrize("name", sorted(BUDGETS))
 def test_line_stays_within_job_budget(spark, sf_dir, name):
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = int(dag.nextJobId())
+    before = _next_job(spark)
     df = QUERIES[name](spark, sf_dir)
-    built = int(dag.nextJobId())
+    built = _next_job(spark)
     df.write.format("noop").mode("overwrite").save()
-    jobs = int(dag.nextJobId()) - before
+    jobs = _next_job(spark) - before
     assert jobs <= BUDGETS[name], (
         f"{name}: {built - before} construction + "
         f"{jobs - (built - before)} execution jobs > budget {BUDGETS[name]}"
     )
+
+
+def test_bookkeeping_job_counts_do_not_depend_on_file_order(spark, tmp_path):
+    """The tracker and run log fire one fixed job count per call, whatever
+    the sizes of their files: the execution times written (null, or with
+    different sub-second parts) change the file sizes, and a read that
+    follows file-size order would fire a varying count."""
+    store = ParquetStore(str(tmp_path))
+    tracker.seed(spark, store)
+    first = datetime(2001, 1, 1)
+    runlog.append(spark, store, "seed", first, first)  # later appends read a log
+    counts: dict[str, set[int]] = {"read_watermark": set(), "advance": set(), "append": set()}
+    for rnd in range(3):
+        for i, table in enumerate(tracker.TRACKED_TABLES):
+            executed = datetime(2001, 1 + i, 1 + rnd, i, rnd, i, (i + 1) * 10**rnd)
+            loaded = datetime(1996, 1 + rnd, 1 + i) if (i + rnd) % 2 else None
+            counts["read_watermark"].add(
+                _jobs(spark, lambda: tracker.read_watermark(spark, store, table))
+            )
+            counts["advance"].add(
+                _jobs(spark, lambda: tracker.advance(spark, store, table, loaded, executed))
+            )
+            counts["append"].add(
+                _jobs(
+                    spark,
+                    lambda: runlog.append(
+                        spark, store, f"etl_load_{table}", executed, executed, rows_inserted=i
+                    ),
+                )
+            )
+    assert all(len(c) == 1 for c in counts.values()), counts
+    # a load reads the watermark, advances it and appends one run row
+    assert sum(min(c) for c in counts.values()) <= 5, counts
+
+
+def test_load_job_counts_repeat_across_fresh_stores(spark, sf_dir, tmp_path):
+    """The initial load and one incremental cycle fire the same job count
+    per load on two fresh stores, once a third store has warmed the
+    session (staged memos, source reads)."""
+    cuts = ["1996-01-01 00:00:00", "1996-02-01 00:00:00"]
+
+    def per_load(name: str) -> list[int]:
+        wh = Warehouse(spark, str(tmp_path / name), sf_dir)
+        wh.init()
+        out = []
+        for cut in cuts:
+            for key in spec.DIMS:
+                out.append(
+                    _jobs(spark, lambda: wh.load_dim(key, as_of=cut, now_ts=spec.NOW_FIXED))
+                )
+            out.append(_jobs(spark, lambda: wh.load_fact(as_of=cut)))
+        return out
+
+    per_load("warm")
+    assert per_load("a") == per_load("b")

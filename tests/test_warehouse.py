@@ -7,11 +7,17 @@ invariants after any run, the README-documented idempotence property
 
 from __future__ import annotations
 
+import os
+import shutil
+from datetime import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
 from etl_mini_dw_spark import fixtures_spec as spec
+from etl_mini_dw_spark.etl import tracker
 from etl_mini_dw_spark.etl.orchestrate import Warehouse
+from etl_mini_dw_spark.etl.store import ParquetStore
 from etl_mini_dw_spark.plans import validation
 
 
@@ -100,28 +106,55 @@ def test_fail_logging(spark, sf_dir, tmp_path_factory):
     assert log.filter(F.col("run_status") == "FAIL").count() == 1
 
 
+def _assert_equals_one_shot_fact(w, spark, sf_dir, ref_dir, as_of=None):
+    """``w``'s fact_sales equals a one-shot load of the same cut into a
+    fresh store holding the same dimension tables."""
+    for name in ("dim_date", *(d.name for d in spec.DIMS.values())):
+        shutil.copytree(w.store.path(name), os.path.join(ref_dir, name))
+    ref = Warehouse(spark, ref_dir, sf_dir)
+    ref.init()
+    ref.load_fact(as_of=as_of)
+    a, b = w.table("fact_sales"), ref.table("fact_sales")
+    assert a.count() > 0
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
 def test_empty_initial_fact_load_then_later_cut(spark, sf_dir, tmp_path_factory):
     """A first load at a cut before the first order has an empty fact
     delta, which writes nothing at all (the incremental branch's rule).
     The next cut's load is then the initial one: it must read no
     schema-less table and equal a one-shot load of that cut against the
     same dimension tables."""
-    import os
-    import shutil
-
     early, later = "1994-06-01 00:00:00", spec.MID
     w = Warehouse(spark, str(tmp_path_factory.mktemp("wh_empty_first")), sf_dir)
     w.run_all(as_of=early, now_ts=spec.NOW_FIXED)
     missing_after_empty = w.missing_tables()
     w.run_all(as_of=later, now_ts=spec.NOW_FIXED)
 
-    ref_dir = str(tmp_path_factory.mktemp("wh_one_shot"))
-    for name in ("dim_date", *(d.name for d in spec.DIMS.values())):
-        shutil.copytree(w.store.path(name), os.path.join(ref_dir, name))
-    ref = Warehouse(spark, ref_dir, sf_dir)
-    ref.init()
-    ref.load_fact(as_of=later)
-    a, b = w.table("fact_sales"), ref.table("fact_sales")
-    assert a.count() > 0
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    _assert_equals_one_shot_fact(
+        w, spark, sf_dir, str(tmp_path_factory.mktemp("wh_one_shot")), as_of=later
+    )
     assert missing_after_empty == ["fact_sales"]
+
+
+def test_dropped_fact_reloads_full_history(wh, spark, sf_dir, tmp_path_factory):
+    """With fact_sales gone, the next fact load is an initial one from the
+    seed watermark, as for a dimension — not an increment past the
+    tracker's watermark, which would keep only rows newer than it."""
+    base = str(tmp_path_factory.mktemp("wh_dropped_fact"))
+    shutil.copytree(wh.store.base_dir, base, dirs_exist_ok=True)
+    w = Warehouse(spark, base, sf_dir)
+    w.store.drop("fact_sales")
+    w.load_fact()
+    _assert_equals_one_shot_fact(w, spark, sf_dir, str(tmp_path_factory.mktemp("wh_one_shot")))
+
+
+def test_watermark_keeps_microseconds(spark, tmp_path):
+    """A sub-second watermark casts back exactly: a truncated one would
+    re-extract its own rows on every run."""
+    store = ParquetStore(str(tmp_path))
+    tracker.seed(spark, store)
+    ts = datetime(1999, 5, 6, 7, 8, 9, 123456)
+    tracker.advance(spark, store, "fact_sales", ts, datetime(2002, 1, 1))
+    wm = tracker.read_watermark(spark, store, "fact_sales")
+    assert spark.range(1).select(F.lit(wm).cast("timestamp")).first()[0] == ts
