@@ -1,17 +1,18 @@
-"""Distributed BPE vocabulary training (byte-pair-encoding merges).
+"""BPE vocabulary training (byte-pair-encoding merges).
 
 The tokenizer-training stage of an LLM data pipeline (Sennrich et al.
 2016): start from the corpus WORD HISTOGRAM, then repeatedly (1) count
 adjacent-symbol pairs weighted by word frequency, (2) take the argmax
 pair, (3) merge it everywhere. Production trainers (subword-nmt,
 HuggingFace tokenizers) do exactly this — the corpus-scale part is ONLY
-the word histogram; the merge loop runs over the vocabulary table.
+the word histogram; the merge loop runs over the vocabulary.
 
-That split is the 100 TB story: one shuffle aggregates TBs of text down
-to a |vocab|-row histogram (partial-aggregable count), and every merge
-round after it touches |vocab| rows — two tiny aggregates per round,
-unrolled lazily like the k-means / PageRank loops (localCheckpoint per
-round cuts lineage). Nothing data-sized moves after the first stage.
+So one shuffle aggregates the corpus to a |vocab|-row histogram, which
+is collected once; ``train_merges`` runs every round on the driver in
+Python ints (the driver holds the word → freq vocabulary, as those
+trainers do; SCALE.md states the bound). The table is staged once per
+session (``bpe_merges``) and applied by ``apply_merges`` as literal
+``replace`` patterns in one projection: no plan carries a round.
 
 Portability trick — the merge step WITHOUT a UDF: symbols are joined
 with DOUBLE spaces and the string gets double-space sentinels at both
@@ -19,27 +20,57 @@ ends ('  s  p  a  r  k  '). A merge of (a, b) is then one plain
 ``replace(sym, ' a  b ', ' ab ')``: the pattern consumes one space of
 each double separator, leaving the other intact, so ADJACENT merge
 sites keep their boundary and a single left-to-right non-overlapping
-replace() — identical semantics in Spark and DuckDB — performs exactly
-the greedy BPE merge ('a a a' + (a,a) → [aa, a]). With single-space
-separators the shared delimiter is consumed and 'a b a b' merges only
-once; RE2 (DuckDB) has no lookbehind, so the double-space encoding is
-the portable fix.
+replace() — identical semantics in Python, Spark and DuckDB — performs
+exactly the greedy BPE merge ('a a a' + (a,a) → [aa, a]). With
+single-space separators the shared delimiter is consumed and 'a b a b'
+merges only once; RE2 (DuckDB) has no lookbehind, so the double-space
+encoding is the portable fix.
 
 Ties at max pair frequency break to the lexicographically LARGEST
-(a, b) — ``max(struct(freq, a, b))`` in Spark, ``ORDER BY pf DESC,
-a DESC, b DESC LIMIT 1`` in DuckDB — deterministic on any layout.
+(a, b) — ``max((pf, a, b))`` on the driver, ``ORDER BY pf DESC, a DESC,
+b DESC LIMIT 1`` in DuckDB; words match ``[a-z]+``, so Python's string
+order is the engines' byte order.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from collections import Counter
+from collections.abc import Iterable
 
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from etl_mini_dw_spark.etl.store import rows_frame
 from etl_mini_dw_spark.functions.text import WORD_RE, _word_frame
+from etl_mini_dw_spark.sources.tables import stage_memo
 
 R_MERGES = 6
 
-_SYMS = "filter(split(sym, '  '), x -> x <> '')"
+Merges = list[tuple[str, str, int]]  # (a, b, pair freq) per round
+
+MERGE_SCHEMA = T.StructType(
+    [
+        T.StructField("merge_round", T.IntegerType(), False),
+        T.StructField("sym_a", T.StringType()),
+        T.StructField("sym_b", T.StringType()),
+        T.StructField("pair_freq", T.LongType()),
+        T.StructField("merged", T.StringType()),
+    ]
+)
+
+
+def _syms(sym: str = "sym") -> str:
+    """The symbols of a double-space encoded column, as SQL."""
+    return f"filter(split({sym}, '  '), x -> x <> '')"
+
+
+_SYMS = _syms()
+
+
+def _sym() -> Column:
+    """``word`` in the double-space encoding: '  s  p  a  r  k  '."""
+    return F.concat(F.lit("  "), F.regexp_replace("word", "(.)", "$1  "))
 
 
 def _word_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,89 +83,61 @@ def _word_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pair_counts(vocab: DataFrame) -> DataFrame:
-    """(a, b, pf): adjacent-symbol pair frequencies over the vocab table.
+def train_merges(vocab_rows: Iterable[tuple[list[str], int]], rounds: int = R_MERGES) -> Merges:
+    """(a, b, pf) per round: greedy BPE over ``(syms, freq)`` rows. Stops
+    when no pair is left (every word one symbol), emitting only the
+    rounds that exist, as the oracle's ``LIMIT 1`` over no pairs does."""
+    vocab = [("  " + "  ".join(syms) + "  ", freq) for syms, freq in vocab_rows]
+    merges = []
+    for _ in range(rounds):
+        pairs: Counter[tuple[str, str]] = Counter()
+        for sym, freq in vocab:
+            syms = [x for x in sym.split("  ") if x]
+            for pair in zip(syms, syms[1:]):
+                pairs[pair] += freq
+        if not pairs:
+            break
+        pf, a, b = max((pf, a, b) for (a, b), pf in pairs.items())
+        merges.append((a, b, pf))
+        vocab = [(sym.replace(f" {a}  {b} ", f" {a}{b} "), freq) for sym, freq in vocab]
+    return merges
 
-    Note: the explode pipelines a transform() over ``syms`` (itself a
-    filter(split(...))) — the Generate-collapse pattern CLAUDE.md
-    forbids on corpus-scale frames because the child projection is
-    re-evaluated per OUTPUT row. It is deliberately tolerated HERE ONLY
-    because the input is the |vocab|-row histogram (thousands of rows,
-    O(word-length) expressions), never the corpus; do not copy this
-    shape into a corpus-scale path — checkpoint the array first.
-    """
-    return (
-        vocab.select("freq", F.expr(_SYMS).alias("syms"))
-        .filter(F.size("syms") >= 2)
-        .select(
-            "freq",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(syms) - 2),"
-                    " i -> struct(syms[i] AS a, syms[i + 1] AS b))"
-                )
-            ).alias("p"),
-        )
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.sum("freq").alias("pf"))
-    )
+
+def _learn(hist: DataFrame, rounds: int) -> Merges:
+    """Collect ``hist``'s symbols once (split by ``_SYMS``); train on the driver."""
+    rows = hist.select(_sym().alias("sym"), "freq").select(F.expr(_SYMS).alias("syms"), "freq")
+    return train_merges(((r.syms, r.freq) for r in rows.collect()), rounds)
+
+
+def _merge_frame(spark: SparkSession, merges: Merges) -> DataFrame:
+    rows = [(r, a, b, pf, a + b) for r, (a, b, pf) in enumerate(merges, start=1)]
+    return rows_frame(spark, rows, MERGE_SCHEMA)
 
 
 def train_merges_from_hist(hist: DataFrame, rounds: int = R_MERGES) -> DataFrame:
-    """Merge table from ANY (word, freq) frame — the training loop proper
-    (separated so property tests can drive it with synthetic histograms).
+    """Merge table from ANY (word, freq) frame — the public entry that
+    property tests drive with synthetic histograms."""
+    return _merge_frame(hist.sparkSession, _learn(hist, rounds))
 
-    Exhaustion-safe: when ``rounds`` exceeds the merges available (every
-    word already a single symbol → the pair frame is empty), Spark's
-    ``agg(max(struct))`` yields one all-NULL row where DuckDB's
-    ``ORDER BY … LIMIT 1`` yields zero rows. The NULL merge row is
-    filtered out of the output and the vocab update is CASE-guarded so a
-    NULL pattern can't null the whole vocab — both engines then emit
-    exactly the rounds that exist. (The registered R_MERGES=6 queries
-    never exhaust on real corpora; this guard is for arbitrary
-    histograms driven through this public entry point.)"""
-    vocab = hist.select(
-        F.concat(F.lit("  "), F.regexp_replace("word", "(.)", "$1  ")).alias("sym"),
-        "freq",
-    ).localCheckpoint(eager=False)
-    merges = []
-    for r in range(1, rounds + 1):
-        best = (
-            _pair_counts(vocab)
-            .agg(F.max(F.struct("pf", "a", "b")).alias("m"))
-            .select(F.col("m.pf").alias("pf"), F.col("m.a").alias("a"), F.col("m.b").alias("b"))
-        ).localCheckpoint(eager=False)
-        merges.append(
-            best.select(
-                F.lit(r).cast("int").alias("merge_round"),
-                F.col("a").alias("sym_a"),
-                F.col("b").alias("sym_b"),
-                F.col("pf").alias("pair_freq"),
-                F.concat("a", "b").alias("merged"),
-            )
-        )
-        vocab = (
-            vocab.crossJoin(F.broadcast(best))
-            .select(
-                F.expr(
-                    "CASE WHEN a IS NULL THEN sym ELSE"
-                    " replace(sym, concat(' ', a, '  ', b, ' '),"
-                    " concat(' ', a, b, ' ')) END"
-                ).alias("sym"),
-                "freq",
-            )
-            .localCheckpoint(eager=False)
-        )
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.unionAll(m)
-    return out.filter(F.col("sym_a").isNotNull())
+
+def _merges(spark: SparkSession, sf_dir: str) -> Merges:
+    """The corpus merge table, trained once per (session, sf-dir)."""
+    return stage_memo(
+        spark, sf_dir, "bpe_merges", lambda: _learn(_word_hist(spark, sf_dir), R_MERGES)
+    )
+
+
+def apply_merges(sym: Column, merges: Merges) -> Column:
+    """``sym`` after ``merges`` in order: one literal ``replace`` each."""
+    for a, b, _ in merges:
+        sym = F.replace(sym, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
+    return sym
 
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(merge_round, sym_a, sym_b, pair_freq, merged): the learned merge
     table after R_MERGES rounds — the artifact a tokenizer ships."""
-    return train_merges_from_hist(_word_hist(spark, sf_dir))
+    return _merge_frame(spark, _merges(spark, sf_dir))
 
 
 _SQL_WORD_HIST = f"""
@@ -193,48 +196,38 @@ def bpe_apply_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary-encoded — merges are applied to the |vocab|-row histogram
     and corpus totals are Σ freq × |symbols(word)|, so the corpus itself
     is never re-touched (the same reason production tokenizers segment
-    against a word cache). compression_ratio is subword tokens per
-    whitespace word, rounded to 6 dp on both engines.
+    against a word cache). All R+1 totals come from one aggregate over
+    the histogram, stacked into rows. compression_ratio is subword tokens
+    per whitespace word, rounded to 6 dp on both engines. A round past
+    the table's exhaustion has NULL totals, as the oracle's SUM over an
+    empty chain; the fixture corpus never exhausts R_MERGES rounds.
     """
-    hist = _word_hist(spark, sf_dir)
-    n_words = hist.agg(F.sum("freq").alias("nw"))
-    vocab = hist.select(
-        F.concat(F.lit("  "), F.regexp_replace("word", "(.)", "$1  ")).alias("sym"),
-        "freq",
-    ).localCheckpoint(eager=False)
-
-    def report(v: DataFrame, r: int) -> DataFrame:
-        toks = v.agg(
-            F.sum(F.expr(f"freq * size({_SYMS})")).alias("corpus_subword_tokens")
-        )
-        return toks.crossJoin(F.broadcast(n_words)).select(
-            F.lit(r).cast("int").alias("merge_round"),
+    merges = _merges(spark, sf_dir)
+    done = range(len(merges) + 1)
+    per_round = F.array(
+        *[
+            F.struct(
+                F.lit(r).alias("merge_round"),
+                F.expr(
+                    f"sum(freq * size({_syms(f's{r}')}))" if r in done else "CAST(NULL AS BIGINT)"
+                ).alias("corpus_subword_tokens"),
+            )
+            for r in range(R_MERGES + 1)
+        ]
+    )
+    return (
+        _word_hist(spark, sf_dir)
+        .select("freq", *[apply_merges(_sym(), merges[:r]).alias(f"s{r}") for r in done])
+        .agg(F.sum("freq").alias("nw"), per_round.alias("rounds"))
+        .select(F.inline("rounds"), "nw")
+        .select(
+            "merge_round",
             "corpus_subword_tokens",
             F.round(
                 F.col("corpus_subword_tokens").cast("double") / F.col("nw"), 6
             ).alias("compression_ratio"),
         )
-
-    out = report(vocab, 0)
-    for r in range(1, R_MERGES + 1):
-        best = (
-            _pair_counts(vocab)
-            .agg(F.max(F.struct("pf", "a", "b")).alias("m"))
-            .select(F.col("m.a").alias("a"), F.col("m.b").alias("b"))
-        )
-        vocab = (
-            vocab.crossJoin(F.broadcast(best))
-            .select(
-                F.expr(
-                    "replace(sym, concat(' ', a, '  ', b, ' '),"
-                    " concat(' ', a, b, ' '))"
-                ).alias("sym"),
-                "freq",
-            )
-            .localCheckpoint(eager=False)
-        )
-        out = out.unionAll(report(vocab, r))
-    return out
+    )
 
 
 def bpe_apply_report_sql() -> str:
@@ -276,61 +269,35 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     training text get higher fertility, i.e. more subword tokens per
     word, which inflates their compute cost downstream).
 
-    The merge table is trained on the GLOBAL histogram (same artifact as
-    ``bpe_train_merges``); application runs on a (lang, word) histogram,
-    so the corpus is still touched exactly once and every merge round is
-    vocabulary-sized. The per-round argmax is a 1-row broadcast applied
-    to both frames' lineage identically."""
-    from etl_mini_dw_spark.functions.text import _word_frame
-
-    base = _word_frame(spark, sf_dir)
-    # (lang, word, freq) histogram — lang rides the same explode
+    The merge table is the one trained on the GLOBAL histogram (the
+    ``bpe_train_merges`` artifact); it is applied to a (lang, word)
+    histogram in one projection, so the corpus is still touched exactly
+    once. A table exhausted before R_MERGES rounds yields no rows, as
+    the oracle's empty chain does; the fixture corpus never exhausts."""
+    merges = _merges(spark, sf_dir)
     hist_lang = (
-        base.join(_lang_frame(spark, sf_dir), "doc_id")
+        _word_frame(spark, sf_dir)
+        .where(F.lit(len(merges) == R_MERGES))
         .select("lang", F.explode("w").alias("word"))
         .groupBy("lang", "word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    hist_global = hist_lang.groupBy("word").agg(F.sum("freq").alias("freq"))
-    sym = F.concat(F.lit("  "), F.regexp_replace("word", "(.)", "$1  ")).alias("sym")
-    vocab_g = hist_global.select(sym, "freq").localCheckpoint(eager=False)
-    vocab_l = hist_lang.select("lang", sym, "freq").localCheckpoint(eager=False)
-    for _ in range(R_MERGES):
-        best = (
-            _pair_counts(vocab_g)
-            .agg(F.max(F.struct("pf", "a", "b")).alias("m"))
-            .select(F.col("m.a").alias("a"), F.col("m.b").alias("b"))
-        ).localCheckpoint(eager=False)
-        merge_expr = (
-            "replace(sym, concat(' ', a, '  ', b, ' '), concat(' ', a, b, ' '))"
+    return (
+        hist_lang.select("lang", "freq", apply_merges(_sym(), merges).alias("sym"))
+        .groupBy("lang")
+        .agg(
+            F.sum("freq").cast("bigint").alias("n_words"),
+            F.sum(F.expr(f"freq * size({_SYMS})")).cast("bigint").alias("subword_tokens"),
         )
-        vocab_g = (
-            vocab_g.crossJoin(F.broadcast(best))
-            .select(F.expr(merge_expr).alias("sym"), "freq")
-            .localCheckpoint(eager=False)
+        .select(
+            "lang",
+            "n_words",
+            "subword_tokens",
+            F.round(
+                F.col("subword_tokens").cast("double") / F.col("n_words"), 6
+            ).alias("fertility"),
         )
-        vocab_l = (
-            vocab_l.crossJoin(F.broadcast(best))
-            .select("lang", F.expr(merge_expr).alias("sym"), "freq")
-            .localCheckpoint(eager=False)
-        )
-    return vocab_l.groupBy("lang").agg(
-        F.sum("freq").cast("bigint").alias("n_words"),
-        F.sum(F.expr(f"freq * size({_SYMS})")).cast("bigint").alias("subword_tokens"),
-    ).select(
-        "lang",
-        "n_words",
-        "subword_tokens",
-        F.round(
-            F.col("subword_tokens").cast("double") / F.col("n_words"), 6
-        ).alias("fertility"),
     )
-
-
-def _lang_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_mini_dw_spark.sources.tables import load_table
-
-    return load_table(spark, sf_dir, "documents").select("doc_id", "lang")
 
 
 def bpe_fertility_by_lang_sql() -> str:

@@ -62,8 +62,9 @@ def _token_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _word_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, source, w) — WORD_RE over lowercased text, stage-memoized;
-    the shared staging for the bigram/tf-idf/repetition/histogram family."""
+    """(doc_id, source, lang, w) — WORD_RE over lowercased text,
+    stage-memoized; the shared staging for the bigram/tf-idf/repetition/
+    histogram family and the BPE reports."""
 
     def build() -> DataFrame:
         return (
@@ -71,6 +72,7 @@ def _word_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "doc_id",
                 "source",
+                "lang",
                 F.regexp_extract_all(F.lower(F.col("text")), F.lit(WORD_RE), 0).alias("w"),
             )
             .localCheckpoint(eager=False)

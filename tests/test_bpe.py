@@ -2,7 +2,8 @@
 
 Oracle value parity is covered by test_oracle_parity; these pin the
 double-space merge encoding (the portability trick the operator rests
-on) and the classic BPE monotonicity property.
+on), the classic BPE monotonicity property, and the driver trainer
+against an independent tuple-based reference.
 """
 
 from __future__ import annotations
@@ -98,10 +99,11 @@ def _ref_bpe(word_freqs: dict[str, int], rounds: int):
 
 
 def test_bpe_matches_reference_implementation(spark):
-    """Drive the Spark training loop with synthetic histograms and compare
-    against the pure-Python reference on every round — the merge-table
-    values, not just shapes. Cases chosen to hit adjacent merge sites,
-    ties, and multi-round symbol growth."""
+    """Drive the training entry with synthetic histograms and compare
+    against the tuple-based reference on every round — the merge-table
+    values, not just shapes: the Spark symbol split feeding the driver
+    trainer, and the string-replace trainer on its own. Cases chosen to
+    hit adjacent merge sites, ties, and multi-round symbol growth."""
     cases = [
         ({"aaaa": 3, "aab": 2, "baa": 1}, 4),      # adjacent sites + chains
         ({"abab": 5, "ab": 2, "ba": 2}, 3),        # alternating pattern
@@ -110,6 +112,8 @@ def test_bpe_matches_reference_implementation(spark):
         ({"ab": 1, "cd": 1}, 2),                   # exact tie → largest pair
     ]
     for wf, rounds in cases:
+        want = _ref_bpe(wf, rounds)
+        assert bpe.train_merges([(list(w), f) for w, f in wf.items()], rounds) == want, wf
         hist = spark.createDataFrame(list(wf.items()), ["word", "freq"])
         got = [
             (r.sym_a, r.sym_b, r.pair_freq)
@@ -117,8 +121,15 @@ def test_bpe_matches_reference_implementation(spark):
             .orderBy("merge_round")
             .collect()
         ]
-        want = _ref_bpe(wf, rounds)
         assert got == want, (wf, got, want)
+
+
+def test_empty_histogram_trains_no_merges(spark):
+    """No words: zero merge rows, with the merge table's schema."""
+    hist = spark.createDataFrame([], "word string, freq bigint")
+    out = bpe.train_merges_from_hist(hist)
+    assert out.collect() == []
+    assert out.schema == bpe.MERGE_SCHEMA
 
 
 def test_train_merges_exhaustion_guard(spark):
@@ -136,3 +147,32 @@ def test_train_merges_exhaustion_guard(spark):
         .collect()
     ]
     assert got == _ref_bpe(wf, 4) == [("a", "b", 3)]
+
+
+def test_exhausted_table_follows_the_oracle(spark, tmp_path):
+    """A corpus with fewer than R_MERGES merges ('ab' and 'cd' hold one
+    pair each): the train line emits the two merges that exist, the apply
+    report's later rounds have NULL totals and fertility has no rows —
+    each exactly as its unrolled oracle over an empty pair set."""
+    import duckdb
+
+    from tests.oracle_harness import compare
+
+    docs = tmp_path / "documents.parquet"
+    spark.createDataFrame(
+        [(1, "ab ab cd", "en", "web"), (2, "Cd x", "fr", "web")],
+        "doc_id bigint, text string, lang string, source string",
+    ).write.parquet(str(docs))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}/*.parquet'")
+    try:
+        for fn, sql in [
+            (bpe.bpe_train_merges, bpe.bpe_train_merges_sql()),
+            (bpe.bpe_apply_report, bpe.bpe_apply_report_sql()),
+            (bpe.bpe_fertility_by_lang, bpe.bpe_fertility_by_lang_sql()),
+        ]:
+            compare(fn(spark, str(tmp_path)), con, sql, fn.__name__)
+    finally:
+        con.close()
+    assert bpe.bpe_train_merges(spark, str(tmp_path)).count() == 2
+    assert bpe.bpe_fertility_by_lang(spark, str(tmp_path)).count() == 0

@@ -1,6 +1,7 @@
-"""Spark-job budgets for the lines whose rounds run over bounded state,
-for every streaming line and for the SCD2/fact lifecycle lines; and the
-incremental loads' job counts, which must not vary from run to run.
+"""Spark-job budgets for the lines whose rounds run over bounded state or
+train on the driver, for every streaming line and for the SCD2/fact
+lifecycle lines; and the incremental loads' job counts, which must not
+vary from run to run.
 
 At fixture scale the unit of cost is the Spark job (each shuffle or
 broadcast stage under AQE is one driver job), and job counts do not
@@ -32,6 +33,12 @@ BUDGETS = {
     # integer k-means: one job per literal-argmin training round
     "ext_kmeans_ivf_assign": 7,
     "ext_pq_codes": 8,
+    # trained once on the driver, applied as literals (a cold session:
+    # the word memo and the histogram collect land on the first line)
+    "ext_bpe_apply_report": 7,
+    "ext_bpe_fertility_by_lang": 7,
+    "ext_bpe_train_merges": 5,
+    "ext_power_iteration_direction": 8,
     # bounded-replay streaming: micro-batches + sink writes + read-back
     "ext_events_streaming_tumbling": 3,
     "ext_streaming_asof_enrichment": 9,
@@ -76,6 +83,23 @@ def test_line_stays_within_job_budget(spark, sf_dir, name):
         f"{name}: {built - before} construction + "
         f"{jobs - (built - before)} execution jobs > budget {BUDGETS[name]}"
     )
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ext_bpe_apply_report",
+        "ext_bpe_fertility_by_lang",
+        "ext_bpe_train_merges",
+        "ext_power_iteration_direction",
+    ],
+)
+def test_trained_line_builds_without_jobs_once_trained(spark, sf_dir, name):
+    """A line that trains on the driver stages what it learned: once one
+    call has trained it, building the frame again (for an ``explain()``,
+    say) fires no job."""
+    QUERIES[name](spark, sf_dir)
+    assert _jobs(spark, lambda: QUERIES[name](spark, sf_dir)) == 0
 
 
 def test_bookkeeping_job_counts_do_not_depend_on_file_order(spark, tmp_path):

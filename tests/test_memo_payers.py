@@ -60,6 +60,10 @@ PAYERS = {
     "ivf_multiprobe_topk": ("query", "ext_ann_recall_report"),
     # the bucketed catalog tables: the line's only consumer builds them
     "bucketed_tables": ("query", "ext_bucketed_revenue_by_priority"),
+    # the BPE merge table: apply_report sorts before fertility and train
+    "bpe_merges": ("query", "ext_bpe_apply_report"),
+    # the 64 power-iteration weights: the line's only consumer trains them
+    "power_iteration_w": ("query", "ext_power_iteration_direction"),
 }
 
 
