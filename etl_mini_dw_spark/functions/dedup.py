@@ -698,9 +698,10 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup pair graph — every member labeled with its component's min
     doc_id (the canonical survivor a training pipeline keeps).
 
-    Iterative min-label propagation (the only iterative operator in the
-    engine): each round joins labels across edges and keeps the min;
-    stops at fixpoint. Rounds are O(component diameter) — near-dup
+    Iterative min-label propagation (one of the engine's two fixpoint
+    loops over data-sized state, beside the k-core peel in
+    `plans/graph.py`): each round joins labels across edges and keeps the
+    min; stops at fixpoint. Rounds are O(component diameter) — near-dup
     clusters are shallow, so a handful of broadcast-sized iterations;
     at 100 TB you'd switch to the large-star/small-star variant but the
     loop/checkpoint structure is identical. Oracle: DuckDB expresses the

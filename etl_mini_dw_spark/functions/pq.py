@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_mini_dw_spark.etl.store import rows_frame
 from etl_mini_dw_spark.functions import cluster
 from etl_mini_dw_spark.functions.simsearch import N_QUERIES, TOP_K
 from etl_mini_dw_spark.sources.tables import stage_memo
@@ -49,51 +50,33 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _codebooks_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ALL subspace codebooks trained in one fused loop: (m, code, cv).
+def _codebooks_all(spark: SparkSession, sf_dir: str) -> dict[int, list[tuple[int, list[int]]]]:
+    """ALL subspace codebooks trained in one fused loop: {m: [(code, cv), …]},
+    staged once per (session, sf-dir).
 
     The subspaces are the groups of `cluster.train_codebooks`, so one
     loop over the exploded (m, vec_id, sv) frame runs the same integer
     arithmetic per (m, code) key as M separate per-subspace loops, with
     M× fewer jobs and shuffles (PQ_ITERS rounds in total) — grouping by
     m cannot mix subspaces, so the trained centroids are bit-identical.
+    Every consumer reads the staged centroids: training never re-runs.
     """
 
-    def train() -> DataFrame:
+    def train() -> dict[int, list[tuple[int, list[int]]]]:
         subs = _quantized(spark, sf_dir).select(
             "vec_id",
             F.posexplode(
                 F.array(*[F.slice("qv", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
             ).alias("g", "v"),
         )
-        cents = cluster.train_codebooks(subs, PQ_K, PQ_SUB, PQ_ITERS)
-        return spark.createDataFrame(
-            [(m, code, cv) for m in sorted(cents) for code, cv in cents[m]],
-            "m int, code bigint, cv array<bigint>",
-        )
+        return cluster.train_codebooks(subs, PQ_K, PQ_SUB, PQ_ITERS)
 
     return stage_memo(spark, sf_dir, "pq_codebooks_all", train)
 
 
 def _codebook(spark: SparkSession, sf_dir: str, m: int) -> DataFrame:
-    """Subspace-m codebook, trained ONCE per (session, sf-dir).
-
-    Both consumers (vector encoding and the per-query ADC tables) and
-    both registered queries share the same staged centroids — training
-    is the expensive stage and must not re-run per consumer (the same
-    staged-frame rule as `stage_memo`; first cut of this module trained
-    every codebook twice and benched 2x slower). Since r09 the training
-    itself is fused across subspaces (`_codebooks_all`); this returns
-    the m-slice of the shared staged frame.
-    """
-    return stage_memo(
-        spark,
-        sf_dir,
-        f"pq_codebook_{m}",
-        lambda: _codebooks_all(spark, sf_dir)
-        .filter(F.col("m") == m)
-        .select("code", "cv"),
-    )
+    """Subspace-m codebook as a (code, cv) frame of literals."""
+    return rows_frame(spark, _codebooks_all(spark, sf_dir)[m], "code bigint, cv array<bigint>")
 
 
 def _sub(df: DataFrame, m: int) -> DataFrame:
@@ -104,12 +87,10 @@ def _sub(df: DataFrame, m: int) -> DataFrame:
 def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector PQ code word: (vec_id, code_0 … code_{M-1}).
 
-    ONE map-only projection: per subspace, the trained codebook (read
-    back from the staged frame) inlined into `cluster.argmin_literal` —
-    no argmin join, no self-joins to reassemble the columns."""
-    by_m: dict[int, list[tuple[int, list[int]]]] = {}
-    for r in _codebooks_all(spark, sf_dir).collect():
-        by_m.setdefault(int(r["m"]), []).append((int(r["code"]), list(r["cv"])))
+    ONE map-only projection: per subspace, the staged trained codebook
+    inlined into `cluster.argmin_literal` — no argmin join, no self-joins
+    to reassemble the columns."""
+    cents = _codebooks_all(spark, sf_dir)
     # slices hoisted to columns so each of the 8 folds per subspace
     # reads an attribute, not a re-evaluated slice
     staged = _quantized(spark, sf_dir).select(
@@ -122,7 +103,7 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return staged.select(
         "vec_id",
         *[
-            cluster.argmin_literal(f"sv{m}", sorted(by_m[m]))["key"]
+            cluster.argmin_literal(f"sv{m}", cents[m])["key"]
             .cast("int")
             .alias(f"code_{m}")
             for m in range(PQ_M)
@@ -167,8 +148,6 @@ def _adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage-memoized since r09 (see simsearch.ann_bruteforce_topk)."""
-    from etl_mini_dw_spark.sources.tables import stage_memo
-
     return stage_memo(
         spark,
         sf_dir,

@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_mini_dw_spark.sources.tables import load_table
+from etl_mini_dw_spark.etl.store import rows_frame
+from etl_mini_dw_spark.sources.tables import load_table, stage_memo
 
 N_QUERIES = 5  # vec_id < 5 act as the query set
 TOP_K = 5
@@ -85,8 +86,6 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries x k) rows, so the checkpoint is tiny while each re-build
     is a full index scan (same rationale as bm25_topk). Plan pins live
     on the pre-checkpoint builder ``_ann_bruteforce_topk_build``."""
-    from etl_mini_dw_spark.sources.tables import stage_memo
-
     return stage_memo(
         spark,
         sf_dir,
@@ -260,8 +259,6 @@ def ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries x k) rows, so the checkpoint is tiny while each re-build
     is a full index scan (same rationale as bm25_topk). Plan pins live
     on the pre-checkpoint builder ``_ivf_multiprobe_topk_build``."""
-    from etl_mini_dw_spark.sources.tables import stage_memo
-
     return stage_memo(
         spark,
         sf_dir,
@@ -472,8 +469,6 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries x k) rows, so the checkpoint is tiny while each re-build
     is a full index scan (same rationale as bm25_topk). Plan pins live
     on the pre-checkpoint builder ``_ann_int8_topk_build``."""
-    from etl_mini_dw_spark.sources.tables import stage_memo
-
     return stage_memo(
         spark,
         sf_dir,
@@ -643,8 +638,6 @@ def ann_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries x k) rows, so the checkpoint is tiny while each re-build
     is a full index scan (same rationale as bm25_topk). Plan pins live
     on the pre-checkpoint builder ``_ann_hamming_topk_build``."""
-    from etl_mini_dw_spark.sources.tables import stage_memo
-
     return stage_memo(
         spark,
         sf_dir,
@@ -1114,29 +1107,35 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python ints — the same centered int8 dot products, so scores are
     exact int64 and argmax ties break on cand_id.
     """
-    pools: dict[int, dict[int, tuple[int, list[int]]]] = {}
-    for r in _mmr_pool(spark, sf_dir).collect():
-        pools.setdefault(int(r["query_id"]), {})[int(r["cand_id"])] = (
-            int(r["rel"]),
-            [x - 128 for x in r["cc"]],
-        )
-    picks = []
-    for qid, pool in pools.items():
-        chosen: list[list[int]] = []
-        for rnd in range(1, min(MMR_K, len(pool)) + 1):
-            # max_sim over the picks so far (0 before the first pick)
-            scores = {
-                cand: _MMR_L * rel
-                - (10 - _MMR_L)
-                * max((sum(x * y for x, y in zip(cc, sc)) for sc in chosen), default=0)
-                for cand, (rel, cc) in pool.items()
-            }
-            cand = min(scores, key=lambda c: (-scores[c], c))
-            rel, cc = pool.pop(cand)
-            chosen.append(cc)
-            picks.append((qid, rnd, cand, scores[cand], rel))
-    return spark.createDataFrame(
-        picks,
+
+    def train() -> list[tuple[int, int, int, int, int]]:
+        pools: dict[int, dict[int, tuple[int, list[int]]]] = {}
+        for r in _mmr_pool(spark, sf_dir).collect():
+            pools.setdefault(int(r["query_id"]), {})[int(r["cand_id"])] = (
+                int(r["rel"]),
+                [x - 128 for x in r["cc"]],
+            )
+        picks = []
+        for qid, pool in pools.items():
+            chosen: list[list[int]] = []
+            for rnd in range(1, min(MMR_K, len(pool)) + 1):
+                # max_sim over the picks so far (0 before the first pick)
+                scores = {
+                    cand: _MMR_L * rel
+                    - (10 - _MMR_L)
+                    * max((sum(x * y for x, y in zip(cc, sc)) for sc in chosen), default=0)
+                    for cand, (rel, cc) in pool.items()
+                }
+                cand = min(scores, key=lambda c: (-scores[c], c))
+                rel, cc = pool.pop(cand)
+                chosen.append(cc)
+                picks.append((qid, rnd, cand, scores[cand], rel))
+        return picks
+
+    # staged once per (session, sf-dir): a second call runs no round
+    return rows_frame(
+        spark,
+        stage_memo(spark, sf_dir, "mmr_picks", train),
         "query_id bigint, pick_round int, cand_id bigint, score bigint, rel bigint",
     )
 

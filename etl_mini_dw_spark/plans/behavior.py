@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_mini_dw_spark.sources.tables import typed_table
+from etl_mini_dw_spark.etl.store import rows_frame
+from etl_mini_dw_spark.sources.tables import stage_memo, typed_table
 
 FUNNEL_STEPS = ("view", "click", "purchase")
 FUNNEL_BUDGET_HOURS = 24
@@ -949,46 +950,49 @@ MARKOV_SCALE = 1 << 20  # keeps w_raw*SCALE and w*c inside int64 at any sf
 def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, pi, empirical_share, gap): stationary distribution
     of the event-type transition chain vs the empirical visit share."""
-    trans = [
-        (row["from_type"], row["to_type"], int(row["n_transitions"]))
-        for row in event_transitions(spark, sf_dir).collect()
-    ]
-    r: dict[str, int] = {}
-    for i, _, c in trans:
-        r[i] = r.get(i, 0) + c
-    states = {t for i, j, _ in trans for t in (i, j)}
-    # Python `//` IS floor division — the pmod identity of the SQL
-    # spelling for every sign. Divisors are nonzero (r6 ADVICE): k ≥ 1
-    # whenever a state exists; r_i sums positive counts of i's own rows;
-    # tot ≥ 1 because mass is floor-conserved: Σ_j ⌊w·c_ij/r_i⌋ ≥
-    # w_i − k + 1 and w_i ≥ SCALE div k, positive whenever k(k−1) <
-    # SCALE = 2^20 — any chain with < ~1000 states, the regime a
-    # |types|² dense rollup targets in the first place.
-    w = {t: MARKOV_SCALE // len(states) for t in states}
-    for _ in range(MARKOV_ROUNDS):
-        w_raw: dict[str, int] = {}
-        for i, j, c in trans:
-            if i in w:
-                w_raw[j] = w_raw.get(j, 0) + (w[i] * c) // r[i]
-        tot = sum(w_raw.values())
-        w = {j: (v * MARKOV_SCALE) // tot for j, v in w_raw.items()}
-    w_frame = spark.createDataFrame(list(w.items()), "i string, w bigint")
-    emp = (
-        typed_table(spark, sf_dir, "events")
-        .groupBy(F.col("event_type").alias("i"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    emp_tot = emp.agg(F.sum("n").cast("bigint").alias("n_tot"))
-    out = (
-        w_frame.join(emp, "i")
-        .crossJoin(F.broadcast(emp_tot))
-        .select(
-            F.col("i").alias("event_type"),
-            F.round(F.col("w") / float(MARKOV_SCALE), 6).alias("pi"),
-            F.round(F.col("n") / F.col("n_tot").cast("double"), 6).alias(
-                "empirical_share"
-            ),
-        )
+
+    def train() -> list[tuple[str, int, int, int]]:
+        trans = [
+            (row["from_type"], row["to_type"], int(row["n_transitions"]))
+            for row in event_transitions(spark, sf_dir).collect()
+        ]
+        r: dict[str, int] = {}
+        for i, _, c in trans:
+            r[i] = r.get(i, 0) + c
+        states = {t for i, j, _ in trans for t in (i, j)}
+        # Python `//` IS floor division — the pmod identity of the SQL
+        # spelling for every sign. Divisors are nonzero (r6 ADVICE): k ≥ 1
+        # whenever a state exists; r_i sums positive counts of i's own rows;
+        # tot ≥ 1 because mass is floor-conserved: Σ_j ⌊w·c_ij/r_i⌋ ≥
+        # w_i − k + 1 and w_i ≥ SCALE div k, positive whenever k(k−1) <
+        # SCALE = 2^20 — any chain with < ~1000 states, the regime a
+        # |types|² dense rollup targets in the first place.
+        w = {t: MARKOV_SCALE // len(states) for t in states}
+        for _ in range(MARKOV_ROUNDS):
+            w_raw: dict[str, int] = {}
+            for i, j, c in trans:
+                if i in w:
+                    w_raw[j] = w_raw.get(j, 0) + (w[i] * c) // r[i]
+            tot = sum(w_raw.values())
+            w = {j: (v * MARKOV_SCALE) // tot for j, v in w_raw.items()}
+        # the empirical visit counts: one more tiny driver read
+        emp = {
+            row["i"]: int(row["n"])
+            for row in typed_table(spark, sf_dir, "events")
+            .groupBy(F.col("event_type").alias("i"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        n_tot = sum(emp.values())
+        # an equi-join on the type: a null type matches nothing
+        return [(i, w[i], emp[i], n_tot) for i in w if i is not None and i in emp]
+
+    # staged once per (session, sf-dir): a second call runs no job
+    staged = stage_memo(spark, sf_dir, "markov_stationary", train)
+    out = rows_frame(spark, staged, "i string, w bigint, n bigint, n_tot bigint").select(
+        F.col("i").alias("event_type"),
+        F.round(F.col("w") / float(MARKOV_SCALE), 6).alias("pi"),
+        F.round(F.col("n") / F.col("n_tot").cast("double"), 6).alias("empirical_share"),
     )
     return out.select(
         "event_type",

@@ -1,10 +1,15 @@
 """Independent checks for the r4 additions that have non-trivial
 algorithmic structure: the degree-oriented triangle count (vs a naive
-unoriented triple join) and the Merkle-bucket diff digest (the
-incremental-equals-full invariant must read as 64 matching buckets)."""
+unoriented triple join), the k-core peel (vs a pure-Python peel) and the
+Merkle-bucket diff digest (the incremental-equals-full invariant must
+read as 64 matching buckets)."""
 
 from __future__ import annotations
 
+import random
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 
 from etl_mini_dw_spark.plans import diff, graph
@@ -78,6 +83,76 @@ def test_kcore_trace_monotone_and_valid(spark, sf_dir):
     if sf_dir.rstrip("/").endswith("sf0.001"):
         assert rows[0]["n_nodes"] == rows[-1]["n_nodes"]
         assert rows[0]["n_edges"] == rows[-1]["n_edges"]
+
+
+def _peel_reference(undirected: list[tuple[int, int]]) -> list[tuple[int, int, int]]:
+    """The k-core trace by plain set arithmetic: every round drops the
+    vertices of degree < k, all of them at once."""
+    edges = {(a, b) for a, b in undirected} | {(b, a) for a, b in undirected}
+    trace = []
+    for r in range(1, graph.KCORE_ROUNDS + 1):
+        deg = Counter(src for src, _ in edges)
+        alive = {v for v, d in deg.items() if d >= graph.KCORE_K}
+        edges = {(s, d) for s, d in edges if s in alive and d in alive}
+        trace.append((r, len({s for s, _ in edges}), len(edges)))
+    return trace
+
+
+def _random_gnp(rng: random.Random, n: int, p: float) -> list[tuple[int, int]]:
+    return [(a, b) for a in range(n) for b in range(a + 1, n) if rng.random() < p]
+
+
+def _random_band(rng: random.Random, n: int, first: int) -> list[tuple[int, int]]:
+    """A path whose every vertex also links to the one two steps on, under
+    shuffled labels: each peel round removes only the two ends."""
+    label = list(range(first, first + n))
+    rng.shuffle(label)
+    return [(label[i], label[j]) for i in range(n) for j in (i + 1, i + 2) if j < n]
+
+
+def _random_tree(rng: random.Random, n: int) -> list[tuple[int, int]]:
+    return [(rng.randrange(i), i) for i in range(1, n)]
+
+
+def _fixpoint_round(trace: list[tuple[int, int, int]]) -> int | None:
+    """The first round that repeats the one before it, if any."""
+    for prev, cur in zip(trace, trace[1:]):
+        if prev[1:] == cur[1:]:
+            return cur[0]
+    return None
+
+
+_KCORE_CASES = {
+    # case: (seed, undirected edge list of a random graph)
+    "fixpoint_midway": (3, lambda rng: _random_gnp(rng, 40, 0.1)),
+    "no_fixpoint_in_rounds": (
+        4,
+        lambda rng: _random_gnp(rng, 12, 0.6) + _random_band(rng, 40, 100),
+    ),
+    "peels_to_empty": (4, lambda rng: _random_tree(rng, 30)),
+    "empty_graph": (0, lambda rng: []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_KCORE_CASES))
+def test_kcore_peel_matches_python_reference(spark, case):
+    seed, build = _KCORE_CASES[case]
+    undirected = build(random.Random(seed))
+    expected = _peel_reference(undirected)
+    # the generated graph really is the case it is named for
+    fixpoint = _fixpoint_round(expected)
+    if case == "fixpoint_midway":
+        assert fixpoint is not None and 2 < fixpoint < graph.KCORE_ROUNDS, expected
+    elif case == "no_fixpoint_in_rounds":
+        assert fixpoint is None, expected
+    elif case == "peels_to_empty":
+        assert expected[0][1] > 0 and expected[-1][1:] == (0, 0), expected
+    else:
+        assert all(r[1:] == (0, 0) for r in expected)
+    directed = [(a, b) for a, b in undirected] + [(b, a) for a, b in undirected]
+    edges = spark.createDataFrame(directed, "src bigint, dst bigint")
+    got = graph.kcore_peel_trace(edges).collect()
+    assert [tuple(r) for r in got] == expected
 
 
 def test_drilldown_localizes_geometrically(spark, sf_dir):

@@ -28,7 +28,7 @@ from etl_mini_dw_spark.registry import QUERIES
 BUDGETS = {
     # driver-exact rounds: one collect of the bounded statistics
     "ext_bradley_terry_brands": 10,
-    "ext_markov_stationary": 15,
+    "ext_markov_stationary": 8,
     "ext_mmr_diverse_topk": 8,
     # integer k-means: one job per literal-argmin training round
     "ext_kmeans_ivf_assign": 7,
@@ -39,6 +39,12 @@ BUDGETS = {
     "ext_bpe_fertility_by_lang": 7,
     "ext_bpe_train_merges": 5,
     "ext_power_iteration_direction": 8,
+    # the graph family over the shared edge memo (built cold here):
+    # PageRank is one lazy plan, k-core stops at its fixpoint
+    "ext_degree_assortativity": 10,
+    "ext_kcore_peel": 12,
+    "ext_pagerank_parts": 17,
+    "ext_triangle_count_parts": 14,
     # bounded-replay streaming: micro-batches + sink writes + read-back
     "ext_events_streaming_tumbling": 3,
     "ext_streaming_asof_enrichment": 9,
@@ -91,7 +97,11 @@ def test_line_stays_within_job_budget(spark, sf_dir, name):
         "ext_bpe_apply_report",
         "ext_bpe_fertility_by_lang",
         "ext_bpe_train_merges",
+        "ext_bradley_terry_brands",
+        "ext_markov_stationary",
+        "ext_mmr_diverse_topk",
         "ext_power_iteration_direction",
+        "ext_pq_codes",
     ],
 )
 def test_trained_line_builds_without_jobs_once_trained(spark, sf_dir, name):

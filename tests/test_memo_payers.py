@@ -35,7 +35,6 @@ PAYERS = {
     "text_word_lower": ("warmer", "text_words"),
     "pq_quantized": ("warmer", "pq_quantized"),
     "pq_codebooks_all": ("warmer", "pq_codebooks"),
-    "pq_codebook_{m}": ("warmer", "pq_codebooks"),
     "kmeans_assign": ("warmer", "kmeans_assign"),
     "graph_cooccur_edges": ("warmer", "graph_edges"),
     "api_dim_{key}": ("warmer", "dim_states"),
@@ -64,11 +63,15 @@ PAYERS = {
     "bpe_merges": ("query", "ext_bpe_apply_report"),
     # the 64 power-iteration weights: the line's only consumer trains them
     "power_iteration_w": ("query", "ext_power_iteration_direction"),
+    # driver-trained results, each staged by its only consumer
+    "bt_strengths": ("query", "ext_bradley_terry_brands"),
+    "markov_stationary": ("query", "ext_markov_stationary"),
+    "mmr_picks": ("query", "ext_mmr_diverse_topk"),
 }
 
 
 def _stage_name(arg: ast.expr) -> str | None:
-    """A literal stage name, or an f-string's template (``pq_codebook_{m}``);
+    """A literal stage name, or an f-string's template (``api_dim_{key}``);
     None for any other spelling."""
     if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
         return arg.value

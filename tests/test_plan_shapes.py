@@ -860,3 +860,19 @@ def test_simhash64_probes_multiblock_keys(spark, sf_dir):
     plan = _plan(dedup.simhash64_neardups(spark, sf_dir))
     assert "combo" in plan and "v1" in plan and "v3" in plan, plan[:3000]
     assert "band_val" not in plan, plan[:3000]
+
+
+def test_pagerank_is_one_lazy_plan_sharing_its_subplans(spark, sf_dir):
+    """PageRank's three rounds are one plan: over a warm edge memo,
+    building the frame runs no job, and the executed plan reuses the
+    edges⋈degree and node exchanges across the rounds instead of
+    checkpointing them."""
+    from etl_mini_dw_spark.plans import graph
+
+    graph.cooccur_edges_memo(spark, sf_dir).count()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    df = graph.pagerank_parts(spark, sf_dir)
+    assert dag.nextJobId() == before
+    df.collect()
+    assert "ReusedExchange" in _plan(df)
