@@ -52,11 +52,15 @@ def append(
     error: str | None = None,
 ) -> None:
     """S8 literal-row append; run_id = IDENTITY replacement (max+1)."""
+    exists = store.exists(RUNLOG_TABLE)
     next_id = 1
-    if store.exists(RUNLOG_TABLE):
+    if exists:
         ids = store.read(spark, RUNLOG_TABLE, SCHEMA).select("run_id").collect()
         next_id = max((r.run_id for r in ids), default=0) + 1
     row = (next_id, run_name, start_time, end_time)
     row += (rows_inserted, rows_updated, rows_deleted, status, error)
-    # one new file per run — never a rewrite of the existing log
-    rows_frame(spark, [row], SCHEMA).write.mode("append").parquet(store.path(RUNLOG_TABLE))
+    frame = rows_frame(spark, [row], SCHEMA)
+    if exists:  # one new file per run — never a rewrite of the existing log
+        frame.write.mode("append").parquet(store.path(RUNLOG_TABLE))
+    else:  # the first run writes the log with its recorded schema
+        store.write(frame, RUNLOG_TABLE)

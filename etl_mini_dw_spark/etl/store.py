@@ -18,18 +18,33 @@ garbage-collected on the next write. At 100 TB the same protocol holds
 per-table; on object stores you'd swap a manifest/metastore pointer
 instead of a directory (exactly what Delta/Iceberg formalize — this
 store is the minimal stand-in).
+
+Known schemas: ``write`` records the frame's schema, as a schema-less
+read would return it (every field nullable, partition columns last),
+in a ``_schema.json`` sidecar inside the temp dir before the swap.
+Spark's file listing skips ``_``-prefixed files, and the sidecar moves
+with its generation through every rename (the swap, ``_recover``,
+``._gen_*`` snapshots, a copied table dir), so no in-process state can
+go stale. ``read`` and ``read_generation`` read with it and run no
+schema-inference job; a dir without one (written by other code) falls
+back to ``sources.tables.read_parquet``'s cached inference.
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+from etl_mini_dw_spark.sources.tables import read_parquet
+
+SCHEMA_FILE = "_schema.json"
 
 
 def rows_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str) -> DataFrame:
@@ -45,6 +60,42 @@ def rows_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str)
     ]
     arr = F.array(*structs).cast(ArrayType(schema, containsNull=False))
     return spark.range(1, numPartitions=1).select(F.inline(arr))
+
+
+def _nullable(t: DataType) -> DataType:
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _file_schema(schema: StructType, partition_by: list[str] | None = None) -> StructType:
+    """``schema`` as a schema-less read of its written files returns it:
+    every field nullable, partition columns last."""
+    parts = partition_by or []
+    fields = [f for f in schema.fields if f.name not in parts] + [schema[p] for p in parts]
+    return _nullable(StructType(fields))
+
+
+def _recorded_schema(table_dir: str) -> StructType | None:
+    """The schema the store recorded for the generation in ``table_dir``."""
+    try:
+        with open(os.path.join(table_dir, SCHEMA_FILE)) as f:
+            return StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return None
+
+
+def _read_dir(spark: SparkSession, table_dir: str, schema: StructType | None = None) -> DataFrame:
+    schema = schema or _recorded_schema(table_dir)
+    if schema is None:
+        return read_parquet(spark, table_dir)
+    return spark.read.schema(schema).parquet(table_dir)
 
 
 class ParquetStore:
@@ -88,10 +139,10 @@ class ParquetStore:
         return os.path.isdir(self.path(name))
 
     def read(self, spark: SparkSession, name: str, schema: StructType | None = None) -> DataFrame:
-        """The current generation; a known ``schema`` skips the inference job."""
+        """The current generation, read with ``schema``, else with the
+        recorded one; only a table with neither is inferred."""
         self._recover(name)
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(self.path(name))
+        return _read_dir(spark, self.path(name), schema)
 
     def write(
         self,
@@ -117,6 +168,8 @@ class ParquetStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
+        with open(os.path.join(tmp, SCHEMA_FILE), "w") as f:
+            f.write(_file_schema(df.schema, partition_by).json())
         old = f"{final}._old_{uuid.uuid4().hex[:8]}"
         if os.path.isdir(final):
             os.rename(final, old)
@@ -149,7 +202,7 @@ class ParquetStore:
         gens = self.generations(name)
         if back > len(gens):
             raise ValueError(f"only {len(gens)} retained generations, asked back={back}")
-        return spark.read.parquet(gens[-back])
+        return _read_dir(spark, gens[-back])
 
     def _prune_generations(self, name: str, keep: int) -> None:
         gens = self.generations(name)
@@ -169,10 +222,17 @@ class ParquetStore:
         three days. Per-partition swap uses the same rename protocol as
         ``write`` (see ``_recover`` for the torn windows); cross-partition
         atomicity is what a real table format's commit log would add.
+        The table keeps its recorded schema, so ``df`` must match it.
         """
         assert values, "swap_partitions requires a non-empty touched set"
         self._recover(name)
         final = self.path(name)
+        recorded = _recorded_schema(final)
+        if recorded is not None and recorded != _file_schema(df.schema, [partition_col]):
+            raise ValueError(
+                f"swap_partitions: the frame's schema {df.schema.simpleString()} does not "
+                f"match {name}'s recorded {recorded.simpleString()}"
+            )
         tmp = f"{final}._tmp_{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
         for v in values:

@@ -152,12 +152,17 @@ def triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders); ties in the (deg, node) order are broken by node id via the
     composite integer key deg·2³² + node, portable to the oracle.
     """
-    edges = cooccur_edges_memo(spark, sf_dir)
-    g = edges.filter(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("pa"), F.col("dst").alias("pb")
-    )
+
+    def build() -> DataFrame:
+        edges = cooccur_edges_memo(spark, sf_dir)
+        g = edges.filter(F.col("src") < F.col("dst")).select(
+            F.col("src").alias("pa"), F.col("dst").alias("pb")
+        )
+        return orient_edges(g)
+
+    oriented = stage_memo(spark, sf_dir, "graph_oriented_edges", build)
     return (
-        triangle_corner_counts(g)
+        _corner_counts(oriented)
         .orderBy(F.col("n_triangles").desc(), "p_partkey")
         .limit(20)
     )
@@ -193,7 +198,9 @@ def orient_edges(g: DataFrame) -> DataFrame:
     out-degree d has d neighbors of degree ≥ d, so d² ≤ Σ deg = 2|E| and
     **max out-degree ≤ √(2|E|)** — a hub of degree H gets ALL its edges
     oriented inward (out-degree ~0) and can never own an H² wedge task.
-    Pinned on adversarial input by tests/test_skew.py."""
+    Pinned on adversarial input by tests/test_skew.py. Under AQE the
+    checkpoint runs the degree-join stages when it is called (4 jobs on
+    the co-occurrence graph), so ``triangle_count_parts`` stages it."""
     incidence = g.select(F.col("pa").alias("node")).unionAll(
         g.select(F.col("pb").alias("node"))
     )
@@ -219,7 +226,10 @@ def orient_edges(g: DataFrame) -> DataFrame:
 def triangle_corner_counts(g: DataFrame) -> DataFrame:
     """(p_partkey, n_triangles) for every vertex of an undirected
     (pa, pb) edge set, each triangle credited to all three corners."""
-    oriented = orient_edges(g)
+    return _corner_counts(orient_edges(g))
+
+
+def _corner_counts(oriented: DataFrame) -> DataFrame:
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     wedges = e1.join(
         e2,

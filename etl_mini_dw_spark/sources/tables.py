@@ -16,19 +16,25 @@ the driver-provided parquet tables (TESTDATA.md). Two contracts live here:
    the Spark-side casts (`typed_table`) and the oracle-side SQL text
    (`typed_source_sql`), so the two sides cannot drift.
 
-Scale note: these are plain ``spark.read.parquet`` scans — Catalyst
-pushes filters and prunes columns into the parquet reader, so every
-downstream operator automatically benefits (check ``PushedFilters`` /
-``ReadSchema`` in `.explain("formatted")`). No collect, no inference.
+Scale note: these are plain parquet scans — Catalyst pushes filters and
+prunes columns into the parquet reader, so every downstream operator
+automatically benefits (check ``PushedFilters`` / ``ReadSchema`` in
+`.explain("formatted")`). No collect, and no inference past the first
+read: a schema-less ``spark.read.parquet`` runs one Spark job to read a
+footer, on every call. ``read_parquet`` runs it once per (session,
+path, ``fingerprint``) and reads with ``spark.read.schema(...)`` from
+then on; a rewritten file changes the fingerprint and is inferred again.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -73,10 +79,42 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def fingerprint(path: str) -> tuple[tuple[str, int, int], ...]:
+    """Sorted (name, size, mtime_ns) of every file under ``path`` (or of
+    ``path`` itself): rewriting any file changes it. Empty when nothing
+    local is there."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    files = []
+    for dirpath, _, names in os.walk(path):
+        for n in names:
+            full = os.path.join(dirpath, n)
+            st = os.stat(full)
+            files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+_SCHEMAS: dict[tuple[str, str, tuple], StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A parquet read whose schema is inferred once per (session, path,
+    file fingerprint), then reused. The package's only schema-less
+    parquet read; a path with no local files is inferred every time."""
+    fp = fingerprint(path)
+    if not fp:
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, path, fp)
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Raw parquet scan for one source table."""
     _ensure_session_confs(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 T = TypeVar("T")

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_mini_dw_spark.sources.tables import events_ts_to_timestamp, typed_table
+from etl_mini_dw_spark.sources.tables import events_ts_to_timestamp, load_table, typed_table
 from etl_mini_dw_spark.streaming.machinery import (
     merge_sink,
     parquet_sink,
@@ -288,7 +288,7 @@ def streaming_enriched_segment_counts(spark: SparkSession, sf_dir: str) -> DataF
         "user_id", F.col("value").cast("decimal(14,2)").alias("value")
     )
     segments = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        load_table(spark, sf_dir, "customer")
         .select(F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment"))
     )
     enriched = stream.join(F.broadcast(segments), "user_id", "left").withColumn(

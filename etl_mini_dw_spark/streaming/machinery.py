@@ -45,7 +45,7 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_mini_dw_spark.etl.store import IdempotentForeachBatch, ParquetStore
-from etl_mini_dw_spark.sources.tables import _ensure_session_confs
+from etl_mini_dw_spark.sources.tables import load_table
 
 _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
@@ -76,10 +76,9 @@ def replay_events(spark: SparkSession, sf_dir: str, landing: str | None = None) 
     ``events.parquet``, or every ``*.parquet`` of a ``landing`` dir.
 
     The source carries the RAW parquet schema (the ts dtype varies by
-    testdata generation); topologies chain the typed-ingest conversions
-    they need. The file source wants a directory, hence the glob."""
-    _ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    testdata generation), inferred once per file by ``load_table``;
+    topologies chain the typed-ingest conversions they need. The file source wants a directory, hence the glob."""
+    raw_schema = load_table(spark, sf_dir, "events").schema
     return (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)

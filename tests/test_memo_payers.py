@@ -67,6 +67,8 @@ PAYERS = {
     "bt_strengths": ("query", "ext_bradley_terry_brands"),
     "markov_stationary": ("query", "ext_markov_stationary"),
     "mmr_picks": ("query", "ext_mmr_diverse_topk"),
+    # the degree-oriented triangle edges: the line's only consumer
+    "graph_oriented_edges": ("query", "ext_triangle_count_parts"),
 }
 
 

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from etl_mini_dw_spark import fixtures_spec as spec
 from etl_mini_dw_spark.etl import tracker
-from etl_mini_dw_spark.etl.orchestrate import Warehouse
+from etl_mini_dw_spark.etl.orchestrate import EXPECTED_TABLES, Warehouse
 from etl_mini_dw_spark.etl.store import ParquetStore
 from etl_mini_dw_spark.plans import validation
 
@@ -94,6 +94,30 @@ def test_runlog_and_tracker(wh, spark):
     for r in rows.values():
         assert r["last_successful_execution_time"] is not None
         assert r["last_successful_load"].year > 1900  # advanced past seed
+
+
+def test_stored_tables_read_as_their_files_infer(wh, spark):
+    """Every table reads with the schema its writer recorded: the schema,
+    nullability included, and the rows of a schema-less read of its files."""
+    for name in EXPECTED_TABLES:
+        got = wh.store.read(spark, name)
+        inferred = spark.read.parquet(wh.store.path(name))
+        assert got.schema == inferred.schema, name
+        assert got.exceptAll(inferred).count() == 0, name
+        assert inferred.exceptAll(got).count() == 0, name
+
+
+def test_copied_tables_read_without_a_job(wh, spark, tmp_path):
+    """A table dir copied into a fresh store carries its recorded schema,
+    so reading it fires no schema-inference job."""
+    store = ParquetStore(str(tmp_path))
+    for name in EXPECTED_TABLES:
+        shutil.copytree(wh.store.path(name), store.path(name))
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    frames = [store.read(spark, name) for name in EXPECTED_TABLES]
+    assert sched.nextJobId() == before
+    assert [f.count() for f in frames] == [wh.table(n).count() for n in EXPECTED_TABLES]
 
 
 def test_fail_logging(spark, sf_dir, tmp_path_factory):
