@@ -77,7 +77,8 @@ def replay_events(spark: SparkSession, sf_dir: str, landing: str | None = None) 
 
     The source carries the RAW parquet schema (the ts dtype varies by
     testdata generation), inferred once per file by ``load_table``;
-    topologies chain the typed-ingest conversions they need. The file source wants a directory, hence the glob."""
+    topologies chain the typed-ingest conversions they need. The file
+    source wants a directory, hence the glob."""
     raw_schema = load_table(spark, sf_dir, "events").schema
     return (
         spark.readStream.schema(raw_schema)
