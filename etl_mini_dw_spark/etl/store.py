@@ -283,16 +283,25 @@ class ParquetStore:
         and scan cost becomes file-open-bound. Production (Delta
         ``OPTIMIZE``) bin-packs per partition with a commit log;
         this is the same rewrite with directory-swap atomicity. No-op
-        (zero rewrite cost) when the table already meets the target.
+        (zero rewrite cost) when the table already meets the target. A
+        partitioned table stays partitioned by the columns of its
+        first-level ``name=value`` dirs, as Spark's discovery finds them.
         """
         files = self.data_files(name)
         total = sum(os.path.getsize(f) for f in files)
         n_target = max(1, -(-total // target_file_bytes))
         if n_target >= len(files):
             return (len(files), len(files))
+        parts = sorted(
+            {
+                d.name.split("=", 1)[0]
+                for d in os.scandir(self.path(name))
+                if d.is_dir() and "=" in d.name and not d.name.startswith((".", "_"))
+            }
+        )
         # post-state must be materialized before the swap unlinks its input
         post = self.read(spark, name).coalesce(n_target).localCheckpoint()
-        self.write(post, name)
+        self.write(post, name, partition_by=parts)
         return (len(files), len(self.data_files(name)))
 
     def write_clustered(

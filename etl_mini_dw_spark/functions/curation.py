@@ -12,11 +12,12 @@ Two ops a training pipeline runs AFTER scoring (text.py) and dedup
   (curriculum ordering / stratified eval splits). ``ntile`` needs a
   per-partition sort and per-language partitions are corpus-sized at
   100 TB, so the decile label is computed CLOSED-FORM from each row's
-  exact global rank instead (r6 VERDICT task #2): a (lang, coarse
-  score bucket) histogram gives cumulative-rows-before per bucket, a
-  window partitioned by (lang, bucket) gives the within-bucket offset,
-  and `quantiles.ntile_label_cols` maps (rank, n) to the identical
-  ntile label. The oracle keeps the ntile spelling as the spec.
+  exact global rank instead: `quantiles.cum_below` counts the
+  language's documents with a lower score (a coarse histogram read on
+  the driver plus a window partitioned by (lang, bucket)), a row_number
+  within the (lang, score) tie group adds the doc_id order, and
+  `quantiles.ntile_label_cols` maps (rank, n) to the identical ntile
+  label. The oracle keeps the ntile spelling as the spec.
 
 Determinism: quality_score is the shared `text.quality_score_col`
 expression (round-6 double, engine-identical); orderings always
@@ -28,7 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_mini_dw_spark.functions.quantiles import ntile_bounds, ntile_label_cols
+from etl_mini_dw_spark.functions.quantiles import (
+    cum_below,
+    n_below,
+    ntile_bounds,
+    ntile_label_cols,
+)
 from etl_mini_dw_spark.functions.text import QUALITY_SQL, quality_score_col
 from etl_mini_dw_spark.sources.tables import load_table
 
@@ -74,36 +80,20 @@ def quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Value-identical to ``ntile(10) OVER (PARTITION BY lang ORDER BY
     quality_score, doc_id)`` — the (score, doc_id) ordering is total, so
     each row's decile is a closed-form function of its exact rank. Rank
-    = bucket cumulative-before + row_number within the (lang, coarse
-    bucket) window; no per-language global sort (windows are bounded by
-    the 0.01 score bucket, the histogram is langs × ≤101 rows)."""
+    = docs of the language with a lower score (``quantiles.cum_below``,
+    a window partitioned by (lang, coarse bucket)) + row_number within
+    the (lang, score) tie group; no per-language global sort."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", quality_score_col().alias("quality_score")
+        "doc_id", "lang", quality_score_col().alias("val")
     )
-    docs = docs.withColumn(
-        "hb", F.floor(F.col("quality_score") / F.lit(0.01)).cast("bigint")
-    )
-    hist = docs.groupBy("lang", "hb").agg(F.count(F.lit(1)).alias("c"))
-    w_before = (
-        Window.partitionBy("lang")
-        .orderBy("hb")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    hist = hist.select(
-        "lang",
-        "hb",
-        F.coalesce(F.sum("c").over(w_before), F.lit(0)).alias("cum_before"),
-        F.sum("c").over(Window.partitionBy("lang")).alias("n"),
-    )
-    w_in = Window.partitionBy("lang", "hb").orderBy("quality_score", "doc_id")
-    ranked = docs.join(F.broadcast(hist), ["lang", "hb"]).withColumn(
-        "rank", F.col("cum_before") + F.row_number().over(w_in)
-    )
-    return ranked.select(
+    w_tie = Window.partitionBy("lang", "val").orderBy("doc_id")
+    return cum_below(docs, ["lang"]).select(
         "doc_id",
         "lang",
-        "quality_score",
-        ntile_label_cols(F.col("n"), F.col("rank"), N_DECILES).alias("decile"),
+        F.col("val").alias("quality_score"),
+        ntile_label_cols(
+            F.col("total"), F.col("below") + F.row_number().over(w_tie), N_DECILES
+        ).alias("decile"),
     )
 
 
@@ -145,8 +135,6 @@ def quality_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-tab of quality score vs avg surprisal; 'tile_corr' row =
     Pearson r of the tile indices; 'top_overlap' row = share of
     best-quality-tile docs that are also in the lowest-surprisal tile."""
-    from pyspark.sql import Window
-
     from etl_mini_dw_spark.functions import lm
     from etl_mini_dw_spark.functions.text import quality_score_col
 
@@ -167,18 +155,12 @@ def quality_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.join(sur, "doc_id").localCheckpoint(eager=False)
 
     def tiles(col: str, alias: str) -> DataFrame:
-        # quintile edges via two-pass bucket selection (quantiles.py) —
-        # value-identical to the oracle's ntile max-per-tile, no global
-        # row sort (r6 VERDICT task #2)
+        # quintile edges via quantiles.ntile_bounds — value-identical to
+        # the oracle's ntile max-per-tile, no global row sort
         bounds = ntile_bounds(base.select(F.col(col).alias("val")), QS_TILES)
-        return base.crossJoin(F.broadcast(bounds)).select(
+        return base.select(
             "doc_id",
-            (
-                F.lit(QS_TILES)
-                - F.size(F.expr(f"filter(barr, x -> x < {col})"))
-            )
-            .cast("bigint")
-            .alias(alias),
+            (F.lit(QS_TILES) - n_below(bounds, F.col(col))).cast("bigint").alias(alias),
         )
 
     tiled = tiles("q", "q_tile").join(tiles("s", "s_tile"), "doc_id")

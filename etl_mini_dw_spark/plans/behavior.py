@@ -408,17 +408,17 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     per metric: ties land in the same bin deterministically on both
     engines, and no interpolated double ever feeds a comparison.
 
-    Scale (r7 VERDICT task #2): the boundaries come from
-    ``quantiles.ceil_rank_bounds`` — one partial-aggregable value
-    rollup per metric plus windows over histogram/dictionary rows —
-    never a global row_number sort of the customer aggregate; the bin
-    is ``1 + #(boundaries < value)``, provably identical to the
-    ``value ≤ boundary_q`` CASE chain even with duplicate edges (the
-    oracle keeps the row_number spelling as the executable spec).
+    Scale: the boundaries come from ``quantiles.ceil_rank_bounds`` — a
+    coarse histogram per metric read on the driver, then the target
+    buckets' value dictionaries — never a global row_number sort of the
+    customer aggregate; the bin is ``1 + #(boundaries < value)`` against
+    one literal array, provably identical to the ``value ≤ boundary_q``
+    CASE chain even with duplicate edges (the oracle keeps the
+    row_number spelling as the executable spec).
     Quintiles are ascending (r=1 ⇒ most recent, f=5 ⇒ most orders,
     m=5 ⇒ highest spend).
     """
-    from etl_mini_dw_spark.functions.quantiles import ceil_rank_bounds
+    from etl_mini_dw_spark.functions.quantiles import ceil_rank_bounds, n_below
 
     orders = typed_table(spark, sf_dir, "orders")
     anchor = orders.agg(F.max("o_orderdate").alias("anchor"))
@@ -438,22 +438,21 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    bounds = None
-    for metric, _, tag in RFM_METRICS:
-        b = ceil_rank_bounds(
-            base.select(F.col(metric).alias("val")), 5
-        ).select(F.col("barr").alias(f"{tag}arr"))
-        bounds = b if bounds is None else bounds.crossJoin(b)
+    bounds = {
+        tag: ceil_rank_bounds(base.select(F.col(metric).alias("val")), 5)
+        for metric, _, tag in RFM_METRICS
+    }
 
     def _bin(metric: str, tag: str) -> F.Column:
         # 1 + #(boundary < value): equals the ascending `value ≤ b_q`
         # CASE chain — with duplicate edges both skip the same q's.
         return (
-            F.lit(1)
-            + F.size(F.expr(f"filter({tag}arr, x -> x < {metric})"))
-        ).cast("int").alias(f"{tag}_quintile")
+            (F.lit(1) + n_below(bounds[tag], F.col(metric)))
+            .cast("int")
+            .alias(f"{tag}_quintile")
+        )
 
-    return base.crossJoin(F.broadcast(bounds)).select(
+    return base.select(
         "custkey",
         "recency_days",
         "frequency",

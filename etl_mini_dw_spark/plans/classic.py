@@ -710,22 +710,23 @@ LIMIT 50
 # CV² = (n_w·Σq² − T²)/T², so X ⇔ 4·(n_w·Σq² − T²) ≤ T² — no rounded
 # float ever gates a class boundary.
 #
-# Scale (r7 VERDICT task #2): NO global cumulative window. A part's
+# Scale: NO global cumulative window. A part's
 # cumulative revenue in the (r DESC, pk ASC) order decomposes as
 # S(>r) + tie_rank·r where S(>r) = total revenue of strictly-richer
-# parts (read off a ≤1025-bucket coarse histogram + the bucket's value
-# dictionary — the quantiles.py two-pass discipline, here weighted by
-# revenue instead of row count) and tie_rank = row_number within the
-# r-tie group (window partitioned by r — tie-group-sized, essentially
-# singleton for a continuous revenue measure). Raw parts are touched by
-# map-side-combinable aggregates only; the one global window scans the
-# coarse histogram.
+# parts (``quantiles.cum_below`` over −r, weighted by revenue: a coarse
+# histogram read on the driver plus a window partitioned by bucket) and
+# tie_rank = row_number within the r-tie group (window partitioned by r
+# — tie-group-sized, essentially singleton for a continuous revenue
+# measure). Raw parts are touched by map-side-combinable aggregates and
+# bucket- or tie-partitioned windows only.
 
 
 def abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(abc, xyz, n_parts, revenue_share): the 3×3 ABC-XYZ census of
     all parts with any sales, revenue share per cell rounded-6."""
     from pyspark.sql import Window
+
+    from etl_mini_dw_spark.functions.quantiles import cum_below
 
     li = typed_table(spark, sf_dir, "lineitem")
     rev = li.groupBy(F.col("l_partkey").alias("pk")).agg(
@@ -734,68 +735,17 @@ def abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("r")
     ).localCheckpoint(eager=False)
-    # value dictionary (distinct revenue values, tie counts) + coarse
-    # histogram keyed by floor((r−min)/width), width from min/max —
-    # bucket order == value order, ≤ ~1025 buckets at any range
-    dict_r = rev.groupBy("r").agg(F.count(F.lit(1)).alias("cnt"))
-    mm = dict_r.agg(
-        F.min("r").cast("double").alias("_mn"),
-        F.max("r").cast("double").alias("_mx"),
-    )
-    w_col = F.greatest(
-        (F.col("_mx") - F.col("_mn")) / F.lit(1024.0), F.lit(1e-12)
-    )
-    dict_r = dict_r.crossJoin(F.broadcast(mm)).select(
-        "r",
-        "cnt",
-        F.floor((F.col("r").cast("double") - F.col("_mn")) / w_col)
-        .cast("bigint")
-        .alias("hb"),
-    )
-    hist = dict_r.groupBy("hb").agg(
-        F.sum(F.col("r") * F.col("cnt")).alias("brev")
-    )
-    # metadata-sized cumulative scan: revenue in strictly-richer buckets
-    w_above = Window.orderBy(F.col("hb").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    hist = hist.select(
-        "hb",
-        F.coalesce(F.sum("brev").over(w_above), F.lit(0)).alias("above"),
-    )
-    tot = dict_r.agg(
-        F.sum(F.col("r") * F.col("cnt")).cast("bigint").alias("tot")
-    )
-    # S(>r) per distinct value: richer-bucket total + richer values
-    # within the bucket (window over the bucket's value dictionary)
-    w_in = Window.partitionBy("hb").orderBy(F.col("r").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    s_gt = (
-        dict_r.join(F.broadcast(hist), "hb")
-        .select(
-            "r",
-            (
-                F.col("above")
-                + F.coalesce(
-                    F.sum(F.col("r") * F.col("cnt")).over(w_in), F.lit(0)
-                )
-            ).cast("bigint").alias("s_gt"),
-        )
-    )
+    # below(−r) = revenue of the strictly-richer parts; total = all revenue.
     # tie_rank within the r group reproduces the (r DESC, pk ASC)
-    # cumulative exactly: cum = s_gt + tie_rank·r
+    # cumulative exactly: cum = S(>r) + tie_rank·r
     w_tie = Window.partitionBy("r").orderBy("pk")
     abc = (
-        rev.join(s_gt, "r")
-        .crossJoin(F.broadcast(tot))
+        cum_below(rev.withColumn("val", -F.col("r")), [], weight="r")
         .select(
             "pk",
             "r",
-            (F.col("s_gt") + F.row_number().over(w_tie) * F.col("r")).alias(
-                "cum"
-            ),
-            "tot",
+            (F.col("below") + F.row_number().over(w_tie) * F.col("r")).alias("cum"),
+            F.col("total").alias("tot"),
         )
         .select(
             "pk",
@@ -1266,20 +1216,19 @@ FROM base
 # curve of per-customer revenue at decile resolution plus its trapezoid
 # Gini — "what share of revenue do the bottom k/10 of customers carry".
 # Decile membership is value-identical to ``ntile(10) OVER (ORDER BY
-# y, c_custkey)`` but derived WITHOUT a global sort: the rank comes from
-# a coarse value-histogram (cumulative-before + in-bucket row_number,
-# the `quality_deciles` discipline) and the closed-form
-# ``ntile_label_cols``. The histogram WIDTH is derived from a max()
-# pass over the same frame (r7 ADVICE: no hard-coded widths) so the
-# histogram stays <= ~1001 rows at any revenue scale.
+# y, c_custkey)`` but derived WITHOUT a global sort: a customer's rank is
+# the count of customers with a smaller y (``quantiles.cum_below``: a
+# coarse histogram read on the driver plus a bucket-partitioned window)
+# plus its row_number within its y-tie group, and the closed-form
+# ``ntile_label_cols`` maps the rank to the decile.
 #
 # Determinism: per-decile counts and cent sums are exact BIGINTs;
 # shares and the trapezoid Gini are identical-order double expressions
 # over the 10-row rollup, round-6.
 #
 # Scale: one o_custkey groupBy + spine join (dim-sized), the histogram
-# shuffle, in-bucket windows bounded by bucket population, a 10-row
-# rollup. No customer-wide single-partition window.
+# pass, windows bounded by a bucket or a tie group, a 10-row rollup. No
+# customer-wide single-partition window.
 
 LORENZ_TILES = 10
 
@@ -1294,7 +1243,7 @@ def _lorenz_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from etl_mini_dw_spark.functions.quantiles import ntile_label_cols
+    from etl_mini_dw_spark.functions.quantiles import cum_below, ntile_label_cols
 
     cust = typed_table(spark, sf_dir, "customer").select("c_custkey")
     orders = typed_table(spark, sf_dir, "orders")
@@ -1303,27 +1252,14 @@ def _lorenz_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     units = (
         cust.join(per, "c_custkey", "left")
-        .select("c_custkey", F.coalesce(F.col("y"), F.lit(0)).cast("bigint").alias("y"))
-        .localCheckpoint(eager=False)  # width pass + histogram + rank join
+        .select("c_custkey", F.coalesce(F.col("y"), F.lit(0)).cast("bigint").alias("val"))
+        .localCheckpoint(eager=False)  # histogram passes + rank windows
     )
-    width = units.agg(
-        F.greatest(
-            F.lit(1).cast("bigint"), F.expr("max(y) div 1000")
-        ).alias("w")
-    )
-    bucketed = units.crossJoin(F.broadcast(width)).select(
-        "c_custkey", "y", F.expr("y div w").alias("hb")
-    )
-    hist = bucketed.groupBy("hb").agg(F.count(F.lit(1)).alias("c"))
-    w_before = Window.orderBy("hb").rowsBetween(Window.unboundedPreceding, -1)
-    hist = hist.select(
-        "hb",
-        F.coalesce(F.sum("c").over(w_before), F.lit(0)).alias("cum_before"),
-        F.sum("c").over(Window.partitionBy()).alias("n"),
-    )
-    w_in = Window.partitionBy("hb").orderBy("y", "c_custkey")
-    ranked = bucketed.join(F.broadcast(hist), "hb").withColumn(
-        "rank", F.col("cum_before") + F.row_number().over(w_in)
+    w_tie = Window.partitionBy("val").orderBy("c_custkey")
+    ranked = cum_below(units, []).select(
+        F.col("val").alias("y"),
+        F.col("total").alias("n"),
+        (F.col("below") + F.row_number().over(w_tie)).alias("rank"),
     )
     tiles = (
         ranked.select(

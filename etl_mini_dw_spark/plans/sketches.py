@@ -516,17 +516,12 @@ def _hdr_lb_expr(v: str) -> str:
     return f"shiftleft(shiftright({v}, {s}), {s})"
 
 
-def hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(quantile, rank, exact_c, est_c, rel_err): o_totalprice quantiles
-    (in exact cents) estimated from the integer HDR histogram vs the
-    exact order statistic, with the signed relative error."""
-    orders = typed_table(spark, sf_dir, "orders")
-    vals = orders.select(
-        (F.col("o_totalprice") * 100).cast("bigint").alias("v")
-    )
-    hist = vals.groupBy(F.expr(_hdr_lb_expr("v")).alias("lb")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
+def hdr_report(hist: DataFrame, vals: DataFrame) -> DataFrame:
+    """(quantile, rank, exact_c, est_c, rel_err): each ``HDR_QSPECS``
+    quantile estimated from the ``(lb, cnt)`` histogram ``hist`` vs the
+    exact order statistic of the integer values ``vals.v``, with the
+    signed relative error. The batch sketch and the streamed one share
+    this report."""
     wcum = Window.orderBy("lb").rowsBetween(Window.unboundedPreceding, 0)
     cum_hist = hist.select("lb", F.sum("cnt").over(wcum).alias("cum"))
     by_v = vals.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
@@ -571,6 +566,20 @@ def hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("quantile")
     )
+
+
+def hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(quantile, rank, exact_c, est_c, rel_err): o_totalprice quantiles
+    (in exact cents) estimated from the integer HDR histogram vs the
+    exact order statistic, with the signed relative error."""
+    orders = typed_table(spark, sf_dir, "orders")
+    vals = orders.select(
+        (F.col("o_totalprice") * 100).cast("bigint").alias("v")
+    )
+    hist = vals.groupBy(F.expr(_hdr_lb_expr("v")).alias("lb")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    )
+    return hdr_report(hist, vals)
 
 
 def hdr_quantile_sketch_sql() -> str:

@@ -21,7 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_mini_dw_spark.functions.quantiles import ntile_bounds
+from etl_mini_dw_spark.etl.store import rows_frame
+from etl_mini_dw_spark.functions.quantiles import (
+    cum_below,
+    n_below,
+    ntile_bounds,
+    values_at_ranks,
+)
 from etl_mini_dw_spark.sources.tables import fanout_scan, typed_table
 
 _REV = "l_extendedprice * (1 - l_discount)"
@@ -180,68 +186,28 @@ FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) events
 
 
 # --- exact median by distributed selection (no per-group full sort) ---------
-MEDIAN_BUCKET_WIDTH = 10  # histogram bucket width for the selection pass
 
 
 def value_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact (lower) median of ``value`` per event_type via two-pass
-    bucket SELECTION instead of a per-group sort.
+    """Exact (lower) median of ``value`` per event_type, read at rank
+    ⌈n/2⌉ by ``quantiles.values_at_ranks`` instead of a per-group sort.
 
     The scale point: an order-statistic window sorts every group's full
-    value set (winsorize's documented cost). Selection needs only
-    (1) a histogram aggregate — one partial-aggregable shuffle keyed by
-    (type, bucket), counts only; (2) a cumulative scan over the TINY
-    (type, bucket) table to find the bucket holding rank ⌈n/2⌉ and the
-    in-bucket offset; (3) one more aggregate restricted to rows of the
-    median bucket (≈ n/buckets rows per group) to take the offset-th
-    value. Raw values cross the wire once as counts and once as one
-    bucket's worth of rows — at 100 TB that is the difference between
-    sorting 100 TB and sorting ~0.1% of it. Median is a real data point
-    (exact DECIMAL → double), identical rank convention to the
-    order-statistic oracle by construction.
+    value set (winsorize's documented cost). Selection reads a coarse
+    (type, bucket) histogram on the driver and then only the median
+    bucket's rows, so raw values cross the wire once as counts and once
+    as one bucket's value dictionary. The median is a real data point
+    (exact DECIMAL → double); the row_number oracle's tie-break by
+    event_id cannot move a value at a fixed rank.
     """
-    ev = typed_table(spark, sf_dir, "events").select("event_type", "value", "event_id")
-    bucket = F.expr(f"CAST(value div {MEDIAN_BUCKET_WIDTH} AS BIGINT)")
-    hist = ev.groupBy(F.col("event_type"), bucket.alias("b")).agg(
-        F.count(F.lit(1)).alias("c")
+    ev = typed_table(spark, sf_dir, "events").select(
+        "event_type", F.col("value").alias("val")
     )
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_n = Window.partitionBy("event_type")
-    ranked = hist.select(
-        "event_type",
-        "b",
-        "c",
-        F.sum("c").over(w_cum).alias("cum"),
-        F.sum("c").over(w_n).alias("n"),
-    )
-    k = F.expr("(n + 1) div 2")  # lower-median rank
-    target = ranked.filter((F.col("cum") >= k) & (F.col("cum") - F.col("c") < k)).select(
-        "event_type",
-        F.col("b").alias("mb"),
-        (k - (F.col("cum") - F.col("c"))).alias("offset"),
-        "n",
-    )
-    in_bucket = ev.join(F.broadcast(target), "event_type").filter(bucket == F.col("mb"))
-    w_in = Window.partitionBy("event_type").orderBy("value", "event_id")
-    return (
-        in_bucket.select(
-            "event_type",
-            "n",
-            "value",
-            F.row_number().over(w_in).alias("rn"),
-            "offset",
-        )
-        .filter(F.col("rn") == F.col("offset"))
-        .select(
-            "event_type",
-            F.col("n").cast("bigint").alias("n"),
-            F.col("value").cast("double").alias("median"),
-        )
-    )
+    med = values_at_ranks(ev, ["event_type"], lambda n: [(n + 1) // 2])
+    rows = [(k[0], n, v[0]) for k, (n, v) in med.items()]
+    return rows_frame(
+        spark, rows, "event_type string, n bigint, median decimal(14,2)"
+    ).select("event_type", "n", F.col("median").cast("double").alias("median"))
 
 
 VALUE_EXACT_MEDIAN_SQL = """
@@ -649,19 +615,16 @@ def _psi_metric(
     are exact, no float enters until the final pa/pb ratios. Laplace
     (+1) smoothing keeps empty buckets finite and deterministic.
 
-    The edges come from ``quantiles.ntile_bounds`` (two-pass bucket
-    selection over a min/max-derived coarse histogram) — value-identical
-    to the oracle's ntile max-per-tile spelling, with no global row
-    sort; the r6 single-partition ntile Window is gone."""
+    The edges come from ``quantiles.ntile_bounds`` (read off a coarse
+    histogram on the driver) — value-identical to the oracle's ntile
+    max-per-tile spelling, with no global row sort."""
     sliced = df.select(
         F.col(val_col).alias("val"),
         (F.col(split_col) < PSI_CUTOFF).alias("is_a"),
     )
-    a = sliced.filter("is_a")
-    bounds = ntile_bounds(a, PSI_BUCKETS)
-    bucketed = sliced.crossJoin(F.broadcast(bounds)).select(
-        "is_a",
-        (F.lit(1) + F.size(F.expr("filter(barr, x -> x < val)"))).alias("bucket"),
+    bounds = ntile_bounds(sliced.filter("is_a"), PSI_BUCKETS)
+    bucketed = sliced.select(
+        "is_a", (F.lit(1) + n_below(bounds, F.col("val"))).alias("bucket")
     )
     counts = bucketed.groupBy("bucket").agg(
         F.sum(F.when(F.col("is_a"), 1).otherwise(0)).alias("ca"),
@@ -691,11 +654,11 @@ def psi_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns between the pre-/post-1995 halves of the corpus — the drift
     gate a feature pipeline runs before trusting a retrain window.
 
-    Scale: boundary deciles come from `quantiles.ntile_bounds` — one
-    partial-aggregable value rollup plus windows over histogram/
-    dictionary rows, no global row sort (r6 VERDICT task #2); bucketing
-    is a map-only broadcast compare and the counts are one partial-
-    aggregable shuffle per metric."""
+    Scale: boundary deciles come from `quantiles.ntile_bounds` — a
+    coarse histogram read on the driver, then the target buckets' value
+    dictionaries; no global row sort. Bucketing is a map-only compare
+    against a literal array and the counts are one partial-aggregable
+    shuffle per metric."""
     orders = typed_table(spark, sf_dir, "orders")
     li = typed_table(spark, sf_dir, "lineitem")
     out = _psi_metric(orders, "orders.o_totalprice", "o_totalprice", "o_orderdate")
@@ -1109,9 +1072,10 @@ def spearman_rank_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan (two corpus passes total, no global per-row sort — the first
     cut's 4 single-partition row-level rank windows ran 10.5 s at sf0.1
     and would not survive 100 TB):
-    1. ONE GROUPING SETS shuffle builds all four value histograms in a
-       single partial-aggregable pass; the cumulative midrank windows
-       then run over |distinct values| rows only (checkpointed).
+    1. ONE partial-aggregable pass builds all four value histograms as
+       one tall (var, val) → cnt frame; ``quantiles.cum_below`` gives
+       every distinct value its count strictly below, with one window
+       partitioned by (var, coarse bucket) over |distinct values| rows.
     2. The per-variable Σcnt·r2 / Σcnt·r2² sufficient statistics come
        straight off the tiny histograms — only the six CROSS products
        need the corpus, via one pass with the four val→2·midrank maps
@@ -1119,68 +1083,34 @@ def spearman_rank_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
        measured faster than building its 583k-entry broadcast; the three
        ≤50-row maps broadcast)."""
     li = typed_table(spark, sf_dir, "lineitem").select(*CORR_VARS)
-    gs = (
-        li.groupingSets([[v] for v in CORR_VARS], *CORR_VARS)
+    cells = F.array(
+        *[
+            F.struct(F.lit(v).alias("var"), F.col(v).cast("decimal(14,2)").alias("val"))
+            for v in CORR_VARS
+        ]
+    )
+    hist = (
+        li.select(F.inline(cells))
+        .groupBy("var", "val")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        .filter(F.col("val").isNotNull())
         .localCheckpoint(eager=False)
     )
-    wb = Window.orderBy("val").rowsBetween(Window.unboundedPreceding, -1)
+    ranked = (
+        cum_below(hist, ["var"], weight="cnt")
+        .select(
+            "var",
+            "val",
+            "cnt",
+            (2 * F.col("below") + F.col("cnt") + 1).cast("bigint").alias("r2"),
+        )
+        .localCheckpoint()  # read eight times by the final plan
+    )
     pairs = [(a, b) for i, a in enumerate(CORR_VARS) for b in CORR_VARS[i + 1 :]]
     joined = li
     per_var = None
     for v in CORR_VARS:
-        hist = gs.filter(F.col(v).isNotNull()).select(
-            F.col(v).alias("val"), "cnt"
-        )
-        if v == "l_extendedprice":
-            # r10: the near-unique variable's cumulative window ran as a
-            # SINGLE-partition pass over |distinct| ≈ |corpus| rows — the
-            # one global row window left in this plan and its 100 TB
-            # bottleneck. Decompose exactly like the bucketed SK
-            # strategy (scd2.assign_surrogate_keys): a monotone value
-            # bucket's prefix sum (window over the tiny bucket
-            # histogram) + a per-bucket cumulative window (parallel,
-            # bounded by one bucket's distinct values). cum_below(val) =
-            # bucket_prefix + within-bucket prefix, exact for any tie
-            # multiplicity — r2 is bit-identical to the global-window
-            # spelling (oracle unchanged).
-            b = F.floor(F.col("val").cast("double") / F.lit(64.0)).cast("bigint")
-            hb = hist.withColumn("_b", b)
-            bh = hb.groupBy("_b").agg(F.sum("cnt").alias("_bc"))
-            w_pre = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-            bpre = bh.select(
-                "_b", F.coalesce(F.sum("_bc").over(w_pre), F.lit(0)).alias("_pre")
-            )
-            w_in = Window.partitionBy("_b").orderBy("val").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-            rmap = (
-                hb.join(F.broadcast(bpre), "_b")
-                .select(
-                    "val",
-                    "cnt",
-                    (
-                        2
-                        * (
-                            F.coalesce(F.sum("cnt").over(w_in), F.lit(0))
-                            + F.col("_pre")
-                        )
-                        + F.col("cnt")
-                        + 1
-                    )
-                    .cast("bigint")
-                    .alias("r2"),
-                )
-                .localCheckpoint(eager=False)
-            )
-        else:
-            rmap = hist.select(
-                "val",
-                "cnt",
-                (2 * F.coalesce(F.sum("cnt").over(wb), F.lit(0)) + F.col("cnt") + 1)
-                .cast("bigint")
-                .alias("r2"),
-            ).localCheckpoint(eager=False)
+        rmap = ranked.filter(F.col("var") == v)
         # s/ss from the histogram: Σcnt·r2 and Σcnt·r2² (cnt cast down per
         # the decimal-portability note so the product keeps precision)
         sv = rmap.agg(
@@ -1194,7 +1124,10 @@ def spearman_rank_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias(f"ss_{v}"),
         )
         per_var = sv if per_var is None else per_var.crossJoin(F.broadcast(sv))
-        rmap_keyed = rmap.select(F.col("val").alias(v), F.col("r2").alias(f"r2_{v}"))
+        rmap_keyed = rmap.select(
+            F.col("val").cast(li.schema[v].dataType).alias(v),
+            F.col("r2").alias(f"r2_{v}"),
+        )
         if v == "l_extendedprice":
             joined = joined.join(rmap_keyed, v)
         else:
@@ -1316,19 +1249,16 @@ def _gains_metric(
     """(metric, depth, n, n_pos, cum_n, cum_pos, gains, lift) rows, one
     per non-empty descending-score decile.
 
-    Scale: boundary deciles via ``quantiles.ntile_bounds`` (two-pass
-    bucket selection, value-identical to the oracle's ntile spelling, no
-    global row sort); bucketing is a map-only broadcast compare, the
-    counts one partial-aggregable shuffle, and the cumulative windows
-    run over ≤GAINS_BUCKETS rows."""
+    Scale: boundary deciles via ``quantiles.ntile_bounds`` (value-
+    identical to the oracle's ntile spelling, no global row sort);
+    bucketing is a map-only compare against a literal array, the counts
+    one partial-aggregable shuffle, and the cumulative windows run over
+    ≤GAINS_BUCKETS rows."""
     base = df.select(F.col(score_col).alias("val"), pos_cond.alias("is_pos"))
     bounds = ntile_bounds(base, GAINS_BUCKETS)
     counts = (
-        base.crossJoin(F.broadcast(bounds))
-        .select(
-            (
-                F.lit(GAINS_BUCKETS) - F.size(F.expr("filter(barr, x -> x < val)"))
-            ).alias("depth"),
+        base.select(
+            (F.lit(GAINS_BUCKETS) - n_below(bounds, F.col("val"))).alias("depth"),
             "is_pos",
         )
         .groupBy("depth")
@@ -1470,7 +1400,6 @@ def gains_lift_chart_sql() -> str:
 # a consistent estimator) — same plan, one extra hash filter.
 
 TS_SLOPE_SCALE = 1000  # slope fixed-point: 10^-4 currency units per day × 10^3
-TS_COARSE = 1 << 32  # pass-1 median bucket width (see two-pass note below)
 
 
 def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1522,62 +1451,16 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("fp").isNotNull())
     )
-    # Two-pass median (plan history in BENCH_NOTES): slopes barely
-    # collide, so a (slice, fp) histogram is PAIR-sized and its
-    # per-slice cumulative window was a ~3M-row single-partition sort
-    # (11 s floor). Pass 1 reduces pairs to a few hundred COARSE
-    # buckets per slice (partial-aggregable, window over bucket rows
-    # only) and locates the bucket holding rank k; pass 2 re-derives
-    # only that bucket's pairs and takes the exact offset rank. The
-    # median value is identical — the oracle keeps the one-histogram
-    # formulation.
-    coarse = F.expr(f"(fp - pmod(fp, {TS_COARSE})) div {TS_COARSE}")
-    h1 = pairs.groupBy("slice", coarse.alias("cb")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    # slopes barely collide, so the pairs' value dictionary is pair-
+    # sized: the median is read by quantiles.values_at_ranks, which
+    # reads a coarse per-slice histogram and then one bucket's pairs
+    med = values_at_ranks(
+        pairs.withColumnRenamed("fp", "val"), ["slice"], lambda m: [(m - 1) // 2 + 1]
     )
-    wc = Window.partitionBy("slice").orderBy("cb").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wall = Window.partitionBy("slice")
-    ranked = h1.select(
-        "slice",
-        "cb",
-        "cnt",
-        F.sum("cnt").over(wc).alias("cum"),
-        F.sum("cnt").over(wall).alias("m"),
-    )
-    k = ((F.col("m") - 1) / 2).cast("bigint") + 1  # (m-1) div 2 + 1, m >= 1
-    target = ranked.filter(
-        (F.col("cum") - F.col("cnt") < k) & (F.col("cum") >= k)
-    ).select(
-        "slice",
-        F.col("cb").alias("tcb"),
-        (k - (F.col("cum") - F.col("cnt"))).alias("k_off"),
-        F.col("m").alias("n_pairs"),
-    )
-    infix = pairs.join(F.broadcast(target), "slice").filter(
-        F.expr(f"(fp - pmod(fp, {TS_COARSE})) div {TS_COARSE}") == F.col("tcb")
-    )
-    h2 = infix.groupBy("slice", "fp", "k_off", "n_pairs").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    w2 = Window.partitionBy("slice").orderBy("fp").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    med = (
-        h2.select(
-            "slice",
-            "fp",
-            "cnt",
-            "k_off",
-            "n_pairs",
-            F.sum("cnt").over(w2).alias("cum2"),
-        )
-        .filter(
-            (F.col("cum2") - F.col("cnt") < F.col("k_off"))
-            & (F.col("cum2") >= F.col("k_off"))
-        )
-        .select("slice", F.col("fp").alias("ts_fp"), "n_pairs")
+    med = rows_frame(
+        spark,
+        [(k[0], m, v[0]) for k, (m, v) in med.items()],
+        "slice string, n_pairs bigint, ts_fp bigint",
     )
     ols = slices.groupBy("slice").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
@@ -1782,18 +1665,15 @@ FROM (
 # l_extendedprice with l_quantity as the weight, per (returnflag,
 # linestatus) stratum — the volume-weighted price level pricing teams
 # actually ask for (the unweighted median over-represents small orders). Same
-# two-pass bucket-selection discipline as ``value_exact_median``, with
-# CUMULATIVE WEIGHT replacing cumulative row count: the target rank is
-# the lower weighted median (W+1) div 2 over integer quantity units.
+# ``quantiles.values_at_ranks`` selection as ``value_exact_median``, with
+# quantity as the row weight: the target rank is the lower weighted
+# median (W+1) div 2 over integer quantity units.
 #
-# Scale: one (mode, coarse price bucket) weight histogram (partial-
-# aggregable), a cumulative scan over the tiny histogram, then the
-# in-bucket VALUE DICTIONARY scan of the one target bucket per mode —
-# raw rows are touched once, no per-mode row sort, heavy ties collapse
-# into dictionary entries. The answer is an exact data point
-# (DECIMAL → double at the very end).
-
-WMEDIAN_BUCKET = 1000  # coarse price-bucket width for the selection pass
+# Scale: a coarse (mode, price bucket) weight histogram read on the
+# driver, then the value dictionary of the one target bucket per mode —
+# raw rows are touched by partial-aggregable passes only, no per-mode
+# row sort, heavy ties collapse into dictionary entries. The answer is
+# an exact data point (DECIMAL → double at the very end).
 
 
 def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1801,56 +1681,18 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     median of extended price by quantity weight, per flag/status."""
     li = typed_table(spark, sf_dir, "lineitem").select(
         F.concat_ws("/", "l_returnflag", "l_linestatus").alias("m"),
-        F.col("l_extendedprice").alias("p"),
+        F.col("l_extendedprice").alias("val"),
         F.col("l_quantity").cast("bigint").alias("q"),
     )
-    d = li.groupBy("m", "p").agg(F.sum("q").alias("w"))
-    d = d.withColumn(
-        "hb", F.floor(F.col("p") / F.lit(WMEDIAN_BUCKET)).cast("bigint")
-    )
-    hist = d.groupBy("m", "hb").agg(F.sum("w").alias("c"))
-    w_cum = (
-        Window.partitionBy("m")
-        .orderBy("hb")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ranked = hist.select(
-        "m",
-        "hb",
-        "c",
-        F.sum("c").over(w_cum).alias("cum"),
-        F.sum("c").over(Window.partitionBy("m")).alias("tot"),
-    )
-    k = F.expr("(tot + 1) div 2")
-    target = ranked.filter(
-        (F.col("cum") >= k) & (F.col("cum") - F.col("c") < k)
+    med = values_at_ranks(li, ["m"], lambda w: [(w + 1) // 2], weight="q")
+    return rows_frame(
+        spark,
+        [(k[0], w, v[0]) for k, (w, v) in med.items()],
+        "stratum string not null, total_qty bigint, p decimal(14,2)",
     ).select(
-        "m",
-        F.col("hb").alias("mb"),
-        (k - (F.col("cum") - F.col("c"))).alias("off"),
-        "tot",
-    )
-    in_bucket = d.join(F.broadcast(target), "m").filter(
-        F.col("hb") == F.col("mb")
-    )
-    w_in = (
-        Window.partitionBy("m")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        in_bucket.select(
-            "m", "p", "w", "off", "tot", F.sum("w").over(w_in).alias("cum_w")
-        )
-        .filter(
-            (F.col("cum_w") >= F.col("off"))
-            & (F.col("cum_w") - F.col("w") < F.col("off"))
-        )
-        .select(
-            F.col("m").alias("stratum"),
-            F.col("tot").cast("bigint").alias("total_qty"),
-            F.col("p").cast("double").alias("weighted_median_price"),
-        )
+        "stratum",
+        "total_qty",
+        F.col("p").cast("double").alias("weighted_median_price"),
     )
 
 

@@ -869,7 +869,7 @@ def streaming_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics of the batch table: (quantile, rank, exact_c, est_c,
     rel_err), with the DDSketch guarantee rel_err ∈ (−2^−5, 0].
     """
-    from etl_mini_dw_spark.plans.sketches import HDR_QSPECS, _hdr_lb_expr
+    from etl_mini_dw_spark.plans.sketches import _hdr_lb_expr, hdr_report
 
     landing = _split_landing_dir(sf_dir, HDR_STREAM_BATCHES)
     hist = (
@@ -884,53 +884,12 @@ def streaming_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
     sketch = merge_sink(hist, ["lb"], landing)
-    wcum = Window.orderBy("lb").rowsBetween(Window.unboundedPreceding, 0)
-    cum_hist = sketch.select("lb", F.sum("cnt").over(wcum).alias("cum"))
     vals = (
         typed_table(spark, sf_dir, "events")
         .select((F.col("value") * 100).cast("bigint").alias("v"))
         .filter(F.col("v") > 0)
     )
-    by_v = vals.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    wv = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    cum_v = by_v.select("v", F.sum("cnt").over(wv).alias("cum"))
-    n = vals.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    ranks = None
-    for label, num, den in HDR_QSPECS:
-        r = n.select(
-            F.lit(label).alias("quantile"),
-            F.expr(f"((n - 1) * {num}) div {den} + 1")
-            .cast("bigint")
-            .alias("rank"),
-        )
-        ranks = r if ranks is None else ranks.unionByName(r)
-    est = (
-        cum_hist.crossJoin(F.broadcast(ranks))
-        .filter(F.col("cum") >= F.col("rank"))
-        .groupBy("quantile", "rank")
-        .agg(F.min("lb").alias("est_c"))
-    )
-    exact = (
-        cum_v.crossJoin(F.broadcast(ranks))
-        .filter(F.col("cum") >= F.col("rank"))
-        .groupBy("quantile")
-        .agg(F.min("v").alias("exact_c"))
-    )
-    return (
-        est.join(exact, "quantile")
-        .select(
-            "quantile",
-            "rank",
-            "exact_c",
-            "est_c",
-            F.round(
-                (F.col("est_c") - F.col("exact_c")).cast("double")
-                / F.col("exact_c").cast("double"),
-                6,
-            ).alias("rel_err"),
-        )
-        .orderBy("quantile")
-    )
+    return hdr_report(sketch, vals)
 
 
 def streaming_hdr_sql() -> str:

@@ -1,5 +1,6 @@
 """Spark-job budgets for the lines whose rounds run over bounded state or
-train on the driver, for every streaming line and for the SCD2/fact
+train on the driver, for the lines that read order statistics through
+functions/quantiles.py, for every streaming line and for the SCD2/fact
 lifecycle lines; and the incremental loads' job counts, which must not
 vary from run to run.
 
@@ -45,6 +46,19 @@ BUDGETS = {
     "ext_kcore_peel": 12,
     "ext_pagerank_parts": 17,
     "ext_triangle_count_parts": 14,
+    # exact order statistics: the coarse histogram and target buckets are
+    # collected while the frame is built (cold process, sf0.001, 4 cores)
+    "ext_abc_xyz_matrix": 18,
+    "ext_customer_rfm_segments": 26,
+    "ext_gains_lift_chart": 30,
+    "ext_lorenz_concentration": 19,
+    "ext_psi_drift_report": 34,
+    "ext_quality_deciles": 8,
+    "ext_quality_signal_agreement": 31,
+    "ext_spearman_rank_matrix": 43,
+    "ext_theil_sen_trend": 19,
+    "ext_value_exact_median": 9,
+    "ext_weighted_median_price": 9,
     # bounded-replay streaming: micro-batches + sink writes + read-back
     "ext_events_streaming_tumbling": 3,
     "ext_streaming_asof_enrichment": 9,

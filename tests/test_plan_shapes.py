@@ -23,6 +23,37 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _built_plans(monkeypatch, build) -> str:
+    """The plans of every frame collected or checkpointed while
+    ``build()`` makes its frame (the rank helpers of
+    functions/quantiles.py read their coarse histograms and target
+    buckets then, and a checkpoint hides its lineage from the final
+    plan), followed by the frame's own."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = []
+    for method in ("collect", "localCheckpoint"):
+        def spy(self, *args, _orig=getattr(DataFrame, method), **kwargs):
+            plans.append(_plan(self))
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrame, method, spy)
+    df = build()
+    monkeypatch.undo()
+    return "\n".join(plans + [_plan(df)])
+
+
+def _unpartitioned_windows(plan: str) -> list[str]:
+    """The heads of the windows with no partition: their spec opens with
+    an order key or with the frame itself."""
+    heads = re.findall(r"windowspecdefinition\(([^,]+)", plan)
+    return [
+        h
+        for h in heads
+        if " ASC" in h or " DESC" in h or h.startswith("specifiedwindowframe")
+    ]
+
+
 def test_fact_initial_dim_joins_broadcast(spark, sf_dir):
     plan = _plan(fact.fact_initial(spark, sf_dir))
     # 3 as-of dims + DimDate (+ unknown-row cross joins) — all broadcast
@@ -439,14 +470,17 @@ def test_hll_register_shuffle_is_partial_aggregable(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_spearman_small_maps_broadcast_one_corpus_join(spark, sf_dir):
+def test_spearman_small_maps_broadcast_one_corpus_join(spark, sf_dir, monkeypatch):
     """Three ≤50-row midrank maps broadcast; only the near-unique
-    l_extendedprice map joins by shuffle; no cartesian anywhere."""
+    l_extendedprice map joins by shuffle; no cartesian anywhere; the
+    midrank windows are partitioned by (var, bucket), none global."""
     from etl_mini_dw_spark.plans import stats
 
-    plan = _plan(stats.spearman_rank_matrix(spark, sf_dir))
+    plan = _built_plans(monkeypatch, lambda: stats.spearman_rank_matrix(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 3, plan[:2000]
     assert "CartesianProduct" not in plan
+    assert _unpartitioned_windows(plan) == [], plan[:3000]
+    assert re.search(r"windowspecdefinition\(var#\d+, hb#", plan), plan[:3000]
 
 
 def test_penny_allocation_windows_are_order_keyed(spark, sf_dir):
@@ -491,16 +525,18 @@ def test_km_survival_no_cartesian_and_partitioned_windows(spark, sf_dir):
     assert "windowspecdefinition(priority" in plan, plan[:3000]
 
 
-def test_theil_sen_pair_join_is_broadcast_no_cartesian(spark, sf_dir):
+def test_theil_sen_pair_join_is_broadcast_no_cartesian(spark, sf_dir, monkeypatch):
     """Pair generation must stay a broadcast equi-join on the slice key
-    (the daily frame is tiny); the two-pass median must not reintroduce
-    a pair-sized global sort — no Sort over an Exchange feeding the
-    coarse aggregate."""
+    (the daily frame is tiny); the median selection must not reintroduce
+    a pair-sized global sort — its one window is partitioned by (slice,
+    bucket). The pairs are read while the frame is built."""
     from etl_mini_dw_spark.plans import stats
 
-    plan = _plan(stats.theil_sen_trend(spark, sf_dir))
+    plan = _built_plans(monkeypatch, lambda: stats.theil_sen_trend(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastHashJoin") >= 2, plan[:2000]
+    assert _unpartitioned_windows(plan) == [], plan[:3000]
+    assert re.search(r"windowspecdefinition\(slice#\d+, hb#", plan), plan[:3000]
 
 
 def test_knn_graph_no_cartesian_and_partial_aggregates(spark, sf_dir):
@@ -531,22 +567,23 @@ def test_counterfactual_single_corpus_pass(spark, sf_dir):
     assert "SortMergeJoin" not in plan, plan[:2000]
 
 
-def test_boundary_tiles_no_raw_row_ntile(spark, sf_dir):
-    """r6 VERDICT task #2: PSI / gains / quality-tile boundary deciles
-    must come from the two-pass bucket selection (quantiles.ntile_bounds)
-    — never an ntile over a single-partition Window of the raw rows. Any
-    residual global window scans histogram aggregates only (the
-    equidepth_histogram dictionary-scan class)."""
+def test_boundary_tiles_no_raw_row_ntile(spark, sf_dir, monkeypatch):
+    """PSI / gains / quality-tile boundary deciles must come from the
+    histogram selection (quantiles.ntile_bounds) — never an ntile over a
+    single-partition Window of the raw rows, neither in the frame nor in
+    the passes that read the bounds while it is built; the selection's
+    own windows are partitioned by bucket."""
     from etl_mini_dw_spark.functions import curation
     from etl_mini_dw_spark.plans import stats
 
-    for df in (
-        stats.psi_drift_report(spark, sf_dir),
-        stats.gains_lift_chart(spark, sf_dir),
-        curation.quality_signal_agreement(spark, sf_dir),
+    for build in (
+        lambda: stats.psi_drift_report(spark, sf_dir),
+        lambda: stats.gains_lift_chart(spark, sf_dir),
+        lambda: curation.quality_signal_agreement(spark, sf_dir),
     ):
-        plan = _plan(df)
+        plan = _built_plans(monkeypatch, build)
         assert "ntile" not in plan, plan[:3000]
+        assert re.search(r"windowspecdefinition\(hb#", plan), plan[:3000]
 
 
 def test_rfm_no_global_metric_windows(spark, sf_dir):
@@ -563,26 +600,32 @@ def test_rfm_no_global_metric_windows(spark, sf_dir):
     ), plan[:3000]
 
 
-def test_abc_xyz_no_global_cumulative_window(spark, sf_dir):
-    """r7 VERDICT task #2: the ABC cumulative share must decompose as
-    S(>r) + tie_rank·r — the only unpartitioned windows scan the coarse
-    histogram (hb), never the per-part revenue frame (no
-    windowspecdefinition starting at r DESC)."""
+def test_abc_xyz_no_global_cumulative_window(spark, sf_dir, monkeypatch):
+    """The ABC cumulative share must decompose as S(>r) + tie_rank·r:
+    S(>r) from a window partitioned by the coarse bucket (hb), tie_rank
+    from one partitioned by r — no window without a partition, and none
+    starting at r DESC over the per-part revenue frame."""
     from etl_mini_dw_spark.plans import classic
 
-    plan = _plan(classic.abc_xyz_matrix(spark, sf_dir))
+    plan = _built_plans(monkeypatch, lambda: classic.abc_xyz_matrix(spark, sf_dir))
     assert not re.search(r"windowspecdefinition\(r#\d+L? DESC", plan), plan[:3000]
+    assert _unpartitioned_windows(plan) == [], plan[:3000]
+    assert re.search(r"windowspecdefinition\(hb#", plan), plan[:3000]
 
 
-def test_quality_deciles_windows_bucket_partitioned(spark, sf_dir):
+def test_quality_deciles_windows_bucket_partitioned(spark, sf_dir, monkeypatch):
     """Per-row decile labels must be closed-form from histogram ranks:
-    no ntile, and every row-level window partitioned by (lang, bucket) —
-    never a per-language global sort."""
+    no ntile, and every row-level window partitioned by (lang, bucket)
+    or by the (lang, score) tie group — never a per-language global
+    sort."""
     from etl_mini_dw_spark.functions import curation
 
-    plan = _plan(curation.quality_deciles(spark, sf_dir))
+    plan = _built_plans(monkeypatch, lambda: curation.quality_deciles(spark, sf_dir))
     assert "ntile" not in plan, plan[:3000]
-    assert re.search(r"windowspecdefinition\(lang#\d+", plan), plan[:3000]
+    heads = re.findall(r"windowspecdefinition\(([^,]+), ([^,]+)", plan)
+    assert heads and all(
+        a.startswith("lang#") and b.startswith(("hb#", "val#")) for a, b in heads
+    ), (heads, plan[:3000])
 
 
 def test_entity_blocking_is_banded(spark, sf_dir):
@@ -642,14 +685,16 @@ def test_rrf_fusion_no_sort_merge(spark, sf_dir):
         assert arm.count("BroadcastHashJoin") >= 2, arm[:3000]
 
 
-def test_weighted_median_windows_group_partitioned(spark, sf_dir):
-    """The weighted selection must window by stratum (histogram +
-    in-bucket dictionary), never a global or per-group row sort."""
+def test_weighted_median_windows_group_partitioned(spark, sf_dir, monkeypatch):
+    """The weighted selection must window by (stratum, bucket) over the
+    target buckets' value dictionary, never a global or per-group row
+    sort. The selection runs while the frame is built."""
     from etl_mini_dw_spark.plans import stats
 
-    plan = _plan(stats.weighted_median_price(spark, sf_dir))
+    plan = _built_plans(monkeypatch, lambda: stats.weighted_median_price(spark, sf_dir))
     assert "ntile" not in plan
-    assert re.search(r"windowspecdefinition\(m#\d+", plan), plan[:3000]
+    assert _unpartitioned_windows(plan) == [], plan[:3000]
+    assert re.search(r"windowspecdefinition\(m#\d+, hb#", plan), plan[:3000]
 
 
 def test_price_volume_mix_pushdown_and_broadcast(spark, sf_dir):
@@ -683,9 +728,13 @@ def test_lorenz_no_global_customer_window(spark, sf_dir):
     assert "ntile(" not in plan, plan[:3000]
     # a windowspecdefinition whose FIRST argument is y is a global
     # (unpartitioned) window ordering the raw per-customer frame — a
-    # bucket-partitioned window prints as windowspecdefinition(hb#, y# ...)
+    # bucket-partitioned window prints as windowspecdefinition(hb#, val# ...)
     assert not _re.search(r"windowspecdefinition\(y#\d+", plan), plan[:3000]
     assert _re.search(r"windowspecdefinition\(hb#\d+", plan), plan[:3000]
+    # the one unpartitioned window left runs over the 10-row decile rollup
+    assert all(
+        h.startswith("decile#") for h in _unpartitioned_windows(plan)
+    ), plan[:3000]
 
 
 def test_zipf_head_window_is_shard_pruned(spark, sf_dir):

@@ -1,9 +1,11 @@
-"""Equivalence tests for quantiles.ntile_bounds / ntile_label_cols.
+"""Equivalence tests for functions/quantiles.py.
 
-The two-pass bucket selection must be VALUE-IDENTICAL to the ntile
-spelling it replaced (r6 VERDICT task #2) — same boundary arrays
-(duplicates preserved) and same per-row labels — across heavy ties,
-n < K, and n % K != 0 shapes. Seeded generators, no fixture data.
+The histogram selection must be VALUE-IDENTICAL to the ntile spelling it
+replaced — same boundary lists (duplicates preserved) and same per-row
+labels — across heavy ties, n < K, and n % K != 0 shapes; and
+``values_at_ranks`` / ``cum_below`` must match a Python sorted-list and
+prefix-sum reference per group, weighted or not. Seeded generators, no
+fixture data.
 """
 
 from __future__ import annotations
@@ -13,7 +15,12 @@ import random
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
-from etl_mini_dw_spark.functions.quantiles import ntile_bounds, ntile_label_cols
+from etl_mini_dw_spark.functions.quantiles import (
+    cum_below,
+    ntile_bounds,
+    ntile_label_cols,
+    values_at_ranks,
+)
 
 
 def _bounds_via_ntile(df, k):
@@ -45,13 +52,13 @@ def test_ntile_bounds_matches_ntile_across_shapes(spark):
     for vals, k in cases:
         df = spark.createDataFrame([Row(val=float(v)) for v in vals])
         expected = _bounds_via_ntile(df, k)
-        got = ntile_bounds(df, k).collect()[0]["barr"]
+        got = ntile_bounds(df, k)
         assert got == expected, (vals[:10], k, got, expected)
 
 
 def test_ntile_bounds_empty_input(spark):
     df = spark.createDataFrame([], "val double")
-    got = ntile_bounds(df, 10).collect()[0]["barr"]
+    got = ntile_bounds(df, 10)
     assert got == []
 
 
@@ -73,7 +80,7 @@ def test_ceil_rank_bounds_matches_row_number_rank(spark):
         n = len(vals)
         sv = sorted(vals)
         expected = sorted(sv[((i * n + k - 1) // k) - 1] for i in range(1, k))
-        got = ceil_rank_bounds(df, k).collect()[0]["barr"]
+        got = ceil_rank_bounds(df, k)
         assert got == expected, (vals[:10], k, got, expected)
 
 
@@ -97,3 +104,90 @@ def test_ntile_label_cols_matches_ntile(spark):
     exp = {(r.g, r.id): r.decile for r in expected.collect()}
     for r in got.collect():
         assert r.decile == exp[(r.g, r.id)], (r, exp[(r.g, r.id)])
+
+
+def _ref_values_at_ranks(rows, ranks):
+    """Python reference: per group, the sorted multiset with each value
+    repeated by its weight, read at the 1-indexed ranks."""
+    groups: dict = {}
+    for g, v, w in rows:
+        if v is not None:
+            groups.setdefault((g,), []).extend([v] * w)
+    out = {}
+    for key, vals in groups.items():
+        vals.sort()
+        out[key] = (len(vals), [vals[r - 1] for r in ranks(len(vals))])
+    return out
+
+
+def test_values_at_ranks_matches_sorted_list_per_group(spark):
+    rng = random.Random(20261019)
+    rows = []
+    shapes = {
+        "neg": lambda: rng.uniform(-500.0, -1.0),
+        "const": lambda: 3.5,
+        "small": lambda: float(rng.randint(0, 9)),  # n < K below
+        "ties": lambda: float(rng.choice([1, 1, 1, 2, 40])),
+        "wide": lambda: rng.uniform(-1e9, 1e9),
+    }
+    sizes = {"neg": 301, "const": 40, "small": 4, "ties": 250, "wide": 173}
+    for g, gen in shapes.items():
+        rows += [(g, gen(), rng.randint(0, 3)) for _ in range(sizes[g])]
+    rows.append(("one", 7.25, 2))  # one-row group
+    df = spark.createDataFrame(rows, "g string, val double, w bigint")
+    for weight in (None, "w"):
+        ref_rows = [(g, v, 1 if weight is None else w) for g, v, w in rows]
+
+        def ranks(n):
+            return [r for r in (1, (n + 1) // 2, (3 * n + 3) // 4, n) if 1 <= r <= n]
+
+        got = values_at_ranks(df, ["g"], ranks, weight)
+        assert got == _ref_values_at_ranks(ref_rows, ranks), weight
+
+
+def test_values_at_ranks_empty_input(spark):
+    df = spark.createDataFrame([], "g string, val double")
+    assert values_at_ranks(df, ["g"], lambda n: [1]) == {}
+    assert values_at_ranks(df, [], lambda n: [1]) == {}
+
+
+def test_cum_below_matches_prefix_sums(spark):
+    rng = random.Random(5)
+    rows = [
+        (i, g, float(rng.choice([-1e9, 0.0, 1e9]) if g == "x" else rng.randint(-5, 5)), rng.randint(0, 4))
+        for i, g in enumerate(["x"] * 60 + ["y"] * 80 + ["z"])
+    ]
+    df = spark.createDataFrame(rows, "id int, g string, val double, w bigint")
+    for weight in (None, "w"):
+        wt = {i: (1 if weight is None else w) for i, _, _, w in rows}
+        got = {
+            r["id"]: (r["below"], r["total"])
+            for r in cum_below(df, ["g"], weight).collect()
+        }
+        for i, g, v, _ in rows:
+            below = sum(wt[j] for j, h, u, _ in rows if h == g and u < v)
+            total = sum(wt[j] for j, h, _, _ in rows if h == g)
+            assert got[i] == (below, total), (weight, i, g, v)
+    # no groups: one total over all rows
+    got = cum_below(df.select("id", "val"), []).collect()
+    vals = [v for _, _, v, _ in rows]
+    assert sorted((r["below"], r["total"]) for r in got) == sorted(
+        (sum(u < v for u in vals), len(vals)) for v in vals
+    )
+
+
+def test_n_below_counts_strictly_smaller_bounds(spark):
+    from decimal import Decimal
+
+    from etl_mini_dw_spark.functions.quantiles import n_below
+
+    df = spark.createDataFrame(
+        [(Decimal("1.00"),), (Decimal("5.00"),), (Decimal("12.50"),)], "val decimal(12,2)"
+    )
+    bounds = [Decimal("5.00"), Decimal("5.00"), Decimal("12.49")]
+    got = df.select("val", n_below(bounds, F.col("val")).alias("k"), n_below([], F.col("val")).alias("z"))
+    assert sorted((r.val, r.k, r.z) for r in got.collect()) == [
+        (Decimal("1.00"), 0, 0),
+        (Decimal("5.00"), 0, 0),
+        (Decimal("12.50"), 3, 0),
+    ]

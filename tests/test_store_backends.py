@@ -64,6 +64,36 @@ def test_compact_reduces_files_and_preserves_values(spark, store):
     assert got.selectExpr("sum(v)").first()[0] == sum(range(10_000))
 
 
+def test_compact_keeps_partitioning(spark, store):
+    """A partitioned table compacts partition by partition: the ``y=``
+    dirs remain, the rows are unchanged, and a later partition swap
+    replaces one partition with no flat file beside the dirs."""
+    import os
+
+    df = spark.range(300).selectExpr(
+        "cast(id as int) k", "cast(id % 3 as int) y", "cast(id as double) v"
+    )
+    store.write(df.repartition(5), "t", partition_by=["y"])
+    before_rows = store.read(spark, "t").localCheckpoint()
+    before, after = store.compact(spark, "t")
+    assert before == 15 and after < before
+    top = store.path("t")
+    assert sorted(d for d in os.listdir(top) if not d.startswith((".", "_"))) == [
+        "y=0",
+        "y=1",
+        "y=2",
+    ]
+    got = store.read(spark, "t")
+    assert got.exceptAll(before_rows).count() == 0
+    assert before_rows.exceptAll(got).count() == 0
+    repl = spark.createDataFrame([(1000, 1, -1.0)], "k int, y int, v double")
+    store.swap_partitions(repl, "t", "y", [1])
+    assert all(os.sep + "y=" in f[len(top):] for f in store.data_files("t"))
+    rows = store.read(spark, "t")
+    assert rows.filter("y = 1").collect() == [(1000, -1.0, 1)]
+    assert rows.count() == 201
+
+
 def test_compact_noop_when_already_compact(spark, store):
     store.write(spark.range(100).selectExpr("id k").coalesce(1), "t")
     before, after = store.compact(spark, "t")
