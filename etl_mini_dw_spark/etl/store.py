@@ -285,12 +285,14 @@ class ParquetStore:
         this is the same rewrite with directory-swap atomicity. No-op
         (zero rewrite cost) when the table already meets the target. A
         partitioned table stays partitioned by the columns of its
-        first-level ``name=value`` dirs, as Spark's discovery finds them.
+        first-level ``name=value`` dirs, as Spark's discovery finds them,
+        and its target is ``n_target`` files per leaf dir: each coalesced
+        task writes one file into every partition it holds.
         """
         files = self.data_files(name)
         total = sum(os.path.getsize(f) for f in files)
         n_target = max(1, -(-total // target_file_bytes))
-        if n_target >= len(files):
+        if n_target * len({os.path.dirname(f) for f in files}) >= len(files):
             return (len(files), len(files))
         parts = sorted(
             {

@@ -7,12 +7,16 @@ pass. Each group's values are keyed by a monotone coarse bucket
 ``hb = floor((t − min) / width)`` of ``t = sign(val)·ln(1 + |val|)``
 with ``width = (max − min) / 1024`` over t, so bucket order is value
 order and a group has at most 1,025 buckets at any data range. The log
-keeps a heavy tail from stretching the buckets over the bulk of a
-group: on val itself, Theil–Sen's extreme pairwise slopes made the
-line take 18 s where fixed-width buckets took 5 s (sf0.1, 4 cores);
-on t its largest bucket holds 30,672 of 2.9M pairs. Two small collects
-hand the driver everything the rank arithmetic needs, which then runs
-in Python ints (CLAUDE.md's bounded-state rule):
+was measured on Theil–Sen's pairwise slopes, whose extreme values
+stretched equal-width buckets on val over the bulk (18 s against 5 s,
+sf0.1, 4 cores); on t their largest bucket holds 30,672 of 2.9M pairs.
+It bounds no bucket in general: values packed far from zero relative
+to their spread still share one bucket, and that bucket one task.
+
+The input is checkpointed once (lazily, so the first pass fills it),
+and two small collects over it hand the driver everything the rank
+arithmetic needs, which then runs in Python ints (CLAUDE.md's
+bounded-state rule):
 
 1. one aggregate: (n, min, max) per group, n the total weight;
 2. the coarse histogram: the weight per (group, bucket), at most
@@ -30,10 +34,12 @@ On that pass:
   window partitioned by (group, bucket).
 
 No window runs without a partition and nothing is joined to the
-statistics: they reach Spark as literals. Groups must be few (the
-driver holds groups × 1,025 bucket rows); group keys match null-safely;
-rows with a null ``val`` are not counted. One bucket's rows bound the
-in-bucket pass.
+statistics: they reach Spark as literal arrays, one per table, picked
+by one CASE over the group keys. The expressions are SQL text, so a
+call costs a few gateway round trips rather than several per group.
+Groups must be few (the driver holds groups × 1,025 bucket rows); group
+keys match null-safely; rows with a null ``val`` are not counted. One
+bucket's rows bound the in-bucket pass.
 
 ``ntile_bounds`` and ``ceil_rank_bounds`` are rank rules over
 ``values_at_ranks``. A boundary value depends only on the value
@@ -47,76 +53,98 @@ from __future__ import annotations
 
 from bisect import bisect_left
 from collections.abc import Callable
-from functools import reduce
 from itertools import accumulate
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StringType
 
 _N_COARSE = 1024
+# semi-monotonic (Java's log1p contract), so t keeps val's order
+_T = "signum(CAST(val AS DOUBLE)) * log1p(abs(CAST(val AS DOUBLE)))"
 
 
-def _per_group(by: list[str], table: dict, lit: Callable) -> Column:
-    """On each row, ``lit(table[key])`` for the row's group key: a CASE
-    over the few groups, the bare literal when there are no groups."""
-    if not table:
-        return F.lit(None)
-    if not by:
-        return lit(table[()])
-    out = None
-    for key, v in table.items():
-        hit = reduce(
-            lambda a, b: a & b, [F.col(c).eqNullSafe(F.lit(k)) for c, k in zip(by, key)]
-        )
-        out = F.when(hit, lit(v)) if out is None else out.when(hit, lit(v))
-    return out
+def _q(name: str) -> str:
+    return f"`{name}`"
 
 
-def _longs(xs: list[int]) -> Column:
-    return F.expr(f"CAST(array({', '.join(str(int(x)) for x in xs)}) AS array<bigint>)")
+def _sql(x) -> str:
+    """A number, or a list or dict of them, as a Spark SQL literal."""
+    if isinstance(x, dict):
+        return f"map({', '.join(f'{_sql(k)}, {_sql(v)}' for k, v in x.items())})"
+    if isinstance(x, list):
+        return f"array({', '.join(map(_sql, x))})"
+    # repr round-trips a double exactly; the D suffix keeps it one
+    return f"{x!r}D" if isinstance(x, float) else str(int(x))
 
 
-def _coarse(rows: DataFrame, by: list[str], w: Column) -> tuple[Column, dict]:
-    """The shared pass: the bucket expression, and per group key
-    ``(n, prefix)`` where ``prefix[h]`` is the weight in buckets < h."""
-    x = F.col("val").cast("double")
-    # semi-monotonic (Java's log1p contract), so t keeps val's order
-    v = F.signum(x) * F.log1p(F.abs(x))
-    known = rows.filter(F.col("val").isNotNull())
+def _key(v, t: DataType) -> str:
+    """A group key value as a literal of its column's type."""
+    if v is None:
+        return "NULL"
+    s = "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return s if isinstance(t, StringType) else f"CAST({s} AS {t.simpleString()})"
+
+
+def _picker(staged: DataFrame, by: list[str], keys: list[tuple]) -> Callable[[list, str], str]:
+    """``pick(values, type)``: SQL for ``values[i]`` typed ``type`` on a
+    row whose group key is ``keys[i]`` (matched null-safely): one
+    literal array indexed by one CASE over the few groups (index 1
+    without group columns). With no groups every pick is null."""
+    gi = "1"
+    if by:
+        types = [staged.schema[c].dataType for c in by]
+        gi = "CASE " + " ".join(
+            "WHEN "
+            + " AND ".join(f"{_q(c)} <=> {_key(k, t)}" for c, k, t in zip(by, key, types))
+            + f" THEN {i}"
+            for i, key in enumerate(keys, 1)
+        ) + " END"
+
+    def pick(values: list, type_: str) -> str:
+        if not keys:
+            return f"CAST(NULL AS {type_})"
+        return f"element_at(CAST({_sql(values)} AS array<{type_}>), {gi})"
+
+    return pick
+
+
+def _coarse(staged: DataFrame, by: list[str], w: str):
+    """The shared pass over a checkpointed frame that carries ``_t``
+    (``_T``), ``w`` the SQL of the row weight. Returns the SQL of the bucket ``hb``, ``pick`` (see
+    ``_picker``) and per group key ``(n, prefix)`` in ``pick``'s order,
+    ``prefix[h]`` being the weight in buckets < h."""
+    known = staged.filter("val IS NOT NULL")
     stats = {
         tuple(r[c] for c in by): r
         for r in known.groupBy(*by)
-        .agg(F.sum(w).alias("n"), F.min(v).alias("mn"), F.max(v).alias("mx"))
+        .agg(F.expr(f"sum({w}) AS n"), F.expr("min(_t) AS mn"), F.expr("max(_t) AS mx"))
         .collect()
         if r["mn"] is not None  # the one row a global aggregate of nothing gives
     }
-    mn = _per_group(by, {k: r["mn"] for k, r in stats.items()}, F.lit)
-    width = _per_group(
-        by,
-        {k: max((r["mx"] - r["mn"]) / _N_COARSE, 1e-12) for k, r in stats.items()},
-        F.lit,
-    )
+    pick = _picker(staged, by, list(stats))
+    mn = pick([r["mn"] for r in stats.values()], "double")
+    width = pick([max((r["mx"] - r["mn"]) / _N_COARSE, 1e-12) for r in stats.values()], "double")
     # monotone in val and within [0, _N_COARSE] for every group
-    hb = F.floor((v - mn) / width).cast("int")
+    hb = f"CAST(floor((_t - {mn}) / {width}) AS INT)"
     counts = {k: [0] * (_N_COARSE + 1) for k in stats}
-    for r in known.groupBy(*by, hb.alias("hb")).agg(F.sum(w).alias("c")).collect():
+    for r in known.groupBy(*by, F.expr(hb).alias("hb")).agg(F.expr(f"sum({w}) AS c")).collect():
         counts[tuple(r[c] for c in by)][r["hb"]] += r["c"]
     groups = {
         k: (stats[k]["n"], [0, *accumulate(c[:-1])]) for k, c in counts.items()
     }
-    return hb, groups
+    return hb, pick, groups
 
 
-def _below(by: list[str], w: Column, groups: dict) -> Column:
-    """Weight strictly below ``val`` in its group, on rows carrying the
-    coarse bucket ``hb``: the bucket's literal prefix plus the in-bucket
-    cumulative weight, less the ties (one window spec, two frames)."""
-    spec = Window.partitionBy(*by, "hb").orderBy("val")
-    prefix = _per_group(by, {k: p for k, (_, p) in groups.items()}, _longs)
+def _below(by: list[str], w: str, prefix: str) -> str:
+    """SQL of the weight strictly below ``val`` in its group, on rows
+    carrying the coarse bucket ``hb``: ``prefix``, the weight in the
+    lower buckets, plus the in-bucket cumulative weight, less the ties
+    (one window spec, two frames)."""
+    spec = f"PARTITION BY {', '.join(map(_q, [*by, 'hb']))} ORDER BY val RANGE BETWEEN"
     return (
-        F.element_at(prefix, F.col("hb") + 1)
-        + F.sum(w).over(spec.rangeBetween(Window.unboundedPreceding, Window.currentRow))
-        - F.sum(w).over(spec.rangeBetween(Window.currentRow, Window.currentRow))
+        f"{prefix} + sum({w}) OVER ({spec} UNBOUNDED PRECEDING AND CURRENT ROW)"
+        f" - sum({w}) OVER ({spec} CURRENT ROW AND CURRENT ROW)"
     )
 
 
@@ -132,26 +160,37 @@ def values_at_ranks(
 
     ``weight`` names a nonnegative integer column (default: each row
     weighs 1). A value at weighted rank r is the one whose ties span r:
-    weight strictly below it < r ≤ that plus its own weight."""
-    w = F.col(weight) if weight else F.lit(1)
-    hb, groups = _coarse(rows, by, w)
+    weight strictly below it < r ≤ that plus its own weight. The
+    (group, val, weight, t) rows are checkpointed once, so the three
+    passes read them, not ``rows``' lineage."""
+    staged = (
+        rows.filter("val IS NOT NULL")
+        .selectExpr(*map(_q, by), "val", f"{_q(weight) if weight else 1} AS w", f"{_T} AS _t")
+        .localCheckpoint(eager=False)
+    )
+    hb, pick, groups = _coarse(staged, by, "w")
     if not groups:
         return {}
     want = {k: ranks(n) for k, (n, _) in groups.items()}
-    # the bucket of rank r is the last one whose prefix is below r
-    targets = {
-        k: sorted({bisect_left(groups[k][1], r) - 1 for r in rs}) for k, rs in want.items()
-    }
+    # the bucket of rank r is the last one whose prefix is below r; the
+    # target buckets' prefixes go to Spark as one small map per group
+    targets = pick(
+        [
+            {h: p[h] for h in sorted({bisect_left(p, r) - 1 for r in want[k]})}
+            for k, (_, p) in groups.items()
+        ],
+        "map<int, bigint>",
+    )
     hits = (
-        rows.filter(F.array_contains(_per_group(by, targets, _longs), hb))
-        .groupBy(*by, hb.alias("hb"), "val")
-        .agg(F.sum(w).alias("w"))
-        .select(*by, "val", "w", _below(by, F.col("w"), groups).alias("below"))
+        staged.filter(f"map_contains_key({targets}, {hb})")
+        .groupBy(*by, F.expr(hb).alias("hb"), "val")
+        .agg(F.expr("sum(w) AS w"))
+        .selectExpr(
+            *map(_q, by), "val", "w", f"{_below(by, 'w', f'element_at({targets}, hb)')} AS below"
+        )
         .filter(
-            F.exists(
-                _per_group(by, want, _longs),
-                lambda r: (r > F.col("below")) & (r <= F.col("below") + F.col("w")),
-            )
+            f"exists({pick(list(want.values()), 'array<bigint>')},"
+            " r -> r > below AND r <= below + w)"
         )
         .collect()
     )
@@ -173,19 +212,18 @@ def cum_below(rows: DataFrame, by: list[str], weight: str | None = None) -> Data
     whose ``val`` is strictly smaller (ties share it), and ``total``,
     the group's whole weight. ``weight`` as in ``values_at_ranks``.
 
-    The collects run now; the returned frame's one window is
-    partitioned by (group, bucket). Pass a value dictionary rather than
-    raw rows where ties are heavy: a bucket's rows share one task."""
-    w = F.col(weight) if weight else F.lit(1)
-    hb, groups = _coarse(rows, by, w)
-    return (
-        rows.withColumn("hb", hb)
-        .withColumn("below", _below(by, w, groups).cast("bigint"))
-        .withColumn(
-            "total",
-            _per_group(by, {k: n for k, (n, _) in groups.items()}, F.lit).cast("bigint"),
-        )
-        .drop("hb")
+    The collects run now, over ``rows`` (plus t) checkpointed once; the
+    returned frame reads that checkpoint and its one window is partitioned by
+    (group, bucket). Pass a value dictionary rather than raw rows where
+    ties are heavy: a bucket's rows share one task."""
+    w = _q(weight) if weight else "1"
+    staged = rows.withColumn("_t", F.expr(_T)).localCheckpoint(eager=False)
+    hb, pick, groups = _coarse(staged, by, w)
+    prefix = f"element_at({pick([p for _, p in groups.values()], 'array<bigint>')}, hb + 1)"
+    return staged.withColumn("hb", F.expr(hb)).selectExpr(
+        *map(_q, rows.columns),
+        f"CAST({_below(by, w, prefix)} AS BIGINT) AS below",
+        f"CAST({pick([n for n, _ in groups.values()], 'bigint')} AS BIGINT) AS total",
     )
 
 

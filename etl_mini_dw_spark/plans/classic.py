@@ -734,7 +734,7 @@ def abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(38,0)")
         .cast("bigint")
         .alias("r")
-    ).localCheckpoint(eager=False)
+    )
     # below(−r) = revenue of the strictly-richer parts; total = all revenue.
     # tie_rank within the r group reproduces the (r DESC, pk ASC)
     # cumulative exactly: cum = S(>r) + tie_rank·r
@@ -1253,7 +1253,6 @@ def _lorenz_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     units = (
         cust.join(per, "c_custkey", "left")
         .select("c_custkey", F.coalesce(F.col("y"), F.lit(0)).cast("bigint").alias("val"))
-        .localCheckpoint(eager=False)  # histogram passes + rank windows
     )
     w_tie = Window.partitionBy("val").orderBy("c_custkey")
     ranked = cum_below(units, []).select(

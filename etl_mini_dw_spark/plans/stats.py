@@ -1094,7 +1094,6 @@ def spearman_rank_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("var", "val")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .filter(F.col("val").isNotNull())
-        .localCheckpoint(eager=False)
     )
     ranked = (
         cum_below(hist, ["var"], weight="cnt")
@@ -1104,7 +1103,7 @@ def spearman_rank_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
             (2 * F.col("below") + F.col("cnt") + 1).cast("bigint").alias("r2"),
         )
-        .localCheckpoint()  # read eight times by the final plan
+        .localCheckpoint(eager=False)  # read eight times by the final plan
     )
     pairs = [(a, b) for i, a in enumerate(CORR_VARS) for b in CORR_VARS[i + 1 :]]
     joined = li

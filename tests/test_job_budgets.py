@@ -55,8 +55,8 @@ BUDGETS = {
     "ext_psi_drift_report": 34,
     "ext_quality_deciles": 8,
     "ext_quality_signal_agreement": 31,
-    "ext_spearman_rank_matrix": 43,
-    "ext_theil_sen_trend": 19,
+    "ext_spearman_rank_matrix": 42,
+    "ext_theil_sen_trend": 17,
     "ext_value_exact_median": 9,
     "ext_weighted_median_price": 9,
     # bounded-replay streaming: micro-batches + sink writes + read-back

@@ -586,18 +586,22 @@ def test_boundary_tiles_no_raw_row_ntile(spark, sf_dir, monkeypatch):
         assert re.search(r"windowspecdefinition\(hb#", plan), plan[:3000]
 
 
-def test_rfm_no_global_metric_windows(spark, sf_dir):
-    """r7 VERDICT task #2: the RFM quintile boundaries must come from
-    ceil_rank_bounds (histogram/dictionary windows), never a global
-    row_number sort of the customer aggregate — no windowspecdefinition
-    may order by a raw RFM metric column."""
+def test_rfm_no_global_metric_windows(spark, sf_dir, monkeypatch):
+    """The RFM quintile boundaries must come from ceil_rank_bounds
+    (histogram/dictionary windows), never a global row_number sort of
+    the customer aggregate — no windowspecdefinition may order by a raw
+    RFM metric column, in the frame or in the passes that read the
+    bounds while it is built (there the metric is named ``val``), and
+    those passes window by the coarse bucket only."""
     from etl_mini_dw_spark.plans import behavior
 
-    plan = _plan(behavior.customer_rfm_segments(spark, sf_dir))
+    plan = _built_plans(monkeypatch, lambda: behavior.customer_rfm_segments(spark, sf_dir))
     assert "ntile(" not in plan, plan[:3000]  # output cols are *_quintile
     assert not re.search(
         r"windowspecdefinition\((recency_days|frequency|monetary)#", plan
     ), plan[:3000]
+    assert _unpartitioned_windows(plan) == [], plan[:3000]
+    assert re.search(r"windowspecdefinition\(hb#", plan), plan[:3000]
 
 
 def test_abc_xyz_no_global_cumulative_window(spark, sf_dir, monkeypatch):

@@ -145,6 +145,24 @@ def test_values_at_ranks_matches_sorted_list_per_group(spark):
         assert got == _ref_values_at_ranks(ref_rows, ranks), weight
 
 
+def test_group_keys_match_by_value_and_type(spark):
+    """Group keys reach Spark as literals: a null key, quotes and
+    backslashes in a string, and int and date key columns each find
+    their own group."""
+    import datetime
+
+    d1, d2 = datetime.date(1995, 3, 1), datetime.date(2001, 12, 31)
+    keys = [(None, 1, d1), ("it's", 1, d1), ("a\\b", 1, d1), ("a\\b", 2, d1), ("a\\b", 2, d2)]
+    rows = [(*k, float(i * 10 + j), 1) for i, k in enumerate(keys) for j in range(3)]
+    df = spark.createDataFrame(rows, "s string, i int, d date, val double, w bigint")
+    got = values_at_ranks(df, ["s", "i", "d"], lambda n: [1, n])
+    assert got == {k: (3, [i * 10.0, i * 10.0 + 2]) for i, k in enumerate(keys)}
+    below = cum_below(df, ["s", "i", "d"], "w").collect()
+    assert sorted((r["val"], r["below"], r["total"]) for r in below) == [
+        (i * 10.0 + j, j, 3) for i in range(len(keys)) for j in range(3)
+    ]
+
+
 def test_values_at_ranks_empty_input(spark):
     df = spark.createDataFrame([], "g string, val double")
     assert values_at_ranks(df, ["g"], lambda n: [1]) == {}

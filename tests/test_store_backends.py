@@ -77,6 +77,10 @@ def test_compact_keeps_partitioning(spark, store):
     before_rows = store.read(spark, "t").localCheckpoint()
     before, after = store.compact(spark, "t")
     assert before == 15 and after < before
+    # compacted already: a second call rewrites nothing
+    files = store.data_files("t")
+    assert store.compact(spark, "t") == (after, after)
+    assert store.data_files("t") == files
     top = store.path("t")
     assert sorted(d for d in os.listdir(top) if not d.startswith((".", "_"))) == [
         "y=0",
