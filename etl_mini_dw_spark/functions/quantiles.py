@@ -86,7 +86,9 @@ def _key(v, t: DataType) -> str:
     return s if isinstance(t, StringType) else f"CAST({s} AS {t.simpleString()})"
 
 
-def _picker(staged: DataFrame, by: list[str], keys: list[tuple]) -> Callable[[list, str], str]:
+def _picker(
+    staged: DataFrame, by: list[str], keys: list[tuple]
+) -> Callable[[list, str], str]:
     """``pick(values, type)``: SQL for ``values[i]`` typed ``type`` on a
     row whose group key is ``keys[i]`` (matched null-safely): one
     literal array indexed by one CASE over the few groups (index 1
@@ -111,9 +113,10 @@ def _picker(staged: DataFrame, by: list[str], keys: list[tuple]) -> Callable[[li
 
 def _coarse(staged: DataFrame, by: list[str], w: str):
     """The shared pass over a checkpointed frame that carries ``_t``
-    (``_T``), ``w`` the SQL of the row weight. Returns the SQL of the bucket ``hb``, ``pick`` (see
-    ``_picker``) and per group key ``(n, prefix)`` in ``pick``'s order,
-    ``prefix[h]`` being the weight in buckets < h."""
+    (``_T``), ``w`` being the SQL of the row weight. Returns the SQL of
+    the bucket ``hb``, ``pick`` (see ``_picker``) and per group key
+    ``(n, prefix)`` in ``pick``'s order, ``prefix[h]`` being the weight
+    in buckets < h."""
     known = staged.filter("val IS NOT NULL")
     stats = {
         tuple(r[c] for c in by): r
@@ -213,9 +216,9 @@ def cum_below(rows: DataFrame, by: list[str], weight: str | None = None) -> Data
     the group's whole weight. ``weight`` as in ``values_at_ranks``.
 
     The collects run now, over ``rows`` (plus t) checkpointed once; the
-    returned frame reads that checkpoint and its one window is partitioned by
-    (group, bucket). Pass a value dictionary rather than raw rows where
-    ties are heavy: a bucket's rows share one task."""
+    returned frame reads that checkpoint, and its one window is
+    partitioned by (group, bucket). Pass a value dictionary rather than
+    raw rows where ties are heavy: a bucket's rows share one task."""
     w = _q(weight) if weight else "1"
     staged = rows.withColumn("_t", F.expr(_T)).localCheckpoint(eager=False)
     hb, pick, groups = _coarse(staged, by, w)
@@ -223,7 +226,7 @@ def cum_below(rows: DataFrame, by: list[str], weight: str | None = None) -> Data
     return staged.withColumn("hb", F.expr(hb)).selectExpr(
         *map(_q, rows.columns),
         f"CAST({_below(by, w, prefix)} AS BIGINT) AS below",
-        f"CAST({pick([n for n, _ in groups.values()], 'bigint')} AS BIGINT) AS total",
+        f"{pick([n for n, _ in groups.values()], 'bigint')} AS total",
     )
 
 
